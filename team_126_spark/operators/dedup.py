@@ -27,6 +27,7 @@ from pyspark.sql import Column
 from ..functions.sketch import minhash_from_hashes
 from ..functions.text import fingerprint, md5_low60, tokens, word_shingles
 from ..functions.vector import cosine_similarity
+from ..metrics import observe_counts
 from ..tables import spread
 
 
@@ -468,7 +469,6 @@ def dedup_components(
     id_b: str = "id_b",
     max_iter: int = 25,
     chase_after: int = 2,
-    check_every: int = 1,
     stats: dict | None = None,
 ) -> DataFrame:
     """Connected components over near-dup pairs → (id, cluster_id = min id
@@ -489,16 +489,10 @@ def dedup_components(
     converge before it would help — no extra shuffle on the common case,
     log-round guarantee on the pathological one. Per round: one equi-join
     + one groupBy (+ one label self-join once chasing), all on uniform id
-    keys, and ONE count() action for the convergence check;
-    `localCheckpoint` cuts the growing lineage so round N's plan does not
-    replay rounds 1..N-1 (the classic iterative-Spark trap).
-
-    `check_every=k` runs the convergence count only every k-th round
-    (and always on the last), trading ≤ k-1 extra — harmless, the fixpoint
-    is stable — propagation rounds for k× fewer blocking driver actions:
-    worth it on deep graphs where each count stalls the job queue. The
-    final executed round is ALWAYS counted, so convergence is confirmed,
-    never assumed.
+    keys; `localCheckpoint` cuts the growing lineage so round N's plan does
+    not replay rounds 1..N-1 (the classic iterative-Spark trap). The
+    convergence check (how many labels changed) is observed inside that
+    checkpoint's own job, so every round is confirmed with no extra action.
 
     Raises RuntimeError if convergence is not confirmed within max_iter
     rounds — silently returning partial (wrong) cluster labels is never
@@ -507,8 +501,6 @@ def dedup_components(
     """
     if max_iter < 1:
         raise ValueError(f"dedup_components: max_iter must be >= 1, got {max_iter}")
-    if check_every < 1:
-        raise ValueError(f"dedup_components: check_every must be >= 1, got {check_every}")
     edges_fwd = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
     edges = edges_fwd.union(
         edges_fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
@@ -550,13 +542,12 @@ def dedup_components(
                 ).alias("label"),
                 F.col("_old"),
             )
-        updated = stepped.localCheckpoint()
+        stepped, obs = observe_counts(
+            stepped, "dedup_components", {"changed": F.count_if(F.col("label") != F.col("_old"))}
+        )
+        labels = stepped.localCheckpoint().drop("_old")
         rounds += 1
-        if rounds % check_every == 0 or rounds == max_iter:
-            changed = updated.filter(F.col("label") != F.col("_old")).count()
-        else:
-            changed = None  # skipped this round (check_every dial)
-        labels = updated.drop("_old")
+        changed = obs.get["changed"]
         if changed == 0:
             break
     edges.unpersist()

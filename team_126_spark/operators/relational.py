@@ -15,6 +15,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .. import tables
+from ..metrics import observe_counts
 
 
 def latest_per_group(df: DataFrame, keys: Sequence[str], ts: str, tiebreak: str) -> DataFrame:
@@ -607,7 +608,6 @@ def hierarchy_resolve(
     id_col: str,
     parent_col: str,
     max_iter: int = 20,
-    check_every: int = 2,
     stats: dict | None = None,
 ) -> DataFrame:
     """(id, root_id, depth) for every node of a parent-pointer forest — the
@@ -617,11 +617,11 @@ def hierarchy_resolve(
     jumps to its pointer's pointer and accumulates the hop distance
     (ptr ← ptr[ptr], depth += depth[ptr]), so a depth-d chain resolves in
     ⌈log₂ d⌉ rounds — max_iter=20 covers depth ~10⁶. Per round: ONE
-    equi-self-join on the (uniform) id key; localCheckpoint cuts lineage;
-    convergence is CONFIRMED by a count (every `check_every` rounds, and
-    always before returning) — never assumed — and failure to converge
-    raises, which is also the cycle detector (a cycle never reaches a
-    fixpoint; silently looping rows would be wrong answers).
+    equi-self-join on the (uniform) id key; localCheckpoint cuts lineage.
+    Convergence is CONFIRMED every round — never assumed — by counting the
+    rows that moved, observed inside the checkpoint's own job; failure to
+    converge raises, which is also the cycle detector (a cycle never
+    reaches a fixpoint; silently looping rows would be wrong answers).
 
     Roots are rows with NULL parent (depth 0, root_id = own id). A DANGLING
     parent pointer (parent id absent from the table) resolves as a root AT
@@ -630,8 +630,6 @@ def hierarchy_resolve(
     """
     if max_iter < 1:
         raise ValueError(f"hierarchy_resolve: max_iter must be >= 1, got {max_iter}")
-    if check_every < 1:
-        raise ValueError(f"hierarchy_resolve: check_every must be >= 1, got {check_every}")
     cur = df.select(
         F.col(id_col).alias("id"),
         F.coalesce(F.col(parent_col), F.col(id_col)).alias("ptr"),
@@ -641,30 +639,25 @@ def hierarchy_resolve(
         ).otherwise(F.lit(1)).cast("bigint").alias("depth"),
     ).localCheckpoint()
     rounds = 0
-    converged = False
-    for i in range(max_iter):
+    moved = None
+    while moved != 0 and rounds < max_iter:
         rounds += 1
         a, b = cur.alias("a"), cur.alias("b")
-        nxt = a.join(b, F.col("a.ptr") == F.col("b.id"), "left").select(
+        hop = F.coalesce(F.col("b.depth"), F.lit(0))
+        # fixpoint: nothing moved this round. Depths are >= 0, so a row
+        # advanced exactly when its pointer's depth was added to its own.
+        step, obs = observe_counts(
+            a.join(b, F.col("a.ptr") == F.col("b.id"), "left"),
+            "hierarchy_resolve",
+            {"moved": F.count_if(hop > 0)},
+        )
+        cur = step.select(
             F.col("a.id").alias("id"),
             F.coalesce(F.col("b.ptr"), F.col("a.ptr")).alias("ptr"),
-            (F.col("a.depth") + F.coalesce(F.col("b.depth"), F.lit(0))).alias("depth"),
+            (F.col("a.depth") + hop).alias("depth"),
         ).localCheckpoint()
-        if (i + 1) % check_every == 0 or i == max_iter - 1:
-            # fixpoint: nothing moved this round. Comparing total depth is
-            # enough — depth strictly increases for any row that advanced.
-            moved = (
-                nxt.alias("n")
-                .join(cur.alias("c"), "id")
-                .filter(F.col("n.depth") != F.col("c.depth"))
-                .count()
-            )
-            if moved == 0:
-                cur = nxt
-                converged = True
-                break
-        cur = nxt
-    if not converged:
+        moved = obs.get["moved"]
+    if moved != 0:
         raise RuntimeError(
             f"hierarchy_resolve: no fixpoint after {rounds} pointer-doubling "
             f"rounds — a depth > 2^{rounds} chain or a CYCLE in "
@@ -698,7 +691,8 @@ def pagerank(
     pooled rank is redistributed uniformly each round — the standard
     treatment — via a broadcast single-row aggregate (never a driver
     collect). The dangling branch is built only when dangling nodes exist
-    (one bounded count up front), so graphs that are symmetric by
+    — |V| and the dangling count are observed inside the node table's
+    checkpoint job, no extra action — so graphs that are symmetric by
     construction pay nothing for it and keep a nested-loop-free plan.
 
     `assume_distinct=True` (ADVICE r11) skips the safety `distinct()` on
@@ -735,20 +729,26 @@ def pagerank(
     # cut each checkpoint would re-run the caller's upstream plan
     # (measured 2x the whole setup cost on the trade graph)
     e = e.localCheckpoint()
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint()
+    # |V| sets every rank, so it must be exact: the observation sits in the
+    # checkpoint job's result stage, where Spark applies each task's
+    # accumulator update once even if the task is retried
+    nodes, obs = observe_counts(
+        e.select(F.col("src").alias("node"), F.lit(True).alias("has_out"))
+        .union(e.select(F.col("dst").alias("node"), F.lit(False).alias("has_out")))
+        .groupBy("node")
+        .agg(F.max("has_out").alias("has_out")),
+        "pagerank",
+        {"n": F.count(F.lit(1)), "n_dangling": F.count_if(~F.col("has_out"))},
     )
+    nodes = nodes.localCheckpoint()
+    sizes = obs.get
+    n, has_dangling = sizes["n"], sizes["n_dangling"] > 0
+    if n == 0:
+        return nodes.select("node", F.lit(0.0).alias("pr"))
     deg = e.groupBy("src").agg(F.count("*").alias("out_deg"))
     # Degree-annotated edges are reused every round: checkpoint once.
     e_deg = e.join(deg, "src").localCheckpoint()
-    n = nodes.count()  # bounded scalar: |V|, needed for init + teleport
-    if n == 0:
-        return nodes.select("node", F.lit(0.0).alias("pr"))
-    dangling = nodes.join(deg, nodes["node"] == deg["src"], "left_anti")
-    has_dangling = dangling.limit(1).count() > 0  # bounded probe
+    dangling = nodes.filter(~F.col("has_out"))
     teleport = (1.0 - damping) / n
     ranks = nodes.select("node", F.lit(1.0 / n).alias("pr")).localCheckpoint()
     for _ in range(iterations):
@@ -1241,7 +1241,6 @@ def label_propagation(
     src_col: str,
     dst_col: str,
     iters: int = 4,
-    encode_ids: bool = False,
     assume_distinct: bool = False,
 ) -> DataFrame:
     """Synchronous label propagation (Raghavan et al. 2007 — LPA): every
@@ -1262,24 +1261,6 @@ def label_propagation(
     symmetrized edge list (as q_label_propagation does) when undirected
     semantics are wanted.
 
-    Scale dial (VERDICT r9 #3, the quality_gate exact=False convention —
-    cheap path default, scale path opt-in): `encode_ids=True` rank-
-    encodes node ids to ints ONCE up front (order-preserving via the
-    range-partitioned two-level rank in `ordered_ranks`, so the
-    lexicographic tie-break is unchanged), the iteration shuffles two
-    ints per edge instead of two strings, and the string ids join back
-    once at the end — pinned identical communities vs the string-native
-    default on the fixture graph; tools/job_metrics.py receipts the
-    per-round shuffle drop (19.75 → 12.29 MiB at sf0.1) in SCALING.md.
-    USAGE RULE (VERDICT r10 #4, measured crossover in SCALING.md §r11):
-    the encode is a one-off (4 fixed joins) while the savings recur per
-    round, so int wins when ROUNDS × ID-WIDTH is large — measured on
-    this box from ~(iters ≥ 8 with URL/UUID-width ids: 19.6 → 15.2 s at
-    1.17M edges); with short ids string-native wins at every feasible
-    local scale (7.4 vs 8.3 s at 1×, 11.5 vs 14.1 s at 4×). On a
-    network-shuffled cluster the per-round bytes dominate and the
-    crossover moves earlier. Default False per the measurements.
-
     Scale shape per round (the pagerank loop pattern): one equi-join of
     the label vector onto the edge list (shuffle on node id), one
     partial-aggregated (node, label) count, one min_by argmax per node —
@@ -1299,20 +1280,6 @@ def label_propagation(
         # same dial as pagerank: a caller that proves its edge list unique
         # skips the full-edge dedup shuffle (guide §2.4); pinned identical
         e = e.distinct()
-    nodes = None
-    if encode_ids:
-        nodes = ordered_ranks(
-            e.select(F.col("a").alias("_n")).union(e.select(F.col("b").alias("_n"))),
-            "_n",
-            "nid",
-        ).localCheckpoint()
-        na = nodes.select(F.col("_n").alias("a"), F.col("nid").alias("_ai"))
-        nb = nodes.select(F.col("_n").alias("b"), F.col("nid").alias("_bi"))
-        e = (
-            e.join(na, "a")
-            .join(nb, "b")
-            .select(F.col("_ai").alias("a"), F.col("_bi").alias("b"))
-        )
     e = e.localCheckpoint()
     # seed from BOTH endpoints (ADVICE r9): dst-only nodes of a directed
     # edge list are communities too, and the neighbor join must find them
@@ -1328,12 +1295,16 @@ def label_propagation(
     # Compute that CONSTANT once (guide §2.4 — the old per-round
     # `labels.join(distinct(e.a), left_anti)` re-shuffled the full edge
     # list every round for a round-invariant result; on symmetrized
-    # inputs, like the declared query's, the set is simply empty). The
-    # one-row bounded probe skips even the union on such graphs.
-    stranded = labels.join(
-        e.select(F.col("a").alias("node")).distinct(), "node", "left_anti"
-    ).localCheckpoint()
-    has_stranded = stranded.limit(1).count() > 0
+    # inputs, like the declared query's, the set is simply empty). Its
+    # row count, observed inside the checkpoint job, skips even the union
+    # on such graphs.
+    stranded, obs = observe_counts(
+        labels.join(e.select(F.col("a").alias("node")).distinct(), "node", "left_anti"),
+        "label_propagation",
+        {"n_stranded": F.count(F.lit(1))},
+    )
+    stranded = stranded.localCheckpoint()
+    has_stranded = obs.get["n_stranded"] > 0
     for _ in range(int(iters)):
         labels = (
             e.join(labels, e["b"] == labels["node"])
@@ -1348,16 +1319,7 @@ def label_propagation(
             # symmetrized inputs never hit it)
             labels = labels.unionByName(stranded)
         labels = labels.localCheckpoint()
-    out = labels.select("node", F.col("lbl").alias("community"))
-    if nodes is not None:
-        nn = nodes.select(F.col("nid").alias("node"), F.col("_n").alias("_ns"))
-        nc = nodes.select(F.col("nid").alias("community"), F.col("_n").alias("_cs"))
-        out = (
-            out.join(nn, "node")
-            .join(nc, "community")
-            .select(F.col("_ns").alias("node"), F.col("_cs").alias("community"))
-        )
-    return out
+    return labels.select("node", F.col("lbl").alias("community"))
 
 
 def sequence_mining(

@@ -711,17 +711,6 @@ def pii_scrub(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     return df.select(F.col(id_col), scrubbed.alias("scrubbed"), *counts)
 
 
-def extract_coordinates(df: DataFrame, text_col: str) -> DataFrame:
-    """Regex lat/lon extraction from message text (F4; main.py:490-509)."""
-    pat_lat = r"Latitude\s+([-+]?\d+\.?\d*)"
-    pat_lon = r"Longitude\s+([-+]?\d+\.?\d*)"
-    lat = F.regexp_extract(F.col(text_col), pat_lat, 1)
-    lon = F.regexp_extract(F.col(text_col), pat_lon, 1)
-    return df.withColumn(
-        "msg_lat", F.when(lat != "", lat.cast("double"))
-    ).withColumn("msg_lon", F.when(lon != "", lon.cast("double")))
-
-
 def searchable_text(df: DataFrame, cols: list[str], out: str = "searchable_text") -> DataFrame:
     """Lowercase concat of columns (P3; convert_housing_to_json.py:49)."""
     return df.withColumn(out, F.lower(F.concat_ws(" ", *[F.col(c) for c in cols])))

@@ -16,10 +16,26 @@ key instead of a cross product.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.vector import cosine_similarity, distance_score, euclidean, fuse_scores
+
+
+def _py_norm(v) -> float:
+    """Driver-side twin of the column `norm()`: left-fold sum of squares in
+    double, then a correctly rounded sqrt — the same IEEE op sequence."""
+    acc = 0.0
+    for x in v:
+        acc = acc + float(x) * float(x)
+    return math.sqrt(acc)
+
+
+def _unit(c: list[float]) -> list[float]:
+    n = _py_norm(c) or 1.0
+    return [float(x) / n for x in c]
 
 
 def knn(
@@ -433,11 +449,7 @@ def with_ivf_cell(df: DataFrame, vec_col: str, centroids: list[list[float]]) -> 
     bit-identical (pinned vs the broadcast path)."""
     from ..functions.vector import dot
 
-    def unit(c: list[float]) -> list[float]:
-        n = sum(x * x for x in c) ** 0.5 or 1.0
-        return [x / n for x in c]
-
-    cmat = F.lit([unit([float(x) for x in c]) for c in centroids])
+    cmat = F.lit([_unit(c) for c in centroids])
     scores = F.transform(cmat, lambda u: dot(F.col(vec_col), u))
     cell = F.array_position(scores, F.array_max(scores)).cast("int") - 1
     return df.withColumn("ivf_cell", cell)
@@ -478,13 +490,9 @@ def with_ivf_cell_broadcast(
     checkpoints); the uid itself only needs uniqueness WITHIN a branch."""
     from ..functions.vector import dot
 
-    def unit(c: list[float]) -> list[float]:
-        n = sum(x * x for x in c) ** 0.5 or 1.0
-        return [x / n for x in c]
-
     spark = df.sparkSession
     cdf = spark.createDataFrame(
-        [(i, unit([float(x) for x in c])) for i, c in enumerate(centroids)],
+        [(i, _unit(c)) for i, c in enumerate(centroids)],
         "_cell int, _u array<double>",
     )
     score = dot(F.col(vec_col), F.col("_u"))
@@ -521,11 +529,7 @@ def ivf_candidates(
     their own scoring/ordering — e.g. the oracle-twin declared query)."""
     cents = centroids if centroids is not None else ivf_centroids(df, vec_col, id_col, n_cells)
 
-    def unit(c: list[float]) -> list[float]:
-        n = sum(x * x for x in c) ** 0.5 or 1.0
-        return [x / n for x in c]
-
-    scored = [(i, sum(a * b for a, b in zip(probe, unit(c)))) for i, c in enumerate(cents)]
+    scored = [(i, sum(a * b for a, b in zip(probe, _unit(c)))) for i, c in enumerate(cents)]
     probe_cells = [i for i, _ in sorted(scored, key=lambda t: -t[1])[:nprobe]]
     return with_ivf_cell(df, vec_col, cents).filter(F.col("ivf_cell").isin(probe_cells))
 
@@ -1583,13 +1587,9 @@ def hard_negatives_scoped(
         else ivf_centroids(corpus, vec_col, id_col, n_cells)
     )
 
-    def unit(c: list[float]) -> list[float]:
-        n = sum(x * x for x in c) ** 0.5 or 1.0
-        return [x / n for x in c]
-
     spark = corpus.sparkSession
     cdf = spark.createDataFrame(
-        [(i, unit([float(x) for x in c])) for i, c in enumerate(cents)],
+        [(i, _unit(c)) for i, c in enumerate(cents)],
         "_cell int, _u array<double>",
     )
     if assign not in ("literal", "broadcast"):
@@ -1834,14 +1834,6 @@ def mmr_select(
     Output: (round, sel_id, relevance_r, mmr_r) — mmr_r is NULL for
     the seed pick (pure-relevance argmax)."""
     from ..functions.vector import dot, norm
-
-    def _py_norm(v) -> float:
-        # exact twin of norm(): left-fold sum of squares in double, sqrt —
-        # same IEEE op sequence as the column expression it replaces
-        acc = 0.0
-        for x in v:
-            acc = acc + float(x) * float(x)
-        return acc ** 0.5
 
     def _sim_to(cvec, cnorm: float):
         # cosine against the freshly picked (collected) vector with BOTH

@@ -2121,7 +2121,7 @@ def q_dedup_components(spark, sf_dir):
         load(spark, sf_dir, "documents"), "text", "doc_id",
         k=3, bands=16, threshold=0.3, hash_fn="md5",
     )
-    return D.dedup_components(pairs, check_every=2)
+    return D.dedup_components(pairs)
 
 
 @declared(
@@ -2159,7 +2159,7 @@ def q_dedup_select(spark, sf_dir):
     pairs = D.minhash_lsh_pairs(
         docs, "text", "doc_id", k=3, bands=16, threshold=0.3, hash_fn="md5"
     )
-    comps = D.dedup_components(pairs, check_every=2)
+    comps = D.dedup_components(pairs)
     quality = TO.quality_score(docs, "text", "doc_id").select("doc_id", "quality")
     labeled = quality.join(comps, quality["doc_id"] == comps["id"], "left").select(
         quality["doc_id"],
@@ -2213,7 +2213,7 @@ def q_cluster_split(spark, sf_dir):
     pairs = D.minhash_lsh_pairs(
         docs, "text", "doc_id", k=3, bands=16, threshold=0.3, hash_fn="md5"
     )
-    comps = D.dedup_components(pairs, check_every=2)
+    comps = D.dedup_components(pairs)
     labeled = docs.select("doc_id").join(
         comps, docs["doc_id"] == comps["id"], "left"
     ).select(
@@ -4419,7 +4419,7 @@ def q_cluster_size_hist(spark, sf_dir):
     pairs = D.minhash_lsh_pairs(
         docs, "text", "doc_id", k=3, bands=16, threshold=0.3, hash_fn="md5"
     )
-    comps = D.dedup_components(pairs, check_every=2)
+    comps = D.dedup_components(pairs)
     labeled = docs.select("doc_id").join(
         comps, docs["doc_id"] == comps["id"], "left"
     ).select(F.coalesce(comps["cluster_id"], docs["doc_id"]).alias("cl"))
@@ -7041,7 +7041,7 @@ def q_name_canonicalize(spark, sf_dir):
     pairs = D.fuzzy_pairs(parts, "p_name", max_dist=2).select(
         F.col("name_a").alias("id_a"), F.col("name_b").alias("id_b")
     )
-    comp = D.dedup_components(pairs, check_every=2)
+    comp = D.dedup_components(pairs)
     return (
         parts.join(comp, parts["p_name"] == comp["id"], "left")
         .select(
@@ -8629,192 +8629,6 @@ def q_semdedup_select(spark, sf_dir):
     return OV.semdedup(corpus, "embedding", "vec_id", n_cells=16, threshold=0.9)
 
 
-# ===================================================================
-# Driver-sample rotation
-# ===================================================================
-# The driver's CORRECTNESS gate samples exactly the first 50 REGISTRY
-# insertion positions, so each round rotates the least-recently-verified
-# queries to the front (r4 covered the §2.12 core, r5 covers the r4
-# additions + the re-shaped profile_approx). REGISTRY stays a plain dict —
-# every other consumer (entry(), tests, bench) looks up by name and is
-# order-insensitive; tests/test_queries_smoke.py pins this ordering so
-# future insertions can't silently demote a query out of driver coverage.
-
-# Round-5 rotation (VERDICT r4 "Next round" #1): the 32 round-4 additions
-# were judge-oracle-green but never driver-sampled; they fill the front of
-# the sample, plus profile_approx (now reshaped with an exact DuckDB twin —
-# VERDICT r4 #2, so its row can finally turn green instead of no_oracle)
-# and the new event_correlate (the stream_correlate batch twin, VERDICT r4
-# #6). The remaining 16 slots re-verify r3-evidence queries (the oldest
-# driver rows). With CORRECTNESS_r05 green this reaches cumulative driver
-# coverage 133 of the 133 queries declared at rotation time. The 19 later
-# round-5 additions (bpe_pair_counts .. pmi_cooccur, ending at the
-# registry tail) are declared after the rotation, so they are
-# judge-checked this round and enter the r6 rotation pool as the newest
-# never-driver-sampled cohort.
-DRIVER_SAMPLE_R5: tuple[str, ...] = (
-    # never-driver-sampled round-4 additions (all judge-green in r4)
-    "join_null_safe", "join_full_outer", "set_intersect_except",
-    "interval_join_outer", "gopher_rules", "bloom_decontaminate",
-    "simhash_pairs", "doc_surprisal", "doc_entropy", "corpus_diff",
-    "cluster_size_hist", "contamination_spans", "redact_contamination",
-    "temperature_mix", "time_fill", "funnel_counts", "cube_counts",
-    "unpivot_metrics", "corpus_stats", "length_outliers",
-    "conversation_assemble", "pivot_counts", "length_deciles",
-    "minhash_incremental", "ann_quantized", "dedup_overlap_matrix",
-    "corpus_resample", "segment_dedup", "data_checks", "segment_dedup_doc",
-    "boilerplate_report", "cdc_apply",
-    # newly driver-checkable / newly declared this round
-    "profile_approx", "event_correlate",
-    # r3-evidence re-verification (oldest driver rows)
-    "abnormal_rules", "agg_global", "cast_truncate", "conditional_counts",
-    "date_trunc_counts", "day_name_counts", "distinct_values", "doc_langid",
-    "filter_eq", "geo_knn_join", "geo_radius", "groupby_sum_topk",
-    "hybrid_fusion", "join_fk", "latest_per_group", "vec_knn",
-)
-
-# Round-6 rotation (VERDICT r5 "Next round" #2): the 30 round-5 additions
-# were judge-oracle-green in r5 but never driver-sampled — they fill the
-# front of the sample (pca_topcomp enters only after its oracle was
-# MATERIALIZED-bounded, 331 s → 0.1 s at sf0.01; VERDICT r5 #3). The
-# remaining 20 slots re-verify the oldest driver evidence (r3 rows not
-# re-sampled since). With CORRECTNESS_r06 green this reaches cumulative
-# driver coverage 163/163 of every query declared at rotation time.
-DRIVER_SAMPLE_R6: tuple[str, ...] = (
-    # never-driver-sampled round-5 additions (all judge-green in r5)
-    "bpe_pair_counts", "ngram_diversity", "cosine_calibration",
-    "contrastive_pairs", "hierarchy_resolve", "multimodal_pack",
-    "pagerank_topk", "inverted_index", "skew_report", "group_normalize",
-    "quantiles_approx", "triangle_count", "retention_cohorts", "bm25_topk",
-    "graph_walks", "logreg_train", "window_suite", "grouping_sets_counts",
-    "pmi_cooccur", "fuzzy_name_pairs", "shortest_paths",
-    "name_canonicalize", "group_distinct_approx", "array_ops_suite",
-    "dim_profile", "event_anomaly", "random_projection", "countmin_freq",
-    "bootstrap_ci", "pca_topcomp",
-    # oldest driver evidence (r3 rows, least recently verified)
-    "agg_pricing_summary", "doc_profile", "doc_quality", "doc_repetition",
-    "doc_token_count", "filter_contains", "filter_ilike", "filter_range",
-    "filter_ts_range", "geo_knn_join_adaptive", "geo_knn_join_nested",
-    "geo_radius_topk", "hash_split", "join_anti", "join_multi", "join_semi",
-    "json_extract", "km_to_miles", "multimodal_knn", "null_filter",
-)
-
-
-# Round-7 rotation (VERDICT r6 "Next round" #2): the 63 queries never
-# sampled by DRIVER_SAMPLE_R5/R6 — i.e. whose driver evidence is r4 or
-# older — fill the sample oldest-evidence-first: all 14 r3-evidence rows,
-# then 36 of the 49 r4-evidence rows in declaration order. The remaining
-# 13 r4-evidence rows (session_window_native … hybrid_fusion_fast) lead
-# the R8 rotation, after which no query's driver evidence is older than
-# three rounds.
-#
-# R8 ROTATION QUEUE (build it as DRIVER_SAMPLE_R8): the 13 r4 leftovers
-# above + the 8 never-driver-sampled r7 declarations (minhash_index_probe,
-# lsh_blocking_eval, ngram_novelty_split, token_divergence,
-# classifier_auc_eval, classifier_calibration, hybrid_ndcg_eval,
-# embedding_isotropy) = 21 rows; fill the remaining 29 slots with the
-# oldest r5-evidence rows in declaration order.
-DRIVER_SAMPLE_R7: tuple[str, ...] = (
-    # r3-evidence rows (the oldest driver evidence in the registry)
-    "struct_project", "threshold_flag", "status_breakdown",
-    "topk_per_group", "ordered_limit", "search_filter_limit",
-    "union_dedup", "regexp_extract_kw", "schedule_expand",
-    "vec_knn_scoped", "vec_threshold", "vec_euclidean_match",
-    "vec_knn_batch", "salted_join_fk",
-    # r4-evidence rows, declaration order (36 of 49)
-    "rollup_counts", "rolling_features", "asof_join", "corpus_curate",
-    "doc_len_quantiles", "vec_centroids", "build_vocab", "pack_sequences",
-    "doc_rarity", "ngram_counts", "decontaminate", "doc_chunk",
-    "stratified_sample", "pii_scrub", "doc_exact_dedup", "doc_fingerprint",
-    "doc_jaccard_pairs", "embedding_neardup", "minhash_lsh_pairs",
-    "dedup_components", "dedup_select", "cluster_split",
-    "interval_join_counts", "scd2_history", "cap_per_source",
-    "quality_gate", "corpus_mix", "simhash", "embedding_neardup_lsh",
-    "ann_lsh", "doc_rolling_fingerprint", "tumbling_window", "sessionize",
-    "event_trends", "dashboard_counts", "dataset_search_union",
-)
-
-
-# Round-8 rotation (the queue documented above DRIVER_SAMPLE_R7): the 13
-# r4-evidence leftovers + the 8 never-driver-sampled r7 declarations lead;
-# the remaining 29 slots are the oldest r5-evidence rows in declaration
-# order. With CORRECTNESS_r08 green, no query's driver evidence is older
-# than r5, and every r7 declaration has a driver row.
-#
-# R9 ROTATION QUEUE (build it as DRIVER_SAMPLE_R9): the 21 r5-evidence
-# leftovers (contamination_spans .. cdc_apply, declaration order) + the 7
-# never-driver-sampled r8 declarations (dsir_weights, dsir_resample,
-# quality_distill_score, semdedup_index_probe, cluster_keywords,
-# semdedup_select, winnow_fingerprints — plus any r9 pre-rotation
-# declarations) = 28 rows; fill the remaining slots with the oldest
-# r6-evidence rows in declaration order.
-DRIVER_SAMPLE_R8: tuple[str, ...] = (
-    # r4-evidence leftovers (oldest driver evidence in the registry)
-    "session_window_native", "media_resize", "frame_sample", "doc_embed",
-    "ann_ivf", "multimodal_features", "hours_classify", "resource_format",
-    "doc_token_bpe", "doc_tfidf", "split_flags", "goal_transition",
-    "hybrid_fusion_fast",
-    # never-driver-sampled r7 declarations (judge-green in r7)
-    "hybrid_ndcg_eval", "minhash_index_probe", "lsh_blocking_eval",
-    "ngram_novelty_split", "token_divergence", "embedding_isotropy",
-    "classifier_auc_eval", "classifier_calibration",
-    # oldest r5-evidence rows, declaration order (29 of 50)
-    "filter_eq", "cast_truncate", "abnormal_rules", "agg_global",
-    "distinct_values", "conditional_counts", "groupby_sum_topk", "join_fk",
-    "join_null_safe", "join_full_outer", "set_intersect_except",
-    "latest_per_group", "date_trunc_counts", "day_name_counts",
-    "geo_radius", "geo_knn_join", "vec_knn", "hybrid_fusion", "doc_langid",
-    "interval_join_outer", "event_correlate", "profile_approx",
-    "gopher_rules", "bloom_decontaminate", "simhash_pairs", "doc_surprisal",
-    "doc_entropy", "corpus_diff", "cluster_size_hist",
-)
-
-
-def _rotate_registry(front: tuple[str, ...]) -> None:
-    missing = [n for n in front if n not in REGISTRY]
-    if missing:
-        raise RuntimeError(f"driver-sample rotation references unknown queries: {missing}")
-    ordered = {n: REGISTRY[n] for n in front}
-    ordered.update((n, q) for n, q in list(REGISTRY.items()) if n not in ordered)
-    REGISTRY.clear()
-    REGISTRY.update(ordered)
-
-
-# Round-9 rotation (the queue documented above DRIVER_SAMPLE_R8, executed
-# per VERDICT r8 "Next round #1"): the 7 never-driver-sampled r8
-# declarations lead, then any round-9 declarations, then the 21 r5-evidence
-# leftovers; the remaining slots are the oldest r6-evidence rows in
-# declaration order. With CORRECTNESS_r09 green, cumulative driver coverage
-# returns to 100% and no query's evidence is older than r6.
-#
-# R10 ROTATION QUEUE (build it as DRIVER_SAMPLE_R10): any never-sampled
-# r9/r10 declarations + the 28 remaining r6-evidence rows (json_extract
-# onward in registry order) first; fill with the oldest r7-evidence rows.
-DRIVER_SAMPLE_R9: tuple[str, ...] = (
-    # never-driver-sampled r8 declarations (judge-green in r8)
-    "dsir_weights", "dsir_resample", "quality_distill_score",
-    "semdedup_index_probe", "winnow_fingerprints", "cluster_keywords",
-    "semdedup_select",
-    # round-9 declarations (never driver-sampled; names appended here as
-    # each is declared — the tuple must stay valid at every commit)
-    "hybrid_fusion_adaptive", "influence_select", "suffix_ngram_dedup",
-    "rule_mining", "tokenizer_bpe_train", "hard_negatives", "code_detect",
-    "ngram_index_probe", "ccnet_buckets", "fim_split", "matryoshka_eval",
-    "label_propagation", "sketch_rollup", "attribution",
-    # r5-evidence leftovers (oldest driver evidence in the registry)
-    "contamination_spans", "redact_contamination", "temperature_mix",
-    "time_fill", "funnel_counts", "cube_counts", "unpivot_metrics",
-    "corpus_stats", "length_outliers", "conversation_assemble",
-    "pivot_counts", "length_deciles", "minhash_incremental",
-    "ann_quantized", "dedup_overlap_matrix", "corpus_resample",
-    "segment_dedup", "data_checks", "segment_dedup_doc",
-    "boilerplate_report", "cdc_apply",
-    # oldest r6-evidence rows, declaration order (fill to 50; each round-9
-    # declaration above displaces one row from the END of this block)
-    "filter_range", "filter_contains", "filter_ilike", "filter_ts_range",
-    "null_filter", "agg_pricing_summary", "join_multi", "join_semi",
-)
-
 @declared(
     "sft_spans",
     oracle="""
@@ -9377,40 +9191,6 @@ def q_kcenter_select(spark, sf_dir):
     return OV.kcenter_select(load(spark, sf_dir, "embeddings"), "embedding", "vec_id", k=8)
 
 
-# Round-10 rotation (the queue documented above DRIVER_SAMPLE_R9, executed
-# per VERDICT r9 "Next round #4"): round-10 declarations lead (appended to
-# the front of this tuple as each is declared — the tuple must stay valid
-# at every commit; each new declaration displaces one row from the END),
-# then ALL 42 remaining r6-evidence rows in registry order, then the
-# oldest r7-evidence rows as fill. With CORRECTNESS_r10 green, no registry
-# query's driver evidence is older than r7.
-#
-# R11 ROTATION QUEUE (build it as DRIVER_SAMPLE_R11): any never-sampled
-# r10/r11 declarations + the r7-evidence rows displaced from this tuple's
-# fill (regexp_extract_kw onward in registry order) + the remaining
-# r7-evidence rows; fill with the oldest r8-evidence rows.
-DRIVER_SAMPLE_R10: tuple[str, ...] = (
-    # round-10 declarations (never driver-sampled) — newest first
-    "sft_spans",
-    "dedup_consolidate", "sequence_mining", "sliding_distinct",
-    "lsh_index_probe", "tokenizer_bpe_apply",
-    "edit_distance_dedup", "quality_ensemble", "zipf_fit",
-    "doremi_weights", "embedding_outliers", "kcenter_select",
-    "hard_negatives_scoped",
-    # r6-evidence rows, registry order (ALL 42)
-    "join_anti", "json_extract", "geo_radius_topk",
-    "geo_knn_join_adaptive", "geo_knn_join_nested", "km_to_miles",
-    "doc_token_count", "doc_profile", "doc_quality", "doc_repetition",
-    "hash_split", "multimodal_knn", "bpe_pair_counts", "ngram_diversity",
-    "cosine_calibration", "contrastive_pairs", "hierarchy_resolve",
-    "multimodal_pack", "pagerank_topk", "inverted_index", "skew_report",
-    "group_normalize", "quantiles_approx", "triangle_count",
-    "retention_cohorts", "bm25_topk", "graph_walks", "logreg_train",
-    "window_suite", "grouping_sets_counts", "pmi_cooccur",
-    "fuzzy_name_pairs", "shortest_paths", "name_canonicalize",
-    "group_distinct_approx", "array_ops_suite", "dim_profile",
-)
-
 @declared(
     "soft_dedup_weights",
     oracle=f"""
@@ -9591,53 +9371,22 @@ def q_mmr_select(spark, sf_dir):
     )
 
 
-# Round-11 rotation (VERDICT r10 #2 + #7 — the standing rule, so the
-# evidence-debt item never recurs: OLDEST DRIVER EVIDENCE FIRST, always).
-# Build each round's tuple as: (a) every registry row whose newest green
-# CORRECTNESS_r* evidence is the oldest surviving round — here the 5
-# r6-era rows (pca_topcomp and random_projection were REWRITTEN in r7,
-# so their only driver evidence predates the shipping code); then (b)
-# new round-11 declarations inserted after that block as each is
-# declared (the tuple must stay valid at every commit; each insert
-# displaces one row from the END); then (c) the next-oldest evidence
-# rows (r7) in declaration order as fill.
+# ===================================================================
+# Correctness-gate sample rotation
+# ===================================================================
+# The external CORRECTNESS gate samples exactly the first 50 REGISTRY
+# insertion positions, so each round rotates a sample to the front.
+# REGISTRY stays a plain dict — every other consumer (entry(), tests,
+# bench) looks up by name and is order-insensitive;
+# tests/test_queries_smoke.py pins this ordering so later insertions
+# cannot silently demote a query out of the sample.
 #
-# R12 ROTATION QUEUE (build it as DRIVER_SAMPLE_R12): any never-sampled
-# r11/r12 declarations + the r7-evidence rows displaced from this
-# tuple's tail (tumbling_window, sessionize, event_trends,
-# dashboard_counts, dataset_search_union, then any others this round's
-# declarations push out) + the oldest r8-evidence rows as fill.
-DRIVER_SAMPLE_R11: tuple[str, ...] = (
-    # r6-evidence rows — the oldest driver evidence in the registry
-    "event_anomaly", "random_projection", "countmin_freq",
-    "bootstrap_ci", "pca_topcomp",
-    # round-11 declarations (never driver-sampled) — newest first
-    "domain_mix_plan", "mmr_select", "curriculum_order", "tokenizer_fertility", "soft_dedup_weights",
-    # r7-evidence rows, declaration order (fill to 50)
-    "struct_project",
-    "threshold_flag", "status_breakdown", "topk_per_group",
-    "ordered_limit", "search_filter_limit", "union_dedup",
-    "regexp_extract_kw", "schedule_expand", "vec_knn_scoped",
-    "vec_threshold", "vec_euclidean_match", "vec_knn_batch",
-    "salted_join_fk", "rollup_counts", "rolling_features",
-    "asof_join", "corpus_curate", "doc_len_quantiles",
-    "vec_centroids", "build_vocab", "pack_sequences",
-    "doc_rarity", "ngram_counts", "decontaminate",
-    "doc_chunk", "stratified_sample", "pii_scrub",
-    "doc_exact_dedup", "doc_fingerprint", "doc_jaccard_pairs",
-    "embedding_neardup", "minhash_lsh_pairs", "dedup_components",
-    "dedup_select", "cluster_split", "interval_join_counts",
-    "scd2_history", "cap_per_source", "quality_gate",
-)
-
-# Round-12 rotation (VERDICT r11 #2, executed verbatim): the 13 queries
-# whose plans changed AFTER the r11 sample was pinned LEAD the sample so
-# every r11 optimization gets driver-grade oracle evidence; then the 13
-# queries this round's optimizations touched (plan changes without driver
-# evidence yet — the same principle applied to r12 itself); then the
-# oldest-evidence-first rule for the remainder: the 10 r7-evidence rows
-# displaced from R11's fill (per the R12 queue documented above), then the
-# oldest r8-evidence rows in declaration order.
+# The rule for building each round's tuple: OLDEST GATE EVIDENCE FIRST.
+# Rows whose plans changed since their newest green CORRECTNESS_r* run
+# lead (their evidence predates the shipping code), then new declarations
+# never sampled, then the rows with the oldest evidence in declaration
+# order as fill to 50. Superseded tuples are deleted; git history keeps
+# them.
 DRIVER_SAMPLE_R12: tuple[str, ...] = (
     # (a) r11 plan changes sampled before the optimizer touched them
     #     (VERDICT r11 "What's wrong" #3 — driver evidence must lead)
@@ -9651,8 +9400,7 @@ DRIVER_SAMPLE_R12: tuple[str, ...] = (
     "lsh_blocking_eval", "cluster_keywords", "doc_tfidf", "ann_ivf",
     "semdedup_select", "semdedup_index_probe", "hard_negatives_scoped",
     "lsh_index_probe", "mmr_select", "shortest_paths",
-    # (c) r7-evidence rows displaced from the R11 fill (oldest evidence
-    #     remaining in the registry)
+    # (c) r7-evidence rows (oldest evidence remaining in the registry)
     "corpus_mix", "simhash", "embedding_neardup_lsh", "ann_lsh",
     "doc_rolling_fingerprint", "tumbling_window", "sessionize",
     "event_trends", "dashboard_counts", "dataset_search_union",
@@ -9662,5 +9410,16 @@ DRIVER_SAMPLE_R12: tuple[str, ...] = (
     "doc_token_bpe", "split_flags", "goal_transition", "hybrid_fusion_fast",
     "hybrid_ndcg_eval", "ngram_novelty_split", "token_divergence",
 )
+
+
+def _rotate_registry(front: tuple[str, ...]) -> None:
+    missing = [n for n in front if n not in REGISTRY]
+    if missing:
+        raise RuntimeError(f"driver-sample rotation references unknown queries: {missing}")
+    ordered = {n: REGISTRY[n] for n in front}
+    ordered.update((n, q) for n, q in list(REGISTRY.items()) if n not in ordered)
+    REGISTRY.clear()
+    REGISTRY.update(ordered)
+
 
 _rotate_registry(DRIVER_SAMPLE_R12)

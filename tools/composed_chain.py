@@ -102,7 +102,7 @@ def main() -> None:
 
     # 3. components + canonical select
     comps = timed(
-        "components", lambda: D.dedup_components(pairs, check_every=2).localCheckpoint()
+        "components", lambda: D.dedup_components(pairs).localCheckpoint()
     )
     quality = TO.quality_score(canon, "text", "doc_id").select("doc_id", "quality")
     labeled = quality.join(comps, quality["doc_id"] == comps["id"], "left").select(
