@@ -8,7 +8,7 @@ costs one Spark job, not one per string."""
 from __future__ import annotations
 
 import pytest
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from team_126_spark.functions.text import md5_low60, tokens, word_shingles
@@ -561,11 +561,22 @@ def test_poisson_bootstrap_matches_python_replay(spark):
         max_size=30,
     )
 )
+# U/(n_pos*n_neg) = 24.5/64 = 0.3828125: an exact tie at the 7th decimal.
+@example([(0, False)] * 7 + [(1, False)] + [(0, True)] * 7 + [(-1, True)])
 def test_rank_auc_matches_python_model(spark, pairs):
     """Tie-aware Mann-Whitney AUC against the O(n^2) pure-python pair count
     (1 per correctly ordered pos/neg pair, 0.5 per tie), plus the accuracy
-    definition, for ANY score/label multiset including heavy ties."""
+    definition, for ANY score/label multiset including heavy ties.
+
+    The model rounds like Spark's F.round (HALF_UP on the double's decimal
+    string), not like Python's round (half-even on the binary value): the
+    two differ on exact ties such as 24.5/64 = 0.3828125."""
+    from decimal import ROUND_HALF_UP, Decimal
+
     from team_126_spark.operators.relational import rank_auc
+
+    def round6(x):
+        return float(Decimal(repr(x)).quantize(Decimal("1e-6"), ROUND_HALF_UP))
 
     rows = [(float(s), 1.0 if y else 0.0) for s, y in pairs]
     df = spark.createDataFrame(rows, ["s", "y"])
@@ -577,11 +588,11 @@ def test_rank_auc_matches_python_model(spark, pairs):
     assert got["n_eval"] == len(rows)
     if pos and neg:
         u = sum(1.0 if p > n else 0.5 if p == n else 0.0 for p in pos for n in neg)
-        assert got["auc_r"] == round(u / (len(pos) * len(neg)), 6)
+        assert got["auc_r"] == round6(u / (len(pos) * len(neg)))
     else:
         assert got["auc_r"] is None
     acc = sum(1.0 for s, y in rows if (1.0 if s >= 0 else 0.0) == y) / len(rows)
-    assert got["acc_r"] == round(acc, 6)
+    assert got["acc_r"] == round6(acc)
 
 
 @settings(max_examples=5, deadline=None)
