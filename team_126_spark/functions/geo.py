@@ -69,42 +69,3 @@ def geohash_cell(lat: Column, lon: Column, cell_deg: float) -> Column:
     """
     return (F.floor((lat + 90.0) / cell_deg) * F.lit(1_000_000) + F.floor((lon + 180.0) / cell_deg)).cast("long")
 
-
-def z_value(lat: Column, lon: Column, bits: int = 16) -> Column:
-    """Z-order (Morton) key for a lat/lon pair: each coordinate quantized to
-    a 2^bits grid, bits interleaved (lon even positions, lat odd) into one
-    BIGINT sort key.
-
-    The 100 TB layout primitive Spark lacks natively: sorting/range-
-    partitioning a table by z clusters BOTH dimensions simultaneously, so
-    per-file (and per-row-group) lat/lon min/max stats become tight and a
-    bounding-box scan prunes most files — a single-column sort only ever
-    tightens one dimension. Pure integer column arithmetic (2×bits shifted
-    terms with disjoint bits, summed via bitwise OR), fully codegen; NULL
-    coordinates yield NULL z (sorts last, harmless).
-
-    bits=16 → 32-bit keys, cell ≈ 600 m of longitude at the equator —
-    plenty below typical row-group extents; raise toward 26 (52-bit keys)
-    for finer clustering.
-    """
-    if not 1 <= bits <= 26:
-        raise ValueError(f"z_value: bits must be in [1, 26], got {bits}")
-    n = 1 << bits
-    xcell = F.least(
-        F.lit(n - 1),
-        F.greatest(F.lit(0), F.floor((lon + 180.0) / 360.0 * n)),
-    ).cast("long")
-    ycell = F.least(
-        F.lit(n - 1),
-        F.greatest(F.lit(0), F.floor((lat + 90.0) / 180.0 * n)),
-    ).cast("long")
-    z = F.lit(0).cast("long")
-    for b in range(bits):
-        z = z.bitwiseOR(
-            F.shiftleft(F.shiftright(xcell, b).bitwiseAND(F.lit(1)), 2 * b)
-        ).bitwiseOR(
-            F.shiftleft(F.shiftright(ycell, b).bitwiseAND(F.lit(1)), 2 * b + 1)
-        )
-    # explicit NULL-in → NULL-out: greatest/least SKIP nulls (a null coord
-    # would silently clamp to cell 0 and z-sort into the bottom-left tile)
-    return F.when(lat.isNull() | lon.isNull(), F.lit(None).cast("long")).otherwise(z)

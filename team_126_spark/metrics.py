@@ -12,7 +12,6 @@ metrics per micro-batch through `StreamingQueryProgress.observedMetrics`.
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Observation
-from pyspark.sql import functions as F
 
 
 def observe_counts(
@@ -35,13 +34,3 @@ def observe_counts(
     obs = Observation(name)
     return df.observe(obs, *[c.alias(n) for n, c in metrics.items()]), obs
 
-
-def standard_corpus_metrics(text_col: str = "text") -> dict[str, Column]:
-    """The counters every corpus-processing stage should emit: volume,
-    null payloads, and byte mass — cheap aggregates with no extra shuffle."""
-    t = F.col(text_col)
-    return {
-        "rows": F.count(F.lit(1)),
-        "null_text": F.count_if(t.isNull()),
-        "total_chars": F.sum(F.coalesce(F.length(t), F.lit(0))),
-    }

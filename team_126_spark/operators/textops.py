@@ -721,32 +721,21 @@ def quality_gate(
     text_col: str,
     id_col: str,
     group_col: str,
-    exact: bool = True,
-    accuracy: int = 10_000,
 ) -> DataFrame:
     """Per-group quality gate: keep documents at or above their group's
     median quality score — the relative-threshold curation step (absolute
     thresholds misfire when sources differ in style). One scan computes the
     quality signal; the per-group median is aggregated then BROADCAST back,
     so the gate costs one groupBy shuffle on the (low-cardinality) group
-    key plus a broadcast hash join.
-
-    `exact=True` uses F.percentile (full sort-based exact median — right
-    whenever group count is modest, and required by the DuckDB oracle
-    twin). At 100 TB with millions of groups, `exact=False` routes to
-    percentile_approx (single-pass KLL-style sketch, rank error <=
-    group_rows / accuracy) — same plan shape, the aggregate just stops
-    materializing per-group sorted runs (SURVEY §2.12/L41).
+    key plus a broadcast hash join. The median is F.percentile (exact,
+    the DuckDB quantile_cont twin).
     """
     q = df.select(
         F.col(id_col), F.col(group_col), quality_expr(F.col(text_col)).alias("quality")
     )
-    med_expr = (
-        F.percentile("quality", F.lit(0.5))
-        if exact
-        else F.percentile_approx("quality", F.lit(0.5), F.lit(int(accuracy)))
+    med = q.groupBy(group_col).agg(
+        F.round(F.percentile("quality", F.lit(0.5)), 6).alias("src_median")
     )
-    med = q.groupBy(group_col).agg(F.round(med_expr, 6).alias("src_median"))
     return (
         q.join(F.broadcast(med), group_col)
         .filter(F.col("quality") >= F.col("src_median"))
@@ -1185,10 +1174,14 @@ def inverted_index(
     return kept.join(postings, "term")
 
 
-def _bigram_buckets(df: DataFrame, text_col: str, id_col: str, buckets: int):
+def _bigram_buckets(
+    df: DataFrame, text_col: str, id_col: str, buckets: int, is_target=None
+):
     """(doc, bucket) rows — one per bigram occurrence: codegen-native
     slice + arrays_zip bigrams (never transform(sequence, element_at), the
-    interpreted-HOF pitfall), md5-low32 bucketing."""
+    interpreted-HOF pitfall), md5-low32 bucketing. A boolean `is_target`
+    Column over df rides through the same explode as `is_t`, giving
+    (doc, is_t, bucket) rows."""
     from ..functions.text import md5_low32
     from ..tables import spread
 
@@ -1198,14 +1191,50 @@ def _bigram_buckets(df: DataFrame, text_col: str, id_col: str, buckets: int):
         F.slice(t, 1, F.greatest(n - 1, F.lit(0))),
         F.slice(t, 2, F.greatest(n - 1, F.lit(0))),
     )
-    return spread(df, id_col).select(
-        F.col(id_col).alias("doc"), F.explode(zipped).alias("bg")
-    ).select(
-        "doc",
+    carry = {"doc": F.col(id_col)}
+    if is_target is not None:
+        carry["is_t"] = is_target
+    exploded = spread(df, id_col).select(
+        *[c.alias(name) for name, c in carry.items()], F.explode(zipped).alias("bg")
+    )
+    return exploded.select(
+        *carry,
         F.pmod(
             md5_low32(F.concat_ws(" ", F.col("bg.0"), F.col("bg.1"))),
             F.lit(buckets),
         ).alias("b"),
+    )
+
+
+def _dsir_log_ratios(counts: DataFrame, buckets: int, k_smooth: float) -> DataFrame:
+    """The `buckets`-row add-k log-ratio table lr(b) = ln p_target(b) −
+    ln p_raw(b) from (is_t, b, c) bigram counts: a complete bucket spine
+    left-joined to the target and raw bucket sums, totals from a
+    single-partition window over the B-row table."""
+    tb = counts.filter(F.col("is_t")).groupBy("b").agg(F.sum("c").alias("tc"))
+    rb = counts.filter(~F.col("is_t")).groupBy("b").agg(F.sum("c").alias("rc"))
+    # complete bucket spine: every bucket id gets a row (and thereby the
+    # smoothed default log-ratio) even if no fit bigram hashed to it
+    spine = counts.sparkSession.range(buckets).select(F.col("id").alias("b"))
+    merged = (
+        spine.join(tb, "b", "left")
+        .join(rb, "b", "left")
+        .select(
+            "b",
+            F.coalesce("tc", F.lit(0.0)).alias("tc"),
+            F.coalesce("rc", F.lit(0.0)).alias("rc"),
+        )
+    )
+    w = Window.partitionBy(F.lit(1))
+    kb = float(k_smooth) * buckets
+    return merged.select(
+        "b",
+        (
+            F.log(F.col("tc") + F.lit(float(k_smooth)))
+            - F.log(F.sum("tc").over(w) + F.lit(kb))
+            - F.log(F.col("rc") + F.lit(float(k_smooth)))
+            + F.log(F.sum("rc").over(w) + F.lit(kb))
+        ).alias("lr"),
     )
 
 
@@ -1236,50 +1265,12 @@ def dsir_bucket_ratios(
     r8)."""
     # one exploded scan, flag carried through the explode instead of a
     # join back onto the corpus
-    from ..functions.text import md5_low32
-    from ..tables import spread
-
-    t = tokens(F.col(text_col))
-    n = F.size(t)
-    zipped = F.arrays_zip(
-        F.slice(t, 1, F.greatest(n - 1, F.lit(0))),
-        F.slice(t, 2, F.greatest(n - 1, F.lit(0))),
+    counts = (
+        _bigram_buckets(df, text_col, id_col, buckets, is_target)
+        .groupBy("is_t", "b")
+        .agg(F.count("*").cast("double").alias("c"))
     )
-    base = spread(df, id_col).select(
-        is_target.alias("is_t"), F.explode(zipped).alias("bg")
-    ).select(
-        "is_t",
-        F.pmod(
-            md5_low32(F.concat_ws(" ", F.col("bg.0"), F.col("bg.1"))),
-            F.lit(buckets),
-        ).alias("b"),
-    )
-    counts = base.groupBy("is_t", "b").agg(F.count("*").cast("double").alias("c"))
-    tb = counts.filter(F.col("is_t")).groupBy("b").agg(F.sum("c").alias("tc"))
-    rb = counts.filter(~F.col("is_t")).groupBy("b").agg(F.sum("c").alias("rc"))
-    # complete bucket spine: every bucket id gets a row (and thereby the
-    # smoothed default log-ratio) even if no fit bigram hashed to it
-    spine = df.sparkSession.range(buckets).select(F.col("id").alias("b"))
-    merged = (
-        spine.join(tb, "b", "left")
-        .join(rb, "b", "left")
-        .select(
-            "b",
-            F.coalesce("tc", F.lit(0.0)).alias("tc"),
-            F.coalesce("rc", F.lit(0.0)).alias("rc"),
-        )
-    )
-    w = Window.partitionBy(F.lit(1))
-    kb = float(k_smooth) * buckets
-    return merged.select(
-        "b",
-        (
-            F.log(F.col("tc") + F.lit(float(k_smooth)))
-            - F.log(F.sum("tc").over(w) + F.lit(kb))
-            - F.log(F.col("rc") + F.lit(float(k_smooth)))
-            + F.log(F.sum("rc").over(w) + F.lit(kb))
-        ).alias("lr"),
-    )
+    return _dsir_log_ratios(counts, buckets, k_smooth)
 
 
 def dsir_score(
@@ -1365,57 +1356,13 @@ def dsir_importance(
     every intermediate DuckDB-reproducible (swap xxhash64 in production,
     the sketch-family precedent). Fit-once/score-many callers (and the
     streaming surface) keep using dsir_bucket_ratios + dsir_score."""
-    from ..functions.text import md5_low32
-    from ..tables import spread
-
-    t = tokens(F.col(text_col))
-    n = F.size(t)
-    zipped = F.arrays_zip(
-        F.slice(t, 1, F.greatest(n - 1, F.lit(0))),
-        F.slice(t, 2, F.greatest(n - 1, F.lit(0))),
-    )
     db = (
-        spread(df, id_col)
-        .select(
-            F.col(id_col).alias("doc"),
-            is_target.alias("is_t"),
-            F.explode(zipped).alias("bg"),
-        )
-        .select(
-            "doc",
-            "is_t",
-            F.pmod(
-                md5_low32(F.concat_ws(" ", F.col("bg.0"), F.col("bg.1"))),
-                F.lit(buckets),
-            ).alias("b"),
-        )
+        _bigram_buckets(df, text_col, id_col, buckets, is_target)
         .groupBy("doc", "is_t", "b")
         .agg(F.count("*").cast("double").alias("c"))
         .localCheckpoint()  # three consumers: target fit, raw fit, score
     )
-    tb = db.filter(F.col("is_t")).groupBy("b").agg(F.sum("c").alias("tc"))
-    rb = db.filter(~F.col("is_t")).groupBy("b").agg(F.sum("c").alias("rc"))
-    spine = df.sparkSession.range(buckets).select(F.col("id").alias("b"))
-    merged = (
-        spine.join(tb, "b", "left")
-        .join(rb, "b", "left")
-        .select(
-            "b",
-            F.coalesce("tc", F.lit(0.0)).alias("tc"),
-            F.coalesce("rc", F.lit(0.0)).alias("rc"),
-        )
-    )
-    w = Window.partitionBy(F.lit(1))
-    kb = float(k_smooth) * buckets
-    ratios = merged.select(
-        "b",
-        (
-            F.log(F.col("tc") + F.lit(float(k_smooth)))
-            - F.log(F.sum("tc").over(w) + F.lit(kb))
-            - F.log(F.col("rc") + F.lit(float(k_smooth)))
-            + F.log(F.sum("rc").over(w) + F.lit(kb))
-        ).alias("lr"),
-    )
+    ratios = _dsir_log_ratios(db, buckets, k_smooth)
     per_doc = (
         db.filter(~F.col("is_t"))
         .join(F.broadcast(ratios), "b")
@@ -1798,61 +1745,33 @@ def ppl_buckets(
     score_col: str,
     lang_col: str,
     id_col: str,
-    exact: bool = True,
-    accuracy: int = 10_000,
-    scalable: bool | str = False,
-    auto_rows: int = 1_000_000,
+    scalable: bool = False,
 ) -> DataFrame:
     """Per-LANGUAGE perplexity terciles (the CCNet head/middle/tail cut,
     Wenzek et al. 2020) over an already-scored table — the bucketing stage
     of q_ccnet_buckets, factored out so the cut strategy is a dial
     (VERDICT r9 #1).
 
-    `exact=True`: ntile(3) over a per-language window ordered by
+    Default: ntile(3) over a per-language window ordered by
     (score, id) — the oracle-mirrorable total order, but each language's
     ENTIRE row set moves through ONE task (a window partition is a task),
     so a dominant language at 100 TB funnels ~the whole corpus through a
     single executor sort.
 
-    `exact=False`: the quality_gate precedent — per-language 1/3 and 2/3
-    cut values via percentile_approx (mergeable KLL-style sketch, fully
-    parallel partial aggregation; rank error ≤ lang_rows / accuracy),
-    BROADCAST back, bucket by comparison. No per-language sort exists
-    anywhere in the plan; the only shuffle is the partial-aggregated
-    groupBy on the language key. Buckets differ from exact only for rows
-    within the sketch's rank bound of a cut (ties at the cut value all
-    land in the lower bucket, where ntile splits them by id) — pinned on
-    the fixture in tests/test_dedup.py.
-
-    `exact=True, scalable=True`: EXACT ntile WITHOUT the per-language
+    `scalable=True`: the same ntile WITHOUT the per-language
     single-task window — `relational.grouped_ranks` (range-partitioned
     two-level per-group rank, task-sized window partitions) plus the
     closed-form ntile from rank and group count, ntile(k) =
     ((rank−1)·k) // n + 1 (reproduces SQL ntile's ceil-sized leading
     buckets exactly). Pinned bucket-identical to the window ntile in
     pytest — the strongest form of the VERDICT r9 #1 fix: same answer,
-    no funnel, no approximation. This is the DEFAULT plan the declared
+    no funnel, no approximation. This is the plan the declared
     `ccnet_buckets` query ships (VERDICT r10 #1).
 
-    `scalable="auto"`: observe the largest language's row count (one
-    partial-aggregated count — the hybrid_fusion_adaptive
-    candidate-count precedent) and pick the window path below
-    `auto_rows` rows (cheapest locally) or grouped_ranks above it (no
-    group-sized window ever reaches a task). Both branches are exact
-    and pinned identical, so the switch is invisible in results.
-
-    NULL language keys form their own bucket group on every path (the
-    joins back to cuts/counts are null-SAFE — ADVICE r10)."""
+    NULL language keys form their own bucket group on both paths (the
+    join back to the counts is null-SAFE — ADVICE r10)."""
     s, lg = F.col(score_col), F.col(lang_col)
-    if exact and scalable == "auto":
-        biggest = (
-            scored.groupBy(lg.alias("_lang"))
-            .count()
-            .agg(F.max("count"))
-            .first()[0]
-        )
-        scalable = bool(biggest and biggest > auto_rows)
-    if exact and scalable:
+    if scalable:
         from .relational import grouped_ranks
 
         base = scored.localCheckpoint()
@@ -1866,22 +1785,9 @@ def ppl_buckets(
             ranked.join(F.broadcast(counts), lg.eqNullSafe(F.col("_lang")))
             .select(*scored.columns, bucket.alias("ppl_bucket"))
         )
-    if exact:
-        nt = F.ntile(3).over(Window.partitionBy(lg).orderBy(s.asc(), F.col(id_col).asc()))
-        bucket = F.when(nt == 1, "head").when(nt == 2, "middle").otherwise("tail")
-        return scored.select(*scored.columns, bucket.alias("ppl_bucket"))
-    cuts = scored.groupBy(lg.alias("_lang")).agg(
-        F.percentile_approx(s, F.lit([1.0 / 3.0, 2.0 / 3.0]), F.lit(int(accuracy))).alias("_cuts")
-    )
-    bucket = (
-        F.when(s <= F.col("_cuts")[0], "head")
-        .when(s <= F.col("_cuts")[1], "middle")
-        .otherwise("tail")
-    )
-    return (
-        scored.join(F.broadcast(cuts), lg.eqNullSafe(F.col("_lang")))
-        .select(*scored.columns, bucket.alias("ppl_bucket"))
-    )
+    nt = F.ntile(3).over(Window.partitionBy(lg).orderBy(s.asc(), F.col(id_col).asc()))
+    bucket = F.when(nt == 1, "head").when(nt == 2, "middle").otherwise("tail")
+    return scored.select(*scored.columns, bucket.alias("ppl_bucket"))
 
 
 def quality_ensemble(
@@ -1889,8 +1795,7 @@ def quality_ensemble(
     text_col: str,
     id_col: str,
     group_col: str,
-    scalable: bool | str = False,
-    auto_rows: int = 1_000_000,
+    scalable: bool = False,
 ) -> DataFrame:
     """Multi-signal quality RANK FUSION (the FineWeb/Dolma pattern:
     several weak quality filters, each noisy alone, fused by rank so no
@@ -1913,22 +1818,13 @@ def quality_ensemble(
     which is EXACT, not approximate — pinned identical output in
     pytest. The declared `quality_ensemble` query ships the scalable
     plan (VERDICT r10 #1: no declared plan funnels a dominant language
-    through one task); `scalable="auto"` observes the largest group's
-    row count (one partial-aggregated count, the hybrid_fusion_adaptive
-    precedent) and switches to grouped_ranks above `auto_rows` rows —
-    both branches exact, so the switch is invisible in results.
+    through one task).
     Output: (id, group, n_tokens, ttr_r, mean_len_r, r_tokens, r_ttr,
     r_len, fused_rank_r) — lower fused rank = higher ensemble
     quality."""
     from pyspark.sql import Window
 
     from ..functions.text import tokens
-
-    if scalable == "auto":
-        biggest = (
-            df.groupBy(group_col).count().agg(F.max("count")).first()[0]
-        )
-        scalable = bool(biggest and biggest > auto_rows)
 
     t = tokens(F.col(text_col))
     base = df.select(

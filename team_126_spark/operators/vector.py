@@ -58,20 +58,6 @@ def knn(
     return out.orderBy(F.desc(sim_name), F.col(id_col).asc()).limit(k)
 
 
-def euclidean_match(
-    df: DataFrame, vec_col: str, probe: list[float], tau: float, id_col: str
-) -> DataFrame:
-    """First row whose encoding is within distance tau of the probe (V8/J4)."""
-    pv = F.array(*[F.lit(float(x)) for x in probe])
-    return (
-        df.filter(F.col(vec_col).isNotNull())
-        .withColumn("distance", euclidean(F.col(vec_col), pv))
-        .filter(F.col("distance") < tau)
-        .orderBy(F.col("distance").asc(), F.col(id_col).asc())
-        .limit(1)
-    )
-
-
 def hybrid_search(
     df: DataFrame,
     vec_col: str,
@@ -134,7 +120,6 @@ def hybrid_search_adaptive(
     n_tables: int = 8,
     n_probe_bits: int = 6,
     score_round: int | None = None,
-    layout_dir: str | None = None,
 ) -> DataFrame:
     """Density-adaptive hybrid retrieval (VERDICT r8 #2: the static
     candidate_factor=3 over-fetch is a measured recall cliff — NDCG 0.971/
@@ -157,21 +142,10 @@ def hybrid_search_adaptive(
         prefix provably misses). One candidate set per score component
         of the fusion, then exact rescore + top-k.
 
-    At 100 TB the LSH prong rides the ingest-time partitioned layout —
-    EXECUTABLE as `write_lsh_layout` (explode bucket ids, partitionBy)
-    + `lsh_candidates_from_layout` (bucket ids become PartitionFilters;
-    candidate set pinned identical to the in-memory prong, files-read
-    pinned a strict subset, tests/test_geo_vector.py) — and the count
-    is a metadata-cheap aggregate. `layout_dir` wires that path in as
-    ONE call (VERDICT r10 #5): pass the `write_lsh_layout` directory
-    (built from the same corpus with the same dim/n_planes/n_tables)
-    and the similarity prong becomes a partition-pruned read of the
-    probed buckets' ids semi-joined onto the in-radius rows — pinned
-    result-identical to the in-memory prong, with the files-read
-    assertion running through THIS entry point in pytest. Deterministic: both prongs and the
-    dedup are value-defined (same row for an id either way), so the
-    result is oracle-checkable — queries.q_hybrid_fusion_adaptive
-    mirrors the branch AND the LSH integer plane family in DuckDB.
+    Deterministic: both prongs and the dedup are value-defined (same row
+    for an id either way), so the result is oracle-checkable —
+    queries.q_hybrid_fusion_adaptive mirrors the branch AND the LSH
+    integer plane family in DuckDB.
     Quality gate: tests/test_geo_vector.py pins NDCG@10 >= 0.97 /
     overlap >= 8 vs exact at BOTH fixture densities."""
     from .geo import radius_filter
@@ -182,27 +156,10 @@ def hybrid_search_adaptive(
         near = cands.orderBy(F.col("distance_km").asc(), F.col(id_col).asc()).limit(
             k * candidate_factor
         )
-        if layout_dir is not None:
-            # partition-pruned prong: ids from the probed buckets'
-            # directories only, semi-joined back onto the in-radius rows
-            # — same set as lsh_candidates(cands, ...) because the layout
-            # holds every corpus row under each of its bucket ids
-            hit_ids = lsh_candidates_from_layout(
-                df.sparkSession,
-                layout_dir,
-                probe_vec,
-                len(probe_vec),
-                id_col,
-                n_planes,
-                n_tables,
-                n_probe_bits,
-            ).select(id_col)
-            sem = cands.join(hit_ids, id_col, "left_semi")
-        else:
-            sem = lsh_candidates(
-                cands, vec_col, probe_vec, len(probe_vec), n_planes, n_tables,
-                n_probe_bits,
-            ).drop("lsh_buckets")
+        sem = lsh_candidates(
+            cands, vec_col, probe_vec, len(probe_vec), n_planes, n_tables,
+            n_probe_bits,
+        ).drop("lsh_buckets")
         cands = near.unionByName(sem).dropDuplicates([id_col])
     pv = F.array(*[F.lit(float(x)) for x in probe_vec])
     sim = F.when(F.col(vec_col).isNull(), F.lit(0.0)).otherwise(
@@ -458,10 +415,9 @@ def with_ivf_cell(df: DataFrame, vec_col: str, centroids: list[list[float]]) -> 
 def with_ivf_cell_broadcast(
     df: DataFrame, vec_col: str, centroids: list[list[float]]
 ) -> DataFrame:
-    """IVF assignment for LARGE n_cells — the cosine twin of
-    kmeans_assign_broadcast: the unit-normalized centroids become a
-    (cell, direction) TABLE (k rows, broadcast) instead of k inlined
-    literal expressions, so k is bounded by broadcast size (~k·dim·8
+    """IVF assignment for LARGE n_cells: the unit-normalized centroids
+    become a (cell, direction) TABLE (k rows, broadcast) instead of k
+    inlined literal expressions, so k is bounded by broadcast size (~k·dim·8
     bytes — k=100k at dim=64 is 51 MB), not by Janino method limits or
     codegen compile time. Needed when n_cells is sized for the corpus
     (semdedup: n_cells ∝ rows ⇒ 10⁵–10⁶ cells at 100 TB).
@@ -599,45 +555,6 @@ def cosine_calibration(
     )
 
 
-def ann_observed_recall(
-    approx: DataFrame,
-    exact: DataFrame,
-    id_col: str,
-    k: int,
-    name: str = "ann_recall",
-):
-    """Instrument an ANN result with observed recall@k against an exact
-    result — recall drift becomes a metric the job's EXISTING action emits
-    (VERDICT r4 #8), not a pytest-only property.
-
-    Returns (instrumented_df, observation): run one action on the
-    DataFrame, then `observation.get` reports `approx_rows`, `hits`
-    (approx ids that appear in the exact top-k), and `recall_at_k`
-    (hits / k). Production shape: `exact` is the brute-force top-k for a
-    SAMPLED probe set (both sides are k-row frames, so the broadcast
-    membership join costs nothing against the corpus scan that produced
-    them); a monitoring pass attaches this around the ANN call it already
-    runs and alerts on recall_at_k dropping below the dial's measured
-    floor (SCALING.md's 0.86 for the sf0.1 uniform corpus).
-    """
-    from ..metrics import observe_counts
-
-    marked = exact.select(F.col(id_col), F.lit(1).alias("_exact_hit"))
-    tagged = approx.join(F.broadcast(marked), id_col, "left").withColumn(
-        "_exact_hit", F.coalesce(F.col("_exact_hit"), F.lit(0))
-    )
-    inst, obs = observe_counts(
-        tagged,
-        name,
-        {
-            "approx_rows": F.count(F.lit(1)),
-            "hits": F.coalesce(F.sum("_exact_hit"), F.lit(0)).cast("bigint"),
-            "recall_at_k": F.coalesce(F.sum("_exact_hit"), F.lit(0)) / F.lit(float(k)),
-        },
-    )
-    return inst.drop("_exact_hit"), obs
-
-
 def quantized_knn(
     df: DataFrame,
     vec_col: str,
@@ -730,46 +647,6 @@ def quantized_knn(
 KMEANS_MAX_KDIM = 32_768
 
 
-def kmeans_assign_broadcast(
-    df: DataFrame, vec_col: str, id_col: str, centroids: list[list[float]]
-) -> DataFrame:
-    """Centroid assignment for LARGE k — the alternative the kmeans_lloyd
-    max_kdim guardrail names, shipped: centroids become a (cell, centroid)
-    TABLE (k rows, broadcast), every vector joins against all k, and one
-    min_by aggregate picks the nearest cell. No k-literal codegen
-    expression, so k is bounded by broadcast size (~k·dim·8 bytes — k=100k
-    at dim=64 is 51 MB, still broadcastable), not by Janino method limits.
-
-    Scale shape: broadcast nested-loop join emits n·k slim (id, cell, d2)
-    rows, but rows for one id are CONSECUTIVE in the same task, so the
-    min_by partial aggregation collapses them map-side — the shuffle
-    carries n rows, not n·k. Tie-break matches the codegen path exactly:
-    equal distances go to the lowest cell index (min_by on the
-    (d2, cell) struct's lexicographic order).
-    """
-    spark = df.sparkSession
-    cdf = spark.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
-        "cell int, _centroid array<double>",
-    )
-    d2 = F.aggregate(
-        F.zip_with(
-            F.col(vec_col),
-            F.col("_centroid"),
-            lambda x, y: (x.cast("double") - y) * (x.cast("double") - y),
-        ),
-        F.lit(0.0),
-        lambda a, v: a + v,
-    )
-    return (
-        df.filter(F.col(vec_col).isNotNull())
-        .join(F.broadcast(cdf))
-        .select(F.col(id_col), F.col("cell"), d2.alias("_d2"))
-        .groupBy(id_col)
-        .agg(F.min_by("cell", F.struct("_d2", "cell")).alias("cell"))
-    )
-
-
 def kmeans_lloyd(
     df: DataFrame,
     vec_col: str,
@@ -804,10 +681,10 @@ def kmeans_lloyd(
             f"kmeans_lloyd: k*dim = {k * dim} > max_kdim={max_kdim} — the "
             f"assignment step inlines k centroid literals into one codegen "
             f"expression, which degrades (interpreted fallback, Janino "
-            f"method-size limit) at this size; for large k use "
-            f"kmeans_assign_broadcast (the shipped (cell, centroid) "
-            f"broadcast-join + min_by path), or pass a higher max_kdim "
-            f"(or None) if you really mean it"
+            f"method-size limit) at this size; for large k use a "
+            f"broadcast (cell, centroid) table joined with a min_by "
+            f"aggregate (the with_ivf_cell_broadcast shape), or pass a "
+            f"higher max_kdim (or None) if you really mean it"
         )
     cents = ivf_centroids(df, vec_col, id_col, k)
     if len(cents) < k:
@@ -863,40 +740,6 @@ def kmeans_lloyd(
     # centroids (a loop-internal assignment would predate the last update —
     # the classic Lloyd off-by-one)
     return assigned(cents).select(id_col, "cell")
-
-
-def diversity_sample(
-    df: DataFrame,
-    vec_col: str,
-    id_col: str,
-    per_cell: int,
-    k: int = 8,
-    iters: int = 3,
-) -> DataFrame:
-    """Diversity-aware subset selection: cluster the embedding space with
-    kmeans_lloyd, then keep `per_cell` rows per cluster in stable
-    md5-priority order — the embedding-space analog of cap_per_source
-    (quota by TOPIC rather than provenance), used to keep a downsampled
-    corpus from collapsing onto its dominant mode.
-
-    One extra window shuffle on the (low-cardinality) cell key after the
-    k-means passes; selection order is a pure hash of the id, so the kept
-    set is stable under reruns, appends, and physical layout (the
-    stratified_sample rationale)."""
-    from pyspark.sql import Window
-
-    from ..functions.text import md5_low32
-
-    cells = kmeans_lloyd(df, vec_col, id_col, k=k, iters=iters)
-    w = Window.partitionBy("cell").orderBy(
-        md5_low32(F.col(id_col).cast("string")), F.col(id_col)
-    )
-    return (
-        df.join(cells, id_col)
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= int(per_cell))
-        .drop("_rn")
-    )
 
 
 def sign_project(
@@ -1018,8 +861,8 @@ def pca_power(
         more than the Arrow kernel pays for the same products).
         `gram='codegen'`: the fully-declarative nested-transform explode
         feeding a partially-aggregated groupBy(i, j) — survives as the
-        pinned reference kernel (the kmeans_assign_broadcast /simhash
-        precedent; test_pca_gram_arrow_matches_codegen pins equality).
+        pinned reference kernel (the simhash precedent;
+        test_pca_gram_arrow_matches_codegen pins equality).
         Per-dimension means ride the same pass (arrow) or a posexplode +
         partial agg (codegen).
       - everything after the two aggregates runs on dim×dim-row tables
@@ -1439,106 +1282,6 @@ def hard_negatives(
     )
 
 
-def kmeans_lloyd_distributed(
-    df: DataFrame,
-    vec_col: str,
-    id_col: str,
-    k: int = 8,
-    iters: int = 5,
-    stats: dict | None = None,
-) -> DataFrame:
-    """kmeans_lloyd with the centroid state kept IN THE CLUSTER — the
-    large-k / large-dim regime (VERDICT r8 watch item: the literal-path
-    update loop round-trips k·dim means through the driver every round;
-    here NO driver collect exists anywhere in the loop). Centroids live
-    as a broadcast (cell, centroid) table: assignment is the
-    kmeans_assign_broadcast shape (n·k slim rows collapsed map-side by
-    min_by, shuffle carries n rows), the update is one posexplode +
-    partial-agg avg per (cell, pos) rebuilt into arrays with
-    array_sort(collect_list(struct(pos, m))), and the k-row table is
-    localCheckpointed per round (plan depth linear — the logreg_gd
-    rule). Empty cells keep their previous centroid via left-join
-    coalesce. Init is the same bounded ivf_centroids md5 sample.
-
-    Semantics pinned equal to kmeans_lloyd on the fixture corpus
-    (identical init, per-round round-6 centroid quantization, identical
-    (d2, cell) tie-break; the one theoretical divergence is Python
-    HALF_EVEN vs Spark HALF_UP rounding on an exact 5e-7 boundary — a
-    measure-zero event for real-valued means, and the parity test would
-    surface it). `stats` adds one inertia action per round (stats-mode
-    only — without it the loop runs zero driver-facing actions beyond
-    the checkpoint jobs)."""
-    cents0 = ivf_centroids(df, vec_col, id_col, k)
-    if len(cents0) < k:
-        raise ValueError(
-            f"kmeans_lloyd_distributed: corpus has only {len(cents0)} "
-            f"non-null vectors < k={k}"
-        )
-    spark = df.sparkSession
-    cent_df = spark.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(cents0)],
-        "cell int, _centroid array<double>",
-    ).localCheckpoint()
-    base = (
-        df.filter(F.col(vec_col).isNotNull())
-        .select(F.col(id_col), F.col(vec_col).alias("_v"))
-        .localCheckpoint()
-    )
-    d2 = F.aggregate(
-        F.zip_with(
-            F.col("_v"),
-            F.col("_centroid"),
-            lambda x, y: (x.cast("double") - y) * (x.cast("double") - y),
-        ),
-        F.lit(0.0),
-        lambda a, v: a + v,
-    )
-    inertia_hist: list[float] = []
-    for _ in range(int(iters)):
-        assign = (
-            base.join(F.broadcast(cent_df))
-            .select(id_col, "_v", "cell", d2.alias("_d2"))
-            .groupBy(id_col)
-            .agg(
-                F.first("_v").alias("_v"),
-                F.min_by("cell", F.struct("_d2", "cell")).alias("cell"),
-                F.min("_d2").alias("_d2"),
-            )
-        )
-        upd = (
-            assign.select("cell", F.posexplode("_v").alias("pos", "val"))
-            .groupBy("cell", "pos")
-            .agg(F.round(F.avg(F.col("val").cast("double")), 6).alias("m"))
-        )
-        new_c = upd.groupBy("cell").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                lambda s: s["m"],
-            ).alias("_new")
-        )
-        if stats is not None:
-            inertia = assign.agg(F.sum("_d2")).first()[0]
-            inertia_hist.append(round(float(inertia), 6))
-        cent_df = (
-            cent_df.join(new_c, "cell", "left")
-            .select("cell", F.coalesce("_new", "_centroid").alias("_centroid"))
-            .localCheckpoint()
-        )
-    final = (
-        base.join(F.broadcast(cent_df))
-        .select(id_col, "cell", d2.alias("_d2"))
-        .groupBy(id_col)
-        .agg(F.min_by("cell", F.struct("_d2", "cell")).alias("cell"))
-    )
-    if stats is not None:
-        stats["inertia"] = inertia_hist
-        stats["centroids"] = [
-            [float(x) for x in r["_centroid"]]
-            for r in cent_df.orderBy("cell").collect()
-        ]
-    return final.select(id_col, "cell")
-
-
 def hard_negatives_scoped(
     corpus: DataFrame,
     anchors: DataFrame,
@@ -1549,7 +1292,6 @@ def hard_negatives_scoped(
     n_cells: int = 16,
     nprobe: int = 2,
     centroids: list[list[float]] | None = None,
-    assign: str = "literal",
 ) -> DataFrame:
     """The 100 TB path for `hard_negatives` (VERDICT r9 #2): mine each
     anchor's top-k different-label negatives from its IVF NEIGHBORHOOD
@@ -1563,14 +1305,10 @@ def hard_negatives_scoped(
     the ones probed — recall@k vs the exact pass is pinned ≥ 8/10 in
     pytest (the ann_quantized precedent).
 
-    Plan shape: one map-only cell assign over the corpus — `assign=
-    "literal"` (with_ivf_cell, codegen argmax; right for small n_cells)
-    or `assign="broadcast"` (with_ivf_cell_broadcast — the semdedup
-    recipe's dial for n_cells ∝ corpus, where literal argmax is
-    codegen-compile-bound; pinned result-identical in pytest) — then an
-    anchor→cell probe via a broadcast join on the (n_cells)-row
-    centroid table + per-anchor top-nprobe, ONE equi-join on the cell
-    id (hash join, no BNLJ) with the different-label residual, and the
+    Plan shape: one map-only cell assign over the corpus (with_ivf_cell,
+    codegen argmax), then an anchor→cell probe via a broadcast join on the
+    (n_cells)-row centroid table + per-anchor top-nprobe, ONE equi-join
+    on the cell id (hash join, no BNLJ) with the different-label residual, and the
     same per-anchor window top-k as the exact pass. At ingest scale
     the corpus side rides a `partitionBy("ivf_cell")` layout so each
     anchor's probe reads only its cells' files. Centroids are the
@@ -1592,10 +1330,7 @@ def hard_negatives_scoped(
         [(i, _unit(c)) for i, c in enumerate(cents)],
         "_cell int, _u array<double>",
     )
-    if assign not in ("literal", "broadcast"):
-        raise ValueError(f"hard_negatives_scoped: unknown assign={assign!r}")
-    assigner = with_ivf_cell if assign == "literal" else with_ivf_cell_broadcast
-    tagged = assigner(
+    tagged = with_ivf_cell(
         corpus.filter(F.col(vec_col).isNotNull()), vec_col, cents
     ).select(
         F.col(id_col).alias("negative_id"),
@@ -1639,59 +1374,6 @@ def hard_negatives_scoped(
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= k)
         .drop("rn")
-    )
-
-
-def write_lsh_layout(
-    df: DataFrame,
-    vec_col: str,
-    dim: int,
-    path: str,
-    n_planes: int = 8,
-    n_tables: int = 4,
-) -> None:
-    """Ingest-time LSH table layout (VERDICT r9 #6 — the executable form
-    of the claim in `hybrid_search_adaptive`'s docstring): compute each
-    row's `n_tables` bucket ids once, EXPLODE them, and write the corpus
-    `partitionBy("lsh_bucket")` — the classic LSH inverted-table layout,
-    n_tables× storage for partition-pruned probes. A probe then reads
-    ONLY its multi-probed buckets' directories (`lsh_candidates_from_
-    layout`), never the corpus: at 100 TB that turns the similarity
-    prong of every adaptive hybrid search from a full scan into a read
-    of ~2^n_probe_bits/2^n_planes of one table replica per table.
-    The plane family is the shared `lsh_bucket_kernel`, so buckets
-    written for dedup ingest (`with_lsh_buckets`) are the same ids this
-    layout partitions by."""
-    exploded = with_lsh_buckets(
-        df.filter(F.col(vec_col).isNotNull()), vec_col, dim, n_planes, n_tables
-    ).withColumn("lsh_bucket", F.explode("lsh_buckets")).drop("lsh_buckets")
-    exploded.write.mode("overwrite").partitionBy("lsh_bucket").parquet(path)
-
-
-def lsh_candidates_from_layout(
-    spark,
-    path: str,
-    probe: list[float],
-    dim: int,
-    id_col: str,
-    n_planes: int = 8,
-    n_tables: int = 4,
-    n_probe_bits: int = 4,
-) -> DataFrame:
-    """Probe the `write_lsh_layout` corpus: the probe's multi-probed
-    bucket ids become a partition filter (directory pruning — the files
-    read are exactly the probed buckets'), and rows matching in several
-    tables collapse to one candidate via a per-id dropDuplicates.
-    Candidate set is IDENTICAL to the in-memory prong
-    (`lsh_candidates`): same plane family, same margin-ordered
-    multi-probe expansion — pinned with a files-read assertion in
-    tests/test_geo_vector.py."""
-    targets = probe_buckets(probe, dim, n_planes, n_tables, n_probe_bits)
-    return (
-        spark.read.parquet(path)
-        .filter(F.col("lsh_bucket").isin(targets))
-        .dropDuplicates([id_col])
-        .drop("lsh_bucket")
     )
 
 

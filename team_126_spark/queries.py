@@ -2379,13 +2379,11 @@ def q_cap_per_source(spark, sf_dir):
     "median quality_score — the relative-threshold curation step (absolute "
     "thresholds misfire when sources differ in style). Median computed per "
     "group then BROADCAST back; comparison on round-6 values both sides. "
-    "exact=True matches the quantile_cont oracle; the operator's "
-    "exact=False dial swaps in percentile_approx for the 100 TB regime "
-    "(bounded-rank-error test in test_queries_smoke.py)",
+    "The exact percentile matches the quantile_cont oracle",
 )
 def q_quality_gate(spark, sf_dir):
     return TO.quality_gate(
-        load(spark, sf_dir, "documents"), "text", "doc_id", "source", exact=True
+        load(spark, sf_dir, "documents"), "text", "doc_id", "source"
     )
 
 
@@ -3917,22 +3915,17 @@ def q_doc_surprisal(spark, sf_dir):
     "being rare). Surprisal is the corpus-fit add-0.5 bigram LM of "
     "doc_surprisal (in CCNet the LM is a fixed reference corpus \u2014 the "
     "bucketing machinery, per-lang terciles, is what this op "
-    "contributes); the DECLARED plan is exact=True, scalable=True "
+    "contributes); the DECLARED plan is scalable=True "
     "(VERDICT r10 #1): grouped_ranks + the closed-form ntile "
     "((rank-1)*3)//n + 1 \u2014 bucket-IDENTICAL to the window ntile "
     "(pinned in pytest) with NO per-language single-task window "
-    "anywhere in the plan (asserted in tests/test_plans.py); "
-    "scalable='auto' switches on observed max group size, and "
-    "exact=False remains the sketch dial (percentile_approx cuts "
-    "broadcast back, VERDICT r9 #1)",
+    "anywhere in the plan (asserted in tests/test_plans.py)",
 )
 def q_ccnet_buckets(spark, sf_dir):
     docs = load(spark, sf_dir, "documents")
     sur = TO.bigram_surprisal(docs, "text", "doc_id")
     scored = docs.select("doc_id", "lang").join(sur, "doc_id")
-    return TO.ppl_buckets(
-        scored, "surprisal", "lang", "doc_id", exact=True, scalable=True
-    )
+    return TO.ppl_buckets(scored, "surprisal", "lang", "doc_id", scalable=True)
 
 
 _FIM_PCT = 50
@@ -4797,7 +4790,7 @@ def q_corpus_stats(spark, sf_dir):
     "distributions where mean±3σ misfires. Two tiny grouped medians "
     "BROADCAST back — the corpus is scanned once per median pass, never "
     "shuffled on doc keys; exact percentile == quantile_cont parity as in "
-    "quality_gate (swap percentile_approx at extreme group counts)",
+    "quality_gate",
 )
 def q_length_outliers(spark, sf_dir):
     l = load(spark, sf_dir, "documents").select(

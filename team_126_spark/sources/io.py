@@ -271,114 +271,3 @@ def write_bucketed(
     if sort_cols:
         w = w.sortBy(*sort_cols)
     w.saveAsTable(table)
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    lat_col: str,
-    lon_col: str,
-    n_files: int = 8,
-    bits: int = 16,
-    mode: str = "overwrite",
-) -> None:
-    """Z-order-clustered parquet layout: range-partition by the Morton key
-    (functions/geo.z_value) and sort within partitions, so every output
-    file covers a compact 2-D tile — per-file lat AND lon min/max stats
-    become tight simultaneously, and bounding-box scans prune most files
-    (the multi-dimensional analog of write_bucketed's pre-paid shuffle;
-    what Delta/Iceberg call OPTIMIZE ZORDER, expressed with stock Spark).
-    The z key is dropped before writing — it's a layout artifact, not data.
-    """
-    from ..functions.geo import z_value
-
-    (
-        df.withColumn("_z", z_value(F.col(lat_col), F.col(lon_col), bits))
-        .repartitionByRange(n_files, "_z")
-        .sortWithinPartitions("_z")
-        .drop("_z")
-        .write.mode(mode)
-        .parquet(path)
-    )
-
-
-def compact_parquet(
-    spark: SparkSession,
-    src_path: str,
-    dst_path: str,
-    target_mb: int = 128,
-) -> int:
-    """Small-file compaction: rewrite a parquet directory into
-    ceil(total_bytes / target_mb) files of roughly even size. Returns the
-    output file count.
-
-    The 100 TB hygiene op: streaming sinks, fine-grained partitioning, and
-    per-batch appends all accrete kilobyte files whose per-file open/footer
-    cost eventually dominates scans (the classic small-files problem).
-    Sizing reads the directory length through the Hadoop FileSystem API (so
-    it works on HDFS/S3A, not just local), and the rewrite is one
-    repartition — round-robin, no skew. Writes to a NEW path: compacting
-    in place while readers stream the source is a data-loss footgun, so
-    the atomic swap (rename/retarget) is left to the caller's catalog.
-    """
-    import math
-
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(src_path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    total = fs.getContentSummary(hpath).getLength()
-    n = max(1, math.ceil(total / (target_mb * 1024 * 1024)))
-    spark.read.parquet(src_path).repartition(n).write.mode("error").parquet(dst_path)
-    return n
-
-
-def write_orc(df: DataFrame, path: str, partition_by: list[str] | None = None,
-              mode: str = "overwrite") -> None:
-    """ORC sink (columnar alternative where the downstream stack is
-    Hive/Presto-flavored): same partition-pruning layout semantics as
-    write_parquet; ORC ships in Spark core, no extra package."""
-    w = df.write.mode(mode)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.orc(path)
-
-
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.orc(path)
-
-
-def write_csv(
-    df: DataFrame, path: str, header: bool = True, mode: str = "overwrite"
-) -> None:
-    """CSV sink (the report-export format; quoted/escaped per RFC defaults).
-    Not a scale format — no column pruning, no predicate pushdown, strings
-    all the way down — so it's for EXPORTS, not for the next stage's input:
-    feed pipelines parquet/ORC."""
-    df.write.mode(mode).option("header", str(header).lower()).csv(path)
-
-
-def read_binary_dir(
-    spark: SparkSession,
-    path: str,
-    glob: str | None = None,
-    max_bytes: int | None = None,
-) -> DataFrame:
-    """Raw-asset ingestion for the multimodal surface: Spark's binaryFile
-    source reads each file as one row — (path, modificationTime, length,
-    content binary) — the standard on-ramp that turns an image/audio
-    directory into the opaque-binary-column table the multimodal operators
-    (operators/multimodal.py) consume. Scan parallelism = files across the
-    cluster; pair with `media_meta`/`featurize` Pandas UDFs downstream.
-
-    `glob` filters by pathGlobFilter at the SOURCE (pushed into file
-    listing — never list-then-filter) and `max_bytes` guards against a
-    stray multi-GB asset inflating a task: the length predicate prunes on
-    the file-status metadata column, no content is read for skipped files.
-    """
-    reader = spark.read.format("binaryFile")
-    if glob:
-        reader = reader.option("pathGlobFilter", glob)
-    df = reader.load(path)
-    if max_bytes is not None:
-        df = df.filter(F.col("length") <= int(max_bytes))
-    return df

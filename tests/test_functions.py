@@ -671,10 +671,15 @@ def test_cosine_calibration_pair_budget_and_bins(spark):
 def test_dsir_importance_semantics(spark):
     """Target-like raw docs score a higher importance log-weight than
     off-target docs; target docs are excluded from the output; NULL/short
-    texts land at (0 bigrams, 0.0) instead of NULL/missing."""
+    texts land at (0 bigrams, 0.0) instead of NULL/missing; the fused
+    pass equals dsir_score ∘ dsir_bucket_ratios."""
     from pyspark.sql import functions as F
 
-    from team_126_spark.operators.textops import dsir_importance
+    from team_126_spark.operators.textops import (
+        dsir_bucket_ratios,
+        dsir_importance,
+        dsir_score,
+    )
 
     target_text = "alpha beta gamma alpha beta gamma alpha beta"
     rows = [
@@ -699,6 +704,15 @@ def test_dsir_importance_semantics(spark):
     # before length normalization
     assert out[3][1] > 0 > out[4][1]
     assert out[5] == (0, 0.0) and out[6] == (0, 0.0)
+    # the fused pass equals the composed fit ∘ score on the raw docs
+    ratios = dsir_bucket_ratios(df, "text", "doc_id", F.col("kind") == "t", buckets=256)
+    composed = {
+        r["doc_id"]: (r["n_bigrams"], r["dsir_logw"])
+        for r in dsir_score(
+            df.filter(F.col("kind") != "t"), "text", "doc_id", ratios, 256
+        ).collect()
+    }
+    assert composed == out
 
 
 def test_dsir_importance_deterministic_and_content_only(spark):
@@ -1028,60 +1042,6 @@ def test_fim_split_reassembles_and_selects_half(spark):
     assert again == {d: tuple(r) for d, r in got.items()}
 
 
-def test_ppl_buckets_approx_dial_matches_exact(spark):
-    """VERDICT r9 #1: the scale-safe ccnet cut (exact=False —
-    per-language percentile_approx cut values broadcast back) is pinned
-    against the exact ntile path on the fixture: identical buckets up to
-    the approx rank bound (mismatch only within ties/rank-error of a cut
-    value), per-(lang, bucket) counts within the tie width, and the
-    approx plan contains NO window/sort — the per-language single-task
-    funnel is gone."""
-    from team_126_spark.operators.textops import bigram_surprisal, ppl_buckets
-    from team_126_spark.queries import load
-
-    sf = "/root/testdata/sf0.001"
-    docs = load(spark, sf, "documents")
-    scored = (
-        docs.select("doc_id", "lang")
-        .join(bigram_surprisal(docs, "text", "doc_id"), "doc_id")
-        .localCheckpoint()
-    )
-    exact = {
-        r["doc_id"]: (r["lang"], r["ppl_bucket"])
-        for r in ppl_buckets(scored, "surprisal", "lang", "doc_id", exact=True).collect()
-    }
-    approx = {
-        r["doc_id"]: (r["lang"], r["ppl_bucket"])
-        for r in ppl_buckets(
-            scored, "surprisal", "lang", "doc_id", exact=False
-        ).collect()
-    }
-    assert set(exact) == set(approx) and len(exact) == 500
-    mismatched = [d for d in exact if exact[d] != approx[d]]
-    # rank bound: at accuracy=10k on <=500-row languages the sketch is
-    # exact; residual mismatches can only be ties AT a cut value, which
-    # ntile splits by doc_id but the value comparison cannot
-    assert len(mismatched) <= 0.02 * len(exact), len(mismatched)
-    from collections import Counter
-
-    ce, ca = Counter(exact.values()), Counter(approx.values())
-    assert all(abs(ce[k] - ca[k]) <= 2 for k in set(ce) | set(ca)), (ce, ca)
-
-    # plan shape: no Window (and hence no single-task per-lang sort)
-    # anywhere in the approx bucketing plan; the exact path has the ntile
-    ap = (
-        ppl_buckets(scored, "surprisal", "lang", "doc_id", exact=False)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    ep = (
-        ppl_buckets(scored, "surprisal", "lang", "doc_id", exact=True)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    # ("ntile(3)" not bare "ntile" — percentile_approx contains the substring)
-    assert "Window" not in ap and "ntile(3)" not in ap
-    assert "ntile(3)" in ep
-
-
 def test_quality_ensemble_hand_ranks(spark):
     """Hand-built group: ranks per signal and the fused mean are exactly
     the hand computation; ranks stay within-language."""
@@ -1184,12 +1144,12 @@ def test_ppl_buckets_scalable_exact_identical_to_ntile(spark):
     )
     win = {
         r["doc_id"]: r["ppl_bucket"]
-        for r in ppl_buckets(scored, "surprisal", "lang", "doc_id", exact=True).collect()
+        for r in ppl_buckets(scored, "surprisal", "lang", "doc_id").collect()
     }
     sca = {
         r["doc_id"]: r["ppl_bucket"]
         for r in ppl_buckets(
-            scored, "surprisal", "lang", "doc_id", exact=True, scalable=True
+            scored, "surprisal", "lang", "doc_id", scalable=True
         ).collect()
     }
     assert win == sca and len(win) == 500

@@ -146,11 +146,6 @@ def test_knn_exact_order_and_threshold(embs):
     assert [r["id"] for r in thr] == [1, 2]
 
 
-def test_euclidean_match_first_within_tau(embs):
-    got = OV.euclidean_match(embs, "emb", [1.0, 0.0, 0.0], tau=0.05, id_col="id").collect()
-    assert len(got) == 1 and got[0]["id"] == 1 and got[0]["distance"] == 0.0
-
-
 def test_hybrid_search_fuses_geo_and_semantic(spark):
     # two candidates: near+dissimilar vs far+similar; weight decides
     df = spark.createDataFrame(
@@ -408,65 +403,6 @@ def test_kmeans_kdim_guardrail(spark):
     assert df.columns == ["vec_id", "cell"]
 
 
-def test_diversity_sample_quota_and_stability(spark):
-    from team_126_spark.operators.vector import diversity_sample, kmeans_lloyd
-    from team_126_spark.tables import table
-
-    emb = table(spark, "/root/testdata/sf0.01", "embeddings").cache()
-    got = diversity_sample(emb, "embedding", "vec_id", per_cell=5, k=8, iters=2)
-    rows = got.collect()
-    from collections import Counter
-
-    per = Counter(r["cell"] for r in rows)
-    assert all(v <= 5 for v in per.values())
-    assert len(per) >= 4  # spans several clusters, not one mode
-    # stable under repartitioning
-    again = diversity_sample(
-        emb.repartition(9), "embedding", "vec_id", per_cell=5, k=8, iters=2
-    )
-    assert sorted(r["vec_id"] for r in again.collect()) == sorted(
-        r["vec_id"] for r in rows
-    )
-    emb.unpersist()
-
-
-def test_kmeans_assign_broadcast_matches_codegen(spark):
-    """The large-k broadcast-join assignment is cell-for-cell identical to
-    the codegen literal-expression path, including lowest-cell tie-breaks."""
-    from team_126_spark.operators.vector import (
-        ivf_centroids,
-        kmeans_assign_broadcast,
-        kmeans_lloyd,
-    )
-    from team_126_spark.tables import table
-
-    emb = table(spark, "/root/testdata/sf0.01", "embeddings").cache()
-    stats: dict = {}
-    codegen = {
-        r["vec_id"]: r["cell"]
-        for r in kmeans_lloyd(
-            emb, "embedding", "vec_id", k=8, iters=2, stats=stats
-        ).collect()
-    }
-    broadcast = {
-        r["vec_id"]: r["cell"]
-        for r in kmeans_assign_broadcast(
-            emb, "embedding", "vec_id", stats["centroids"]
-        ).collect()
-    }
-    assert codegen == broadcast
-    # explicit tie: two centroids at the same point -> lowest cell wins
-    df = spark.createDataFrame([(1, [1.0, 0.0]), (2, [0.0, 2.0])], ["id", "v"])
-    cells = {
-        r["id"]: r["cell"]
-        for r in kmeans_assign_broadcast(
-            df, "v", "id", [[0.0, 0.0], [0.0, 0.0], [0.0, 2.0]]
-        ).collect()
-    }
-    assert cells == {1: 0, 2: 2}
-    emb.unpersist()
-
-
 def test_pca_gram_arrow_matches_codegen(spark):
     """The Arrow Gram kernel (mapInPandas per-batch numpy X^T·X, VERDICT r6
     #2) is row-for-row identical to the declarative codegen explode across
@@ -706,41 +642,6 @@ def test_hard_negatives_matches_bruteforce(spark):
         assert all(l != al for _, l, _ in negs)
 
 
-def test_kmeans_distributed_matches_literal(spark):
-    """The no-driver-collect update loop (centroid state as a broadcast
-    table, VERDICT r8 watch item) produces the IDENTICAL assignment and
-    per-round inertia as the literal-path kmeans_lloyd: same md5-sample
-    init, same round-6 centroid quantization, same (d2, cell) tie-break,
-    same empty-cell retention."""
-    from team_126_spark.operators.vector import kmeans_lloyd, kmeans_lloyd_distributed
-    from team_126_spark.queries import _planted_neardup_corpus
-    from team_126_spark.tables import table
-
-    corpus = _planted_neardup_corpus(
-        table(spark, "/root/testdata/sf0.001", "embeddings")
-    )
-    s_lit, s_dist = {}, {}
-    lit = {
-        r["vec_id"]: r["cell"]
-        for r in kmeans_lloyd(
-            corpus, "embedding", "vec_id", k=8, iters=4, stats=s_lit
-        ).collect()
-    }
-    dist = {
-        r["vec_id"]: r["cell"]
-        for r in kmeans_lloyd_distributed(
-            corpus, "embedding", "vec_id", k=8, iters=4, stats=s_dist
-        ).collect()
-    }
-    assert dist == lit and len(lit) > 0
-    assert s_dist["inertia"] == s_lit["inertia"]
-    assert s_dist["centroids"] == s_lit["centroids"]
-    # inertia is monotonically non-increasing (Lloyd invariant)
-    assert all(
-        a >= b - 1e-6 for a, b in zip(s_dist["inertia"], s_dist["inertia"][1:])
-    )
-
-
 def test_hard_negatives_scoped_recall_on_planted(spark):
     """VERDICT r9 #2 recall pin (the ann_quantized >= 8/10 precedent, on
     the planted-structure fixture the LSH pins use): plant 2 wrong-label
@@ -795,60 +696,6 @@ def test_hard_negatives_scoped_recall_on_planted(spark):
     ), plan
 
 
-def test_lsh_layout_partition_pruned_probe_matches_memory(spark, tmp_path):
-    """VERDICT r9 #6: the ingest-time LSH layout (explode buckets,
-    partitionBy) gives a probe that (a) returns the IDENTICAL candidate
-    set to the in-memory prong lsh_candidates, (b) plans a
-    PartitionFilter on lsh_bucket, and (c) touches ONLY the probed
-    buckets' files — a strict subset of the layout."""
-    import glob as pyglob
-
-    from team_126_spark.operators.vector import (
-        lsh_candidates,
-        lsh_candidates_from_layout,
-        probe_buckets,
-        write_lsh_layout,
-    )
-    from team_126_spark.queries import _probe_embedding
-    from team_126_spark.tables import table
-
-    sf = "/root/testdata/sf0.001"
-    emb = table(spark, sf, "embeddings")
-    probe = _probe_embedding(spark, sf, vec_id=1)
-    layout = str(tmp_path / "lsh_layout")
-    write_lsh_layout(emb, "embedding", 64, layout, n_planes=8, n_tables=4)
-
-    got_df = lsh_candidates_from_layout(
-        spark, layout, probe, 64, "vec_id", n_planes=8, n_tables=4, n_probe_bits=4
-    )
-    got = {r["vec_id"] for r in got_df.collect()}
-    want = {
-        r["vec_id"]
-        for r in lsh_candidates(
-            emb, "embedding", probe, 64, n_planes=8, n_tables=4, n_probe_bits=4
-        ).collect()
-    }
-    assert got == want and got
-
-    plan = got_df._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "lsh_bucket" in plan
-
-    targets = set(probe_buckets(probe, 64, 8, 4, 4))
-    all_files = pyglob.glob(f"{layout}/lsh_bucket=*/*.parquet")
-    probed_files = [
-        p for p in all_files
-        if int(p.split("lsh_bucket=")[1].split("/")[0]) in targets
-    ]
-    assert 0 < len(probed_files) < len(all_files)
-    # the candidate ids are reconstructible from the probed files alone —
-    # the directories the partition filter prunes contribute nothing
-    from_probed = {
-        r["vec_id"]
-        for r in spark.read.parquet(*probed_files).dropDuplicates(["vec_id"]).collect()
-    }
-    assert from_probed == got
-
-
 def test_embedding_outliers_flags_planted_flip(spark):
     """Two tight clusters with labels 0/1 plus one vector whose label is
     FLIPPED: only the flipped row is anti-aligned with its own label
@@ -890,73 +737,6 @@ def test_kcenter_select_farthest_point_traversal(spark):
     assert got[1]["center_id"] == far
     d = [r["d_min_r"] for r in got[1:]]
     assert all(d[i] >= d[i + 1] for i in range(len(d) - 1))
-
-
-def test_hard_negatives_scoped_broadcast_assign_identical(spark):
-    """assign="broadcast" (the semdedup large-n_cells recipe) returns the
-    IDENTICAL mined set to the literal-argmax assign — the cell
-    assignment is pinned bit-identical upstream, so the whole scoped
-    pass must agree row-for-row."""
-    from team_126_spark.operators.vector import hard_negatives_scoped
-    from team_126_spark.tables import table
-
-    emb = table(spark, "/root/testdata/sf0.001", "embeddings")
-    anchors = emb.filter(F.col("vec_id") < 32)
-    key = lambda r: tuple(str(v) for v in r)  # noqa: E731
-    lit = sorted(
-        map(key, hard_negatives_scoped(
-            emb, anchors, "embedding", "vec_id", "label", k=3, assign="literal"
-        ).collect())
-    )
-    bk = sorted(
-        map(key, hard_negatives_scoped(
-            emb, anchors, "embedding", "vec_id", "label", k=3, assign="broadcast"
-        ).collect())
-    )
-    assert lit == bk and len(lit) == 96
-
-
-def test_hybrid_adaptive_layout_dir_prong_identical_and_pruned(spark, tmp_path):
-    """VERDICT r10 #5: the adaptive hybrid accepts the ingest-time LSH
-    layout directory so the 100 TB similarity prong is one call — the
-    result is IDENTICAL to the in-memory prong, and the layout-backed
-    plan carries the lsh_bucket PartitionFilter (directory pruning)
-    through THIS entry point."""
-    from pyspark.sql import functions as F
-
-    from team_126_spark.operators.vector import (
-        hybrid_search_adaptive,
-        write_lsh_layout,
-    )
-    from team_126_spark.queries import PROBE_LAT, PROBE_LON, _probe_embedding, load
-    from team_126_spark.tables import with_geo
-
-    sf = "/root/testdata/sf0.001"
-    c = with_geo(load(spark, sf, "customer"), "c_custkey")
-    emb = load(spark, sf, "embeddings")
-    corpus = c.withColumn("vec_id", F.col("c_custkey") % 500).join(emb, "vec_id")
-    probe = _probe_embedding(spark, sf)
-    layout = str(tmp_path / "hybrid_lsh_layout")
-    write_lsh_layout(corpus, "embedding", 64, layout, n_planes=8, n_tables=8)
-
-    kwargs = dict(
-        weight=0.5, exact_budget=1, score_round=6, n_planes=8, n_tables=8,
-        n_probe_bits=6,
-    )
-    mem = hybrid_search_adaptive(
-        corpus, "embedding", probe, PROBE_LAT, PROBE_LON, 30.0, 10, "c_custkey",
-        **kwargs,
-    )
-    lay = hybrid_search_adaptive(
-        corpus, "embedding", probe, PROBE_LAT, PROBE_LON, 30.0, 10, "c_custkey",
-        layout_dir=layout, **kwargs,
-    )
-    key = lambda r: (r["c_custkey"], round(r["combined_score"], 6))  # noqa: E731
-    got_mem, got_lay = sorted(map(key, mem.collect())), sorted(map(key, lay.collect()))
-    assert got_mem == got_lay and len(got_mem) == 10
-
-    plan = lay._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "lsh_bucket" in plan
 
 
 def test_mmr_select_trades_relevance_for_diversity(spark):

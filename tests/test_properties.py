@@ -787,28 +787,6 @@ def test_duplicated_spans_invariants(spark, xs):
 
 
 @settings(max_examples=5, deadline=None)
-@given(
-    st.lists(
-        st.text(alphabet=st.sampled_from(list("abcdefXYZ09_")), min_size=1, max_size=12),
-        min_size=1,
-        max_size=40,
-    )
-)
-def test_ordered_ranks_is_sorted_position(spark, vals):
-    """Property (round-10 primitive): ordered_ranks assigns every distinct
-    value exactly its index in the Python-sorted distinct list, for any
-    input multiset and any partition count."""
-    from team_126_spark.operators.relational import ordered_ranks
-
-    df = spark.createDataFrame([(v,) for v in vals], ["v"]).repartition(5)
-    want = {v: i for i, v in enumerate(sorted(set(vals)))}
-    got = {
-        r["v"]: r["rank"] for r in ordered_ranks(df, "v", partitions=3).collect()
-    }
-    assert got == want
-
-
-@settings(max_examples=5, deadline=None)
 @given(texts)
 def test_bpe_apply_conservation(spark, xs):
     """Property: BPE encode never increases symbol count beyond chars,

@@ -135,40 +135,6 @@ def test_session_scale_confs_pinned(spark):
     assert conf.get("spark.sql.execution.arrow.pyspark.enabled") == "true"
 
 
-def test_quality_gate_approx_dial_bounded_error(spark):
-    """The exact=False dial (percentile_approx, the 100 TB regime) produces
-    per-source medians within the [0.45, 0.55] exact-quantile band (rank
-    error bound 1/accuracy = 1e-4 << 0.05) and the same output schema."""
-    from pyspark.sql import functions as F
-
-    from team_126_spark.operators.textops import quality_gate
-    from team_126_spark.tables import table
-
-    docs = table(spark, SF_SMOKE, "documents")
-    approx = quality_gate(docs, "text", "doc_id", "source", exact=False)
-    exact = quality_gate(docs, "text", "doc_id", "source", exact=True)
-    assert approx.columns == exact.columns
-    am = {
-        r["source"]: r["src_median"]
-        for r in approx.select("source", "src_median").distinct().collect()
-    }
-    from team_126_spark.operators.textops import quality_expr
-
-    band = (
-        docs.select("source", quality_expr(F.col("text")).alias("q"))
-        .groupBy("source")
-        .agg(
-            F.percentile("q", F.lit(0.45)).alias("lo"),
-            F.percentile("q", F.lit(0.55)).alias("hi"),
-        )
-        .collect()
-    )
-    for r in band:
-        assert r["lo"] - 1e-6 <= am[r["source"]] <= r["hi"] + 1e-6, (
-            r["source"], r["lo"], am[r["source"]], r["hi"],
-        )
-
-
 def test_temperature_mix_semantics_and_float_margins(spark):
     """alpha=0.5 temperature mixing: the smallest source's multiplier > 1
     (up-sampled), the largest < 1 (thinned), expected volume ≈ corpus size.

@@ -1087,24 +1087,6 @@ def test_attribution_models_hand_computed(spark):
     assert got == {"view": (100.0, 0.0, 50.0), "click": (0.0, 100.0, 50.0)}
 
 
-def test_ordered_ranks_matches_global_sort(spark):
-    """ordered_ranks assigns each distinct value its 0-based position in
-    the total order WITHOUT a single-task global sort — pinned against
-    the plain sorted() oracle on a shuffled multi-partition input with
-    duplicates, and independent of the partition count knob."""
-    from team_126_spark.operators.relational import ordered_ranks
-
-    vals = [f"n{i:03d}" for i in range(97)] * 2 + ["aa", "zz"]
-    df = spark.createDataFrame([(v,) for v in vals], ["v"]).repartition(7)
-    want = {v: i for i, v in enumerate(sorted(set(vals)))}
-    for parts in (1, 4, 16):
-        got = {
-            r["v"]: r["rank"]
-            for r in ordered_ranks(df, "v", partitions=parts).collect()
-        }
-        assert got == want, parts
-
-
 def test_label_propagation_directed_seed(spark):
     """ADVICE r9: on a NON-symmetrized edge list, dst-only nodes are seeded
     too — every endpoint of every edge gets a community."""
@@ -1299,57 +1281,16 @@ def test_ppl_buckets_scalable_keeps_null_language_rows(spark):
     scored = spark.createDataFrame(rows, ["doc_id", "lang", "surprisal"])
     win = {
         r["doc_id"]: r["ppl_bucket"]
-        for r in ppl_buckets(scored, "surprisal", "lang", "doc_id", exact=True).collect()
+        for r in ppl_buckets(scored, "surprisal", "lang", "doc_id").collect()
     }
-    for kwargs in ({"scalable": True}, {"exact": False}):
-        got = {
-            r["doc_id"]: r["ppl_bucket"]
-            for r in ppl_buckets(
-                scored, "surprisal", "lang", "doc_id", **({"exact": True} | kwargs)
-            ).collect()
-        }
-        assert set(got) == set(win), kwargs  # null-lang rows retained
-        if kwargs.get("scalable"):
-            assert got == win
-
-
-def test_auto_dial_picks_path_by_observed_group_size(spark):
-    """scalable='auto' (VERDICT r10 #1): below auto_rows the window path
-    runs (plan has a group-partitioned window, no _p column); above it
-    every windowspecdefinition carries grouped_ranks' task-partition
-    column. Both branches are exact so results never differ."""
-    import contextlib
-    import io
-
-    from team_126_spark.operators.textops import ppl_buckets, quality_ensemble
-    from team_126_spark.tables import table
-
-    docs = table(spark, "/root/testdata/sf0.001", "documents")
-    scored = docs.select(
-        "doc_id", "lang", F.length("text").cast("double").alias("surprisal")
-    )
-
-    def specs(df):
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
-        return [ln for ln in buf.getvalue().splitlines() if "windowspecdefinition" in ln]
-
-    small = ppl_buckets(scored, "surprisal", "lang", "doc_id", scalable="auto",
-                        auto_rows=10**9)
-    assert any("_p#" not in ln for ln in specs(small))  # window path
-    big = ppl_buckets(scored, "surprisal", "lang", "doc_id", scalable="auto",
-                      auto_rows=10)
-    assert all("_p#" in ln for ln in specs(big))  # grouped_ranks path
-    key = lambda r: (r["doc_id"], r["ppl_bucket"])  # noqa: E731
-    assert sorted(map(key, small.collect())) == sorted(map(key, big.collect()))
-
-    qe_big = quality_ensemble(docs, "text", "doc_id", "lang", scalable="auto",
-                              auto_rows=10)
-    assert all("_p#" in ln for ln in specs(qe_big))
-    qe_small = quality_ensemble(docs, "text", "doc_id", "lang", scalable="auto",
-                                auto_rows=10**9)
-    assert any("_p#" not in ln for ln in specs(qe_small))
+    got = {
+        r["doc_id"]: r["ppl_bucket"]
+        for r in ppl_buckets(
+            scored, "surprisal", "lang", "doc_id", scalable=True
+        ).collect()
+    }
+    assert set(got) == set(win)  # null-lang rows retained
+    assert got == win
 
 
 def test_sliding_distinct_sketch_only_dial_and_span_guard(spark):

@@ -278,123 +278,6 @@ def test_summarize_envelope_null_status_counts_as_other(spark):
     assert s["vacancy_counts"]["vacant"] + s["vacancy_counts"]["other"] == s["total_records"]
 
 
-def test_zorder_layout_prunes_bbox_files(spark, tmp_path):
-    """Z-order clustering makes per-file lat AND lon min/max tight at the
-    same time: a bounding-box scan intersects strictly fewer files than on
-    a layout with the same file count clustered by neither (round-robin).
-    Checked against the actual parquet footer statistics."""
-    import pyarrow.parquet as pq
-    from pyspark.sql import functions as F
-
-    from team_126_spark.functions.geo import z_value
-    from team_126_spark.sources.io import write_zordered
-    from team_126_spark.tables import with_geo, table
-
-    c = with_geo(table(spark, "/root/testdata/sf0.01", "customer"), "c_custkey").select(
-        "c_custkey", "lat", "lon"
-    )
-    zpath, rpath = str(tmp_path / "zorder"), str(tmp_path / "plain")
-    write_zordered(c, zpath, "lat", "lon", n_files=8)
-    c.repartition(8).write.mode("overwrite").parquet(rpath)
-
-    def touched(path, lat_rng, lon_rng):
-        import glob
-
-        n = 0
-        for f in glob.glob(f"{path}/*.parquet"):
-            md = pq.ParquetFile(f).metadata
-            lo = {"lat": None, "lon": None}
-            hi = {"lat": None, "lon": None}
-            for rg in range(md.num_row_groups):
-                for ci in range(md.num_columns):
-                    col = md.row_group(rg).column(ci)
-                    name = col.path_in_schema
-                    if name in lo and col.statistics is not None:
-                        st = col.statistics
-                        lo[name] = st.min if lo[name] is None else min(lo[name], st.min)
-                        hi[name] = st.max if hi[name] is None else max(hi[name], st.max)
-            if (
-                lo["lat"] is not None
-                and not (hi["lat"] < lat_rng[0] or lo["lat"] > lat_rng[1])
-                and not (hi["lon"] < lon_rng[0] or lo["lon"] > lon_rng[1])
-            ):
-                n += 1
-        return n
-
-    box_lat, box_lon = (32.80, 32.85), (-117.20, -117.15)
-    nz = touched(zpath, box_lat, box_lon)
-    np_ = touched(rpath, box_lat, box_lon)
-    assert nz < np_, (nz, np_)
-    assert nz <= 3  # a small box lands in a few z-tiles, not all 8
-
-    # the filtered scan returns the same rows from both layouts
-    pred = (
-        (F.col("lat").between(*box_lat)) & (F.col("lon").between(*box_lon))
-    )
-    a = sorted(r["c_custkey"] for r in spark.read.parquet(zpath).filter(pred).collect())
-    b = sorted(r["c_custkey"] for r in spark.read.parquet(rpath).filter(pred).collect())
-    assert a == b and a
-
-    # z_value basics: interleaving is monotone-ish in locality (same cell →
-    # same key), clamps out-of-range coords, nulls propagate
-    row = spark.createDataFrame(
-        [(32.8, -117.2), (32.8, -117.2), (89.9999, 179.9999), (-999.0, 999.0), (None, 0.0)],
-        "lat double, lon double",
-    ).select(z_value(F.col("lat"), F.col("lon")).alias("z")).collect()
-    assert row[0]["z"] == row[1]["z"]
-    assert row[2]["z"] == (1 << 32) - 1  # top-right corner = all ones
-    assert row[3]["z"] is not None  # clamped, not an error
-    assert row[4]["z"] is None
-
-
-def test_compact_parquet_reduces_file_count(spark, tmp_path):
-    from team_126_spark.sources.io import compact_parquet
-
-    src, dst = str(tmp_path / "tiny"), str(tmp_path / "compacted")
-    df = spark.range(0, 10_000).selectExpr("id", "CAST(id AS STRING) AS s")
-    df.repartition(40).write.parquet(src)
-    import glob
-
-    assert len(glob.glob(f"{src}/*.parquet")) == 40
-    n = compact_parquet(spark, src, dst, target_mb=128)
-    files = glob.glob(f"{dst}/*.parquet")
-    assert n == len(files) == 1  # a few hundred KB fits one 128 MB target
-    a = sorted(r["id"] for r in spark.read.parquet(dst).collect())
-    assert a == list(range(10_000))
-    # refuses to clobber an existing destination (mode='error')
-    with pytest.raises(Exception):
-        compact_parquet(spark, src, dst)
-
-
-def test_orc_roundtrip_with_partition_pruning(spark, tmp_path):
-    from team_126_spark.sources.io import read_orc, write_orc
-
-    df = spark.createDataFrame(
-        [(1, "x", "a"), (2, "y", "b"), (3, "z", "a")], ["id", "v", "part"]
-    )
-    path = str(tmp_path / "orc")
-    write_orc(df, path, partition_by=["part"])
-    back = read_orc(spark, path)
-    assert sorted(r["id"] for r in back.collect()) == [1, 2, 3]
-    pruned = back.filter(F.col("part") == "a")
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [isnotnull(part" in plan
-    assert pruned.count() == 2
-
-
-def test_write_csv_roundtrips_through_bom_reader(spark, tmp_path):
-    from team_126_spark.sources.io import write_csv
-
-    df = spark.createDataFrame(
-        [(1, 'say "hi", ok'), (2, None)], ["id", "note"]
-    )
-    path = str(tmp_path / "csvout")
-    write_csv(df, path)
-    back = spark.read.option("header", "true").csv(path)
-    rows = {int(r["id"]): r["note"] for r in back.collect()}
-    assert rows == {1: 'say "hi", ok', 2: None}  # quoting/escaping survives
-
-
 def test_synthdocs_datasource_deterministic_and_partitioned(spark):
     """Python DataSource generator: reproducible rows, honored partition
     count, planted exact duplicates, and composes with the dedup operators."""
@@ -455,25 +338,3 @@ def test_synthvecs_datasource_geometry_and_determinism(spark):
             else:
                 cross += cos; nc += 1
     assert same / ns > cross / nc + 0.3  # planted anchors dominate noise
-
-
-def test_read_binary_dir_roundtrip(spark, tmp_path):
-    """binaryFile ingestion: each asset file becomes one (path, length,
-    content) row; pathGlobFilter prunes at listing; max_bytes prunes on
-    file-status metadata."""
-    from team_126_spark.sources.io import read_binary_dir
-
-    assets = tmp_path / "assets"
-    assets.mkdir()
-    (assets / "a.img").write_bytes(b"\x89IMG" + b"\x00" * 60)
-    (assets / "b.img").write_bytes(b"\x89IMG" + b"\xff" * 200)
-    (assets / "notes.txt").write_text("not an image")
-
-    df = read_binary_dir(spark, str(assets), glob="*.img")
-    rows = {r["path"].rsplit("/", 1)[-1]: r for r in df.collect()}
-    assert set(rows) == {"a.img", "b.img"}
-    assert rows["a.img"]["length"] == 64
-    assert bytes(rows["a.img"]["content"])[:4] == b"\x89IMG"
-
-    small = read_binary_dir(spark, str(assets), glob="*.img", max_bytes=100)
-    assert [r["path"].rsplit("/", 1)[-1] for r in small.collect()] == ["a.img"]

@@ -1,8 +1,9 @@
 """Simulate the driver's CORRECTNESS gate faithfully: a VANILLA
 SparkSession (no engine confs — the driver does not call tune_session
 before running queries) driving `__spark_entry__.queries()` /
-`oracle_sql()` against DuckDB at a given sf, comparing column names and
-order-insensitive canonicalized values.
+`oracle_sql()` against DuckDB at a given sf, comparing with the same
+`compare` as tools/oracle_check.py (column names, row count and
+order-insensitive canonicalized values).
 
 Differs from tools/oracle_check.py in two ways that matter for
 de-risking the actual gate: (1) plain `SparkSession.builder` instead of
@@ -17,7 +18,6 @@ Usage:
 
 from __future__ import annotations
 
-import math
 import os
 import sys
 
@@ -26,16 +26,7 @@ import duckdb
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as mod  # noqa: E402
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings".split()
-)
-
-
-def canon(v):
-    if isinstance(v, float):
-        return "nan" if math.isnan(v) else f"{v:.9g}"
-    return str(v)
+from tools.oracle_check import TABLES, compare  # noqa: E402
 
 
 def main() -> None:
@@ -63,25 +54,18 @@ def main() -> None:
     for n in names:
         try:
             sdf = qs[n](spark, sf_dir)
-            srows = sdf.collect()
-            scols = sorted(sdf.columns)
             if n not in osql:
                 n_rows_only += 1
-                print(f"  rows-only {n}: {len(srows)} rows")
+                print(f"  rows-only {n}: {len(sdf.collect())} rows")
                 continue
             cur = con.execute(osql[n])
-            ocols_raw = [d[0] for d in cur.description]
-            orows = cur.fetchall()
-            ok_cols = scols == sorted(ocols_raw)
-            sset = sorted(tuple(canon(r[c]) for c in scols) for r in srows)
-            oset = sorted(
-                tuple(canon(v) for _, v in sorted(zip(ocols_raw, r))) for r in orows
-            )
-            if ok_cols and sset == oset:
+            ocols = [d[0] for d in cur.description]
+            err = compare(n, sdf, cur.fetchall(), ocols)
+            if err is None:
                 n_pass += 1
             else:
                 fails.append(n)
-                print(f"  FAIL {n}: cols_match={ok_cols} rows {len(srows)} vs {len(orows)}")
+                print(f"  FAIL {n}: {err}")
         except Exception as e:  # pragma: no cover - diagnostic path
             fails.append(n)
             print(f"  ERROR {n}: {type(e).__name__} {str(e)[:140]}")

@@ -8,12 +8,13 @@ Usage: python tools/oracle_check.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from team_126_spark.queries import REGISTRY  # noqa: E402
 from team_126_spark.session import get_spark  # noqa: E402

@@ -16,7 +16,8 @@ import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from team_126_spark.queries import REGISTRY  # noqa: E402
 from team_126_spark.session import get_spark  # noqa: E402
@@ -57,7 +58,7 @@ def summarize(txt: str) -> str:
 def main() -> None:
     tag = sys.argv[1] if len(sys.argv) > 1 else "before"
     names = sys.argv[2:] or TARGETS
-    out_dir = os.path.join("/root/repo", "plans", f"r{ROUND}")
+    out_dir = os.path.join(ROOT, "plans", f"r{ROUND}")
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark("plan_capture")
     for name in names:

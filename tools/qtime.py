@@ -12,7 +12,7 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bench import EXTRA_BENCH  # noqa: E402
 from team_126_spark.queries import REGISTRY  # noqa: E402
