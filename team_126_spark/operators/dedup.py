@@ -14,13 +14,10 @@ All hashes are deterministic (xxhash64/md5 with fixed seeds), no RNG state.
 
 from __future__ import annotations
 
-import threading
-import weakref
 from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from pyspark.sql import Column
 
@@ -111,36 +108,6 @@ def ngram_jaccard_pairs(
 
 N_MINHASH = 64  # signature length; 16 bands × 4 rows
 
-# Last persisted signature table PER SparkSession (see minhash_lsh_pairs).
-# Keyed by the session object itself, weakly (ADVICE r3: id(session) can be
-# recycled by the allocator after GC, aliasing a dead session's entry onto a
-# new one) — identity keying means a live session can never collide with
-# another. NB the weak key rarely collects in practice: the cached DataFrame
-# VALUE strongly references its session (DataFrame._session), so an
-# abandoned-but-unstopped session stays pinned — which is the honest
-# lifecycle anyway, since its JVM-side cached table outlives Python refs
-# regardless; the isStopped() sweep below is what actually frees entries,
-# and stop()/release_signature_cache() are the deliberate cleanup paths.
-# The lock keeps concurrent calls — or two sessions in one process — from
-# unpersisting each other's live cache mid-query.
-_sig_cache_lock = threading.Lock()
-_live_sigs: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
-
-
-def release_signature_cache(spark=None) -> None:
-    """Eagerly release the signature cache persisted by the most recent
-    minhash_lsh_pairs call on `spark` (every session's if None; no-op if
-    none is live)."""
-    with _sig_cache_lock:
-        sessions = list(_live_sigs) if spark is None else [spark]
-        for sess in sessions:
-            sigs = _live_sigs.pop(sess, None)
-            if sigs is not None:
-                try:
-                    sigs.unpersist()
-                except Exception:
-                    pass
-
 
 def minhash_signatures(
     df: DataFrame, text_col: str, id_col: str, k: int = 3, hash_fn: str = "xxhash64"
@@ -163,6 +130,29 @@ def minhash_signatures(
     return pre.groupBy("doc").agg(
         minhash_from_hashes(F.collect_list("h")).alias("signature")
     )
+
+
+def _checkpointed_signatures(
+    df: DataFrame, text_col: str, id_col: str, k: int, hash_fn: str
+) -> DataFrame:
+    """Non-null signatures behind a lazy localCheckpoint: every consumer of
+    one corpus's signatures (banding, estimate re-attach, counts) reads one
+    signature job instead of replaying explode+hash+groupBy each."""
+    return (
+        minhash_signatures(df, text_col, id_col, k, hash_fn)
+        .filter(F.col("signature").isNotNull())
+        .localCheckpoint(eager=False)
+    )
+
+
+def _est_jaccard(sig_a: str, sig_b: str) -> Column:
+    """Estimated Jaccard of two signatures: the fraction of equal positions,
+    rounded to 6 decimals like the DuckDB twins."""
+    same = F.filter(
+        F.zip_with(F.col(sig_a), F.col(sig_b), lambda x, y: (x == y).cast("int")),
+        lambda v: v == 1,
+    )
+    return F.round(F.size(same) / float(N_MINHASH), 6)
 
 
 def banded_signatures(sigs: DataFrame, bands: int = 16) -> DataFrame:
@@ -226,15 +216,8 @@ def minhash_lsh_probe(
     estimate, and hash-family semantics as minhash_lsh_pairs, so md5-family
     runs carry a full DuckDB twin (declared query `minhash_incremental`).
     """
-    # Batch signatures feed BOTH the banding and the estimate re-attach; a
-    # lazy localCheckpoint computes the (batch-sized) signature job once
-    # instead of replaying explode+hash+groupBy per consumer.
     if new_sigs is None:
-        new_sigs = (
-            minhash_signatures(new_df, text_col, id_col, k, hash_fn)
-            .filter(F.col("signature").isNotNull())
-            .localCheckpoint(eager=False)
-        )
+        new_sigs = _checkpointed_signatures(new_df, text_col, id_col, k, hash_fn)
     banded_new = banded_signatures(new_sigs, bands).alias("n")
     banded_idx = (
         corpus_banded if corpus_banded is not None else banded_signatures(corpus_sigs, bands)
@@ -257,16 +240,10 @@ def minhash_lsh_probe(
     sc = corpus_sigs.select(
         F.col("doc").alias("corpus_id"), F.col("signature").alias("sig_b")
     )
-    est = F.size(
-        F.filter(
-            F.zip_with(F.col("sig_a"), F.col("sig_b"), lambda x, y: (x == y).cast("int")),
-            lambda v: v == 1,
-        )
-    ) / float(N_MINHASH)
     return (
         cand.join(sn, "new_id")
         .join(sc, "corpus_id")
-        .withColumn("est_jaccard", F.round(est, 6))
+        .withColumn("est_jaccard", _est_jaccard("sig_a", "sig_b"))
         .filter(F.col("est_jaccard") >= threshold)
         .select("new_id", "corpus_id", "est_jaccard")
         # Defense against duplicate index rows (e.g. a non-idempotent
@@ -304,45 +281,28 @@ def minhash_lsh_pairs(
     composed-chain order in tools/composed_chain.py and the e2e test);
     tests/test_dedup.py::test_exact_dedup_first_bounds_lsh_pairs pins the
     m=200 case: 19,900 pairs raw vs 0 after exact-dedup-first.
+
+    The signatures sit behind a lazy localCheckpoint: one signing job feeds
+    all three consumers, and nothing stays in the session's cache after
+    the query (a repeat call signs again).
     """
-    sigs_plan = minhash_signatures(df, text_col, id_col, k, hash_fn).filter(
-        F.col("signature").isNotNull()
+    return lsh_pairs_from_signatures(
+        _checkpointed_signatures(df, text_col, id_col, k, hash_fn), bands, threshold
     )
-    # The persist is released lazily: each call evicts the previous call's
-    # signature cache (repeated bench/probe invocations would otherwise
-    # accumulate cached tables for the session lifetime). Same-plan repeat
-    # calls share one CacheManager entry — unpersisting it would strand the
-    # new call uncached across its three consumers — so eviction only fires
-    # when the plan actually changed (sameSemantics). Eager cleanup:
-    # release_signature_cache().
-    sess = df.sparkSession
-    with _sig_cache_lock:
-        # evict entries whose sessions have stopped — the weak keying
-        # handles GARBAGE-COLLECTED sessions, but a stopped-yet-referenced
-        # session would otherwise pin its persisted handle forever
-        for other in list(_live_sigs):
-            if other is sess:
-                continue
-            try:
-                stopped = other._jsparkSession.sparkContext().isStopped()
-            except Exception:
-                stopped = True  # unreachable JVM handle == dead session
-            if stopped:
-                _live_sigs.pop(other, None)
-        prev = _live_sigs.get(sess)
-        if prev is not None:
-            try:
-                if not prev.sameSemantics(sigs_plan):
-                    prev.unpersist()
-            except Exception:
-                pass  # session of the old handle may already be stopped
-        sigs = sigs_plan.persist(StorageLevel.MEMORY_AND_DISK)
-        _live_sigs[sess] = sigs
-    # Candidate generation joins on SLIM (doc, band, bhash) rows — 24 bytes/row
-    # instead of dragging the 64-long signature through a 16×-exploded shuffle.
-    # Signatures are re-attached once per side afterwards from the persisted
-    # (signature-sized, ~520 B/doc) table; at 100 TB that persist is the
-    # standard LSH trade: signatures ≪ raw text, reused by three consumers.
+
+
+def lsh_pairs_from_signatures(
+    sigs: DataFrame, bands: int = 16, threshold: float = 0.5
+) -> DataFrame:
+    """The banding + verify half of minhash_lsh_pairs over a (doc,
+    signature) table of non-null signatures: (id_a < id_b, est_jaccard >=
+    threshold). `sigs` has three consumers (the banding and one estimate
+    re-attach per side), so pass it materialized — a localCheckpoint.
+
+    Candidate generation joins on SLIM (doc, band, bkey) rows instead of
+    dragging the 64-long signature through a `bands`×-exploded shuffle;
+    signatures (~520 B/doc, ≪ raw text) are re-attached once per side.
+    """
     banded = banded_signatures(sigs, bands)
     a, b = banded.alias("a"), banded.alias("b")
     cand = (
@@ -357,16 +317,10 @@ def minhash_lsh_pairs(
     )
     sa = sigs.select(F.col("doc").alias("id_a"), F.col("signature").alias("sig_a"))
     sb = sigs.select(F.col("doc").alias("id_b"), F.col("signature").alias("sig_b"))
-    est = F.size(
-        F.filter(
-            F.zip_with(F.col("sig_a"), F.col("sig_b"), lambda x, y: (x == y).cast("int")),
-            lambda v: v == 1,
-        )
-    ) / float(N_MINHASH)
     return (
         cand.join(sa, "id_a")
         .join(sb, "id_b")
-        .withColumn("est_jaccard", F.round(est, 6))
+        .withColumn("est_jaccard", _est_jaccard("sig_a", "sig_b"))
         .filter(F.col("est_jaccard") >= threshold)
         .select("id_a", "id_b", "est_jaccard")
     )
@@ -414,13 +368,15 @@ def lsh_blocking_eval(
     truth = ngram_jaccard_pairs(
         df, text_col, id_col, k=k, threshold=tmin, max_rows=max_rows
     ).select("id_a", "id_b", "jaccard")
+    # One signing pass feeds both the candidates and the n_sig scalar.
+    sigs = _checkpointed_signatures(df, text_col, id_col, k, hash_fn)
     # checkpoint: TWO consumers (the truth left-join and the n_cand scalar)
     # each re-ran the full banded self-join + estimate re-attach without it
     # (r12 plan read — the cand subtree appeared twice; guide §1.2). The
     # materialized table is candidate-pairs-sized, not corpus-sized.
-    cand = minhash_lsh_pairs(
-        df, text_col, id_col, k=k, bands=bands, threshold=0.0, hash_fn=hash_fn
-    ).select("id_a", "id_b", F.lit(1).alias("is_cand")).localCheckpoint()
+    cand = lsh_pairs_from_signatures(sigs, bands, threshold=0.0).select(
+        "id_a", "id_b", F.lit(1).alias("is_cand")
+    ).localCheckpoint()
     # one pass: every truth pair fans out to all thresholds (tiny, bounded by
     # the guarded truth size), conditional sums keep a row per threshold even
     # when n_truth is 0 for the stricter ones
@@ -436,11 +392,7 @@ def lsh_blocking_eval(
     )
     scalars = (
         cand.agg(F.count("*").cast("bigint").alias("n_cand"))
-        .crossJoin(
-            minhash_signatures(df, text_col, id_col, k, hash_fn)
-            .filter(F.col("signature").isNotNull())
-            .agg(F.count("*").cast("bigint").alias("n_sig"))
-        )
+        .crossJoin(sigs.agg(F.count("*").cast("bigint").alias("n_sig")))
     )
     total_pairs = F.col("n_sig") * (F.col("n_sig") - 1) / F.lit(2.0)
     return (
@@ -504,7 +456,7 @@ def dedup_components(
     edges_fwd = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
     edges = edges_fwd.union(
         edges_fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ).localCheckpoint(eager=False)  # read every round; the labels job below fills it
     labels = (
         edges.select(F.col("src").alias("id"))
         .distinct()
@@ -550,7 +502,6 @@ def dedup_components(
         changed = obs.get["changed"]
         if changed == 0:
             break
-    edges.unpersist()
     if stats is not None:
         stats["rounds"] = rounds
     if changed != 0:

@@ -249,19 +249,17 @@ def test_cluster_split_never_separates_near_dups(spark):
     assert joined.filter(F.col("split_a") != F.col("split_b")).count() == 0
 
 
-def test_signature_cache_scoped_and_releasable(spark, docs_df):
-    """The per-session signature cache holds at most this session's entry
-    after a call, and release_signature_cache() empties it (ADVICE r2:
-    cross-session unpersist race; r3 review: dead-session leak)."""
-    D.release_signature_cache()
-    assert len(D._live_sigs) == 0
+def test_dedup_family_leaves_no_cached_data(spark, docs_df):
+    """Signatures and components edges are lazy localCheckpoints, not
+    persists: after the dedup family runs, the session's cache manager is
+    empty, so a repeat call cannot silently read an earlier call's data."""
+    spark.catalog.clearCache()
     D.minhash_lsh_pairs(docs_df, "text", "doc_id").collect()
-    assert list(D._live_sigs) == [spark]
-    # a repeat call with the same plan keeps the same single entry
-    D.minhash_lsh_pairs(docs_df, "text", "doc_id").collect()
-    assert list(D._live_sigs) == [spark]
-    D.release_signature_cache(spark)
-    assert len(D._live_sigs) == 0
+    D.dedup_components(
+        D.minhash_lsh_pairs(docs_df, "text", "doc_id", threshold=0.2)
+    ).collect()
+    D.lsh_blocking_eval(docs_df, "text", "doc_id").collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_quadratic_baselines_guarded(spark):

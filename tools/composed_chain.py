@@ -71,33 +71,7 @@ def main() -> None:
         .localCheckpoint(),
     )
     # 2b. banding + candidate join + estimate verify, reusing the signatures
-    banded = D.banded_signatures(sigs, 16)
-    a, b = banded.alias("a"), banded.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bkey") == F.col("b.bkey"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        )
-        .select(F.col("a.doc").alias("id_a"), F.col("b.doc").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    sa = sigs.select(F.col("doc").alias("id_a"), F.col("signature").alias("sig_a"))
-    sb = sigs.select(F.col("doc").alias("id_b"), F.col("signature").alias("sig_b"))
-    est = F.size(
-        F.filter(
-            F.zip_with(F.col("sig_a"), F.col("sig_b"), lambda x, y: (x == y).cast("int")),
-            lambda v: v == 1,
-        )
-    ) / 64.0
-    pairs = (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn("est_jaccard", F.round(est, 6))
-        .filter(F.col("est_jaccard") >= 0.5)
-        .select("id_a", "id_b")
-    )
+    pairs = D.lsh_pairs_from_signatures(sigs, 16, 0.5).select("id_a", "id_b")
     pairs = timed("banding+pairs", lambda: pairs.localCheckpoint())
 
     # 3. components + canonical select

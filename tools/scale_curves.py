@@ -41,11 +41,14 @@ def _materialize(spark, fmt, rows, parts, path, **opts):
     return spark.read.parquet(path)
 
 
-def _time(df, runs=2) -> float:
+def _time(build, runs=2) -> float:
+    """Min-of-`runs` seconds to build a DataFrame and write it to the noop
+    sink. Each run builds inside the timer, so build-time jobs (eager
+    checkpoints) count and no run reads blocks an earlier run materialized."""
     ts = []
     for _ in range(runs):
         t0 = time.time()
-        df.write.format("noop").mode("overwrite").save()
+        build().write.format("noop").mode("overwrite").save()
         ts.append(time.time() - t0)
     return min(ts)
 
@@ -97,7 +100,7 @@ def main() -> None:
         for f in ops.values():
             f(tables[small].limit(3000)).write.format("noop").mode("overwrite").save()
         for name, f in ops.items():
-            a, b = _time(f(tables[small])), _time(f(tables[big]))
+            a, b = _time(lambda: f(tables[small])), _time(lambda: f(tables[big]))
             import math
 
             exp = math.log(b / a) / math.log(ratio) if a > 0 else float("nan")
