@@ -54,12 +54,8 @@ def _minhash_incremental_xx(spark, sf_dir):
     docs = _table(spark, sf_dir, "documents")
     from pyspark.sql import functions as F
 
-    corpus_sigs = (
-        _D.minhash_signatures(
-            docs.filter(F.col("source") != "src0"), "text", "doc_id", k=3
-        )
-        .filter(F.col("signature").isNotNull())
-        .localCheckpoint(eager=False)
+    corpus_sigs = _D.checkpointed_signatures(
+        docs.filter(F.col("source") != "src0"), "text", "doc_id", 3, "xxhash64"
     )
     return _D.minhash_lsh_probe(
         docs.filter(F.col("source") == "src0"), corpus_sigs, "text", "doc_id",

@@ -24,7 +24,7 @@ from pyspark.sql import Column
 from ..functions.sketch import minhash_from_hashes
 from ..functions.text import fingerprint, md5_low60, tokens, word_shingles
 from ..functions.vector import cosine_similarity
-from ..metrics import observe_counts
+from ..metrics import materialize
 from ..tables import spread
 
 
@@ -82,9 +82,9 @@ def ngram_jaccard_pairs(
     # the shingle explode without it (r12 plan read — the sizes branch and
     # the join sides scanned the corpus separately; guide §1.2). Bounded
     # storage: the operator is max_rows-guarded by contract.
-    sh = spread(df, id_col).select(
+    sh = materialize(spread(df, id_col).select(
         F.col(id_col).alias("doc"), F.explode(word_shingles(F.col(text_col), k)).alias("shingle")
-    ).localCheckpoint()
+    ))
     sizes = sh.groupBy("doc").agg(F.count("*").cast("bigint").alias("n_shingles"))
     a, b = sh.alias("a"), sh.alias("b")
     inter = (
@@ -132,16 +132,16 @@ def minhash_signatures(
     )
 
 
-def _checkpointed_signatures(
+def checkpointed_signatures(
     df: DataFrame, text_col: str, id_col: str, k: int, hash_fn: str
 ) -> DataFrame:
-    """Non-null signatures behind a lazy localCheckpoint: every consumer of
-    one corpus's signatures (banding, estimate re-attach, counts) reads one
-    signature job instead of replaying explode+hash+groupBy each."""
-    return (
-        minhash_signatures(df, text_col, id_col, k, hash_fn)
-        .filter(F.col("signature").isNotNull())
-        .localCheckpoint(eager=False)
+    """Non-null MinHash signatures behind a lazy checkpoint: every consumer
+    of one corpus's signatures (banding, estimate re-attach, counts, index
+    writes) reads one signature job instead of replaying explode + hash +
+    groupBy each. The first action on the result fills it."""
+    return materialize(
+        minhash_signatures(df, text_col, id_col, k, hash_fn).filter(F.col("signature").isNotNull()),
+        lazy=True,
     )
 
 
@@ -217,7 +217,7 @@ def minhash_lsh_probe(
     runs carry a full DuckDB twin (declared query `minhash_incremental`).
     """
     if new_sigs is None:
-        new_sigs = _checkpointed_signatures(new_df, text_col, id_col, k, hash_fn)
+        new_sigs = checkpointed_signatures(new_df, text_col, id_col, k, hash_fn)
     banded_new = banded_signatures(new_sigs, bands).alias("n")
     banded_idx = (
         corpus_banded if corpus_banded is not None else banded_signatures(corpus_sigs, bands)
@@ -287,7 +287,7 @@ def minhash_lsh_pairs(
     the query (a repeat call signs again).
     """
     return lsh_pairs_from_signatures(
-        _checkpointed_signatures(df, text_col, id_col, k, hash_fn), bands, threshold
+        checkpointed_signatures(df, text_col, id_col, k, hash_fn), bands, threshold
     )
 
 
@@ -369,14 +369,14 @@ def lsh_blocking_eval(
         df, text_col, id_col, k=k, threshold=tmin, max_rows=max_rows
     ).select("id_a", "id_b", "jaccard")
     # One signing pass feeds both the candidates and the n_sig scalar.
-    sigs = _checkpointed_signatures(df, text_col, id_col, k, hash_fn)
+    sigs = checkpointed_signatures(df, text_col, id_col, k, hash_fn)
     # checkpoint: TWO consumers (the truth left-join and the n_cand scalar)
     # each re-ran the full banded self-join + estimate re-attach without it
     # (r12 plan read — the cand subtree appeared twice; guide §1.2). The
     # materialized table is candidate-pairs-sized, not corpus-sized.
-    cand = lsh_pairs_from_signatures(sigs, bands, threshold=0.0).select(
+    cand = materialize(lsh_pairs_from_signatures(sigs, bands, threshold=0.0).select(
         "id_a", "id_b", F.lit(1).alias("is_cand")
-    ).localCheckpoint()
+    ))
     # one pass: every truth pair fans out to all thresholds (tiny, bounded by
     # the guarded truth size), conditional sums keep a row per threshold even
     # when n_truth is 0 for the stricter ones
@@ -454,14 +454,15 @@ def dedup_components(
     if max_iter < 1:
         raise ValueError(f"dedup_components: max_iter must be >= 1, got {max_iter}")
     edges_fwd = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-    edges = edges_fwd.union(
-        edges_fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint(eager=False)  # read every round; the labels job below fills it
-    labels = (
+    # read every round; the labels job below fills it
+    edges = materialize(
+        edges_fwd.union(edges_fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))),
+        lazy=True,
+    )
+    labels = materialize(
         edges.select(F.col("src").alias("id"))
         .distinct()
         .withColumn("label", F.col("id"))
-        .localCheckpoint()
     )
     changed = None
     rounds = 0
@@ -494,12 +495,12 @@ def dedup_components(
                 ).alias("label"),
                 F.col("_old"),
             )
-        stepped, obs = observe_counts(
-            stepped, "dedup_components", {"changed": F.count_if(F.col("label") != F.col("_old"))}
+        labels, got = materialize(
+            stepped, counts={"changed": F.count_if(F.col("label") != F.col("_old"))}
         )
-        labels = stepped.localCheckpoint().drop("_old")
+        labels = labels.drop("_old")
         rounds += 1
-        changed = obs.get["changed"]
+        changed = got["changed"]
         if changed == 0:
             break
     if stats is not None:
@@ -860,7 +861,7 @@ def simhash_pairs(
     # branches (both self-join sides + both hamming re-attach sides) — a
     # lazy localCheckpoint stops Spark replaying the explode + 64-sum
     # aggregate per branch (measured ~3× end-to-end at sf0.1)
-    sh = simhash64(df, text_col, id_col, hash_fn).localCheckpoint(eager=False)
+    sh = materialize(simhash64(df, text_col, id_col, hash_fn), lazy=True)
     base, extra = divmod(64, n_blocks)
     widths = [base + (1 if i < extra else 0) for i in range(n_blocks)]
     offs = [sum(widths[:i]) for i in range(n_blocks)]
@@ -1071,7 +1072,7 @@ def fuzzy_pairs(df: DataFrame, text_col: str, max_dist: int = 2) -> DataFrame:
     # plan otherwise computes the whole deletion-neighborhood explode +
     # string-slice pipeline twice (verified in the r11 plan audit — no
     # ReusedExchange fires because one side sits under a BroadcastExchange)
-    v = v.localCheckpoint()
+    v = materialize(v)
     a = v.select(F.col("name").alias("name_a"), "variant")
     b = v.select(F.col("name").alias("name_b"), "variant")
     return (
@@ -1351,7 +1352,7 @@ def edit_distance_pairs(
     # scan without it (r11, guide §1.2). Storage is the normalized residue
     # this fine-verifier pass is meant to run on (post-LSH), not the raw
     # corpus — and never an input the guard would have refused.
-    base = base.localCheckpoint()
+    base = materialize(base)
     w = -(-max_dist // len_bucket)  # ceil: the no-miss probe width
     probes = base.select(
         F.col("_id").alias("a_id"),

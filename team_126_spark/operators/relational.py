@@ -15,7 +15,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .. import tables
-from ..metrics import observe_counts
+from ..metrics import materialize
 
 
 def latest_per_group(df: DataFrame, keys: Sequence[str], ts: str, tiebreak: str) -> DataFrame:
@@ -460,9 +460,7 @@ def interval_join(
     # right/full: per-row id assigned ONCE (lazy localCheckpoint cuts the
     # lineage so the matched branch and the anti branch read the same ids —
     # monotonically_increasing_id over a recomputed plan would not be safe)
-    iv = intervals.withColumn("_iid", F.monotonically_increasing_id()).localCheckpoint(
-        eager=False
-    )
+    iv = materialize(intervals.withColumn("_iid", F.monotonically_increasing_id()), lazy=True)
     i = exploded(iv)
     point_side = "left" if how == "full" else "inner"
     joined = p.join(i, cond(i), point_side).drop("_pbucket", "_ibucket")
@@ -630,14 +628,14 @@ def hierarchy_resolve(
     """
     if max_iter < 1:
         raise ValueError(f"hierarchy_resolve: max_iter must be >= 1, got {max_iter}")
-    cur = df.select(
+    cur = materialize(df.select(
         F.col(id_col).alias("id"),
         F.coalesce(F.col(parent_col), F.col(id_col)).alias("ptr"),
         F.when(
             F.col(parent_col).isNull() | (F.col(parent_col) == F.col(id_col)),
             F.lit(0),
         ).otherwise(F.lit(1)).cast("bigint").alias("depth"),
-    ).localCheckpoint()
+    ))
     rounds = 0
     moved = None
     while moved != 0 and rounds < max_iter:
@@ -646,17 +644,16 @@ def hierarchy_resolve(
         hop = F.coalesce(F.col("b.depth"), F.lit(0))
         # fixpoint: nothing moved this round. Depths are >= 0, so a row
         # advanced exactly when its pointer's depth was added to its own.
-        step, obs = observe_counts(
+        cur, got = materialize(
             a.join(b, F.col("a.ptr") == F.col("b.id"), "left"),
-            "hierarchy_resolve",
-            {"moved": F.count_if(hop > 0)},
+            counts={"moved": F.count_if(hop > 0)},
+            select=[
+                F.col("a.id").alias("id"),
+                F.coalesce(F.col("b.ptr"), F.col("a.ptr")).alias("ptr"),
+                (F.col("a.depth") + hop).alias("depth"),
+            ],
         )
-        cur = step.select(
-            F.col("a.id").alias("id"),
-            F.coalesce(F.col("b.ptr"), F.col("a.ptr")).alias("ptr"),
-            (F.col("a.depth") + hop).alias("depth"),
-        ).localCheckpoint()
-        moved = obs.get["moved"]
+        moved = got["moved"]
     if moved != 0:
         raise RuntimeError(
             f"hierarchy_resolve: no fixpoint after {rounds} pointer-doubling "
@@ -728,29 +725,26 @@ def pagerank(
     # degree-annotated join below all derive from it, and without the
     # cut each checkpoint would re-run the caller's upstream plan
     # (measured 2x the whole setup cost on the trade graph)
-    e = e.localCheckpoint()
+    e = materialize(e)
     # |V| sets every rank, so it must be exact: the observation sits in the
     # checkpoint job's result stage, where Spark applies each task's
     # accumulator update once even if the task is retried
-    nodes, obs = observe_counts(
+    nodes, sizes = materialize(
         e.select(F.col("src").alias("node"), F.lit(True).alias("has_out"))
         .union(e.select(F.col("dst").alias("node"), F.lit(False).alias("has_out")))
         .groupBy("node")
         .agg(F.max("has_out").alias("has_out")),
-        "pagerank",
-        {"n": F.count(F.lit(1)), "n_dangling": F.count_if(~F.col("has_out"))},
+        counts={"n": F.count(F.lit(1)), "n_dangling": F.count_if(~F.col("has_out"))},
     )
-    nodes = nodes.localCheckpoint()
-    sizes = obs.get
     n, has_dangling = sizes["n"], sizes["n_dangling"] > 0
     if n == 0:
         return nodes.select("node", F.lit(0.0).alias("pr"))
     deg = e.groupBy("src").agg(F.count("*").alias("out_deg"))
     # Degree-annotated edges are reused every round: checkpoint once.
-    e_deg = e.join(deg, "src").localCheckpoint()
+    e_deg = materialize(e.join(deg, "src"))
     dangling = nodes.filter(~F.col("has_out"))
     teleport = (1.0 - damping) / n
-    ranks = nodes.select("node", F.lit(1.0 / n).alias("pr")).localCheckpoint()
+    ranks = materialize(nodes.select("node", F.lit(1.0 / n).alias("pr")))
     for _ in range(iterations):
         contrib = (
             e_deg.join(ranks, e_deg["src"] == ranks["node"])
@@ -770,9 +764,9 @@ def pagerank(
                 "node",
                 (F.col("in_mass") + F.col("_dang") / n).alias("in_mass"),
             )
-        ranks = nxt.select(
+        ranks = materialize(nxt.select(
             "node", (F.lit(teleport) + F.lit(damping) * F.col("in_mass")).alias("pr")
-        ).localCheckpoint()
+        ))
     if stats is not None:
         stats["iterations"] = iterations
         stats["n_nodes"] = n
@@ -869,14 +863,13 @@ def triangle_count(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
     clustering_r = round(3 * triangles / wedges, 6), NULL when the graph
     has no wedge.
     """
-    und = (
+    und = materialize(
         edges.select(
             F.least(F.col(src_col), F.col(dst_col)).alias("u"),
             F.greatest(F.col(src_col), F.col(dst_col)).alias("v"),
         )
         .filter(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint()
     )
     deg = (
         und.select(F.col("u").alias("node"))
@@ -887,7 +880,7 @@ def triangle_count(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
     # orient each edge from lower (deg, node) to higher (deg, node)
     du = deg.select(F.col("node").alias("u"), F.col("deg").alias("deg_u"))
     dv = deg.select(F.col("node").alias("v"), F.col("deg").alias("deg_v"))
-    ori = (
+    ori = materialize(
         und.join(du, "u")
         .join(dv, "v")
         .select(
@@ -900,7 +893,6 @@ def triangle_count(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
             .alias("e")
         )
         .select("e.a", "e.b")
-        .localCheckpoint()
     )
     e1 = ori.select(F.col("a").alias("x"), F.col("b").alias("y"))
     e2 = ori.select(F.col("a").alias("y"), F.col("b").alias("z"))
@@ -1114,12 +1106,11 @@ def logreg_gd(
         # with iters — the pagerank eager-checkpoint pattern; measured
         # 9.2 s -> 4.2 s at sf0.1 for the 6-round distiller, identical
         # values (the checkpoint is value-neutral)
-        w = (
+        w = materialize(
             w.join(grad, "i")
             .select(
                 "i", F.round(F.col("w") - float(lr) * F.col("g"), round_dp).alias("w")
             )
-            .localCheckpoint()
         )
     return w
 
@@ -1237,15 +1228,14 @@ def label_propagation(
         # same dial as pagerank: a caller that proves its edge list unique
         # skips the full-edge dedup shuffle (guide §2.4); pinned identical
         e = e.distinct()
-    e = e.localCheckpoint()
+    e = materialize(e)
     # seed from BOTH endpoints (ADVICE r9): dst-only nodes of a directed
     # edge list are communities too, and the neighbor join must find them
-    labels = (
+    labels = materialize(
         e.select(F.col("a").alias("node"))
         .union(e.select(F.col("b").alias("node")))
         .distinct()
         .select("node", F.col("node").alias("lbl"))
-        .localCheckpoint()
     )
     # nodes with no outgoing edge keep their seed label forever: the
     # neighbor join is a-sided, so they are never re-labeled by any round.
@@ -1255,13 +1245,11 @@ def label_propagation(
     # inputs, like the declared query's, the set is simply empty). Its
     # row count, observed inside the checkpoint job, skips even the union
     # on such graphs.
-    stranded, obs = observe_counts(
+    stranded, got = materialize(
         labels.join(e.select(F.col("a").alias("node")).distinct(), "node", "left_anti"),
-        "label_propagation",
-        {"n_stranded": F.count(F.lit(1))},
+        counts={"n_stranded": F.count(F.lit(1))},
     )
-    stranded = stranded.localCheckpoint()
-    has_stranded = obs.get["n_stranded"] > 0
+    has_stranded = got["n_stranded"] > 0
     for _ in range(int(iters)):
         labels = (
             e.join(labels, e["b"] == labels["node"])
@@ -1275,7 +1263,7 @@ def label_propagation(
             # re-attach the stranded seeds (directed graphs only —
             # symmetrized inputs never hit it)
             labels = labels.unionByName(stranded)
-        labels = labels.localCheckpoint()
+        labels = materialize(labels)
     return labels.select("node", F.col("lbl").alias("community"))
 
 
@@ -1446,10 +1434,9 @@ def grouped_ranks(
     null-group row, the ADVICE r10 finding). Output: the input rows
     plus `out`."""
     n = int(partitions or df.sparkSession.sparkContext.defaultParallelism)
-    parts = (
+    parts = materialize(
         df.repartitionByRange(n, F.col(group_col), *order)
         .withColumn("_p", F.spark_partition_id())
-        .localCheckpoint()
     )
     local = F.row_number().over(
         Window.partitionBy("_p", group_col).orderBy(*order)

@@ -22,6 +22,7 @@ from ..functions.text import (
     token_count,
     tokens,
 )
+from ..metrics import materialize
 
 
 def text_profile(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -1356,11 +1357,10 @@ def dsir_importance(
     every intermediate DuckDB-reproducible (swap xxhash64 in production,
     the sketch-family precedent). Fit-once/score-many callers (and the
     streaming surface) keep using dsir_bucket_ratios + dsir_score."""
-    db = (
+    db = materialize(  # three consumers: target fit, raw fit, score
         _bigram_buckets(df, text_col, id_col, buckets, is_target)
         .groupBy("doc", "is_t", "b")
         .agg(F.count("*").cast("double").alias("c"))
-        .localCheckpoint()  # three consumers: target fit, raw fit, score
     )
     ratios = _dsir_log_ratios(db, buckets, k_smooth)
     per_doc = (
@@ -1474,7 +1474,7 @@ def _distill_fit(
     # train semi-join AND the final scoring join: without the cut the
     # text-processing pass re-ran ~(iters + 2) times per query. The
     # materialized table is 3 slim columns per doc.
-    base = df.select(
+    base = materialize(df.select(
         F.col(id_col),
         (quality_expr(F.col(text_col)) >= F.lit(float(teacher_min))).alias(
             "y_teacher"
@@ -1486,7 +1486,7 @@ def _distill_fit(
             )
             < train_pct
         ).alias("is_train"),
-    ).localCheckpoint()
+    ))
     cnt = (
         _bigram_buckets(df, text_col, id_col, buckets)
         .groupBy("doc", "b")
@@ -1516,9 +1516,8 @@ def _distill_fit(
     # aggregates map-side before its exchange, so there is no corpus-sized
     # re-shuffle to save, and the spread only ADDED a full-triple exchange
     # (the driver measured it ×1.31 slower with 8-vs-32-core anti-scaling).
-    exall = (
-        prop.unionByName(lenf).unionByName(bias)
-    ).localCheckpoint()  # reused by every GD round (dot + gradient) + scoring
+    # reused by every GD round (dot + gradient) + scoring
+    exall = materialize(prop.unionByName(lenf).unionByName(bias))
     train_ids = base.filter(F.col("is_train")).select(
         F.col(id_col).alias("rid"),
         F.when(F.col("y_teacher"), 1.0).otherwise(0.0).alias("y"),
@@ -1651,9 +1650,7 @@ def _bpe_train_full(df: DataFrame, text_col: str, n_merges: int, need_vocab: boo
     # `word` rides along only when the caller wants the folded vocab back
     # (bpe_apply reuse); train-only callers keep the original slim rows
     keep = ("word", "cnt") if need_vocab else ("cnt",)
-    syms_df = words.select(
-        *keep, F.split("word", "").alias("syms")
-    ).localCheckpoint()
+    syms_df = materialize(words.select(*keep, F.split("word", "").alias("syms")))
     merges: list[tuple[int, str, str, int]] = []
     for r in range(1, n_merges + 1):
         pairs = (
@@ -1679,9 +1676,7 @@ def _bpe_train_full(df: DataFrame, text_col: str, n_merges: int, need_vocab: boo
         merges.append((r, a, b, c))
         if not need_vocab and r == n_merges:
             break  # nothing reads the post-final-merge vocab
-        syms_df = syms_df.select(
-            *keep, F.expr(_bpe_fold_sql(a, b)).alias("syms")
-        ).localCheckpoint()
+        syms_df = materialize(syms_df.select(*keep, F.expr(_bpe_fold_sql(a, b)).alias("syms")))
     return merges, (syms_df if need_vocab else None)
 
 
@@ -1774,7 +1769,7 @@ def ppl_buckets(
     if scalable:
         from .relational import grouped_ranks
 
-        base = scored.localCheckpoint()
+        base = materialize(scored)
         ranked = grouped_ranks(
             base, lang_col, [s.asc(), F.col(id_col).asc()], out="_rk"
         )
@@ -1852,7 +1847,7 @@ def quality_ensemble(
     if scalable:
         from .relational import grouped_ranks
 
-        base = base.localCheckpoint()
+        base = materialize(base)
         ranked = base
         for col, out in (
             ("n_tokens", "r_tokens"), ("_ttr", "r_ttr"), ("_mlen", "r_len")
@@ -1992,10 +1987,10 @@ def doremi_weights(
     # one row per DOMAIN: checkpoint so the three downstream consumers
     # (total, excess, softmax denominator) reuse it instead of re-running
     # the surprisal model fit per branch (plan audit: 124 → ~30 exchanges)
-    dom = per.groupBy("domain").agg(
+    dom = materialize(per.groupBy("domain").agg(
         F.count("*").cast("bigint").alias("n_docs"),
         F.sum("_s").alias("_sum"),
-    ).localCheckpoint()
+    ))
     tot = dom.agg(
         F.sum("_sum").alias("_tsum"), F.sum("n_docs").alias("_tn")
     )
@@ -2084,15 +2079,11 @@ def bpe_apply(
     if trained_vocab is not None:
         vocab = trained_vocab.select("word", "syms")
     else:
-        vocab = (
-            docw.select("word").distinct()
-            .select("word", F.split("word", "").alias("syms"))
-            .localCheckpoint()
+        vocab = materialize(
+            docw.select("word").distinct().select("word", F.split("word", "").alias("syms"))
         )
         for a, b in merges:
-            vocab = vocab.select(
-                "word", F.expr(_bpe_fold_sql(a, b)).alias("syms")
-            ).localCheckpoint()
+            vocab = materialize(vocab.select("word", F.expr(_bpe_fold_sql(a, b)).alias("syms")))
     enc = vocab.select(
         "word",
         F.length("word").cast("bigint").alias("_nc"),
@@ -2268,11 +2259,11 @@ def curriculum_order(
 
     from .relational import grouped_ranks
 
-    base = df.select(
+    base = materialize(df.select(
         F.col(id_col),
         F.col(group_col).alias("_g"),
         token_count(F.col(text_col)).alias("n_tokens"),
-    ).localCheckpoint()
+    ))
     ranked = grouped_ranks(
         base, "_g", [F.asc("n_tokens"), F.asc(id_col)], out="_rk"
     )

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.vector import cosine_similarity, distance_score, euclidean, fuse_scores
+from ..metrics import materialize
 
 
 def _py_norm(v) -> float:
@@ -716,15 +717,18 @@ def kmeans_lloyd(
         )
 
     for _ in range(int(iters)):
-        assign = assigned(cents)
+        # the same collect returns this assignment's inertia: each row's _d2
+        # rides into every exploded position, so the pos == 0 groups count
+        # each row once (summed after the exchange, never observed below it)
         upd = (
-            assign.select("cell", F.posexplode("_v").alias("pos", "val"))
+            assigned(cents)
+            .select("cell", "_d2", F.posexplode("_v").alias("pos", "val"))
             .groupBy("cell", "pos")
-            .agg(F.avg(F.col("val").cast("double")).alias("m"))
+            .agg(F.avg(F.col("val").cast("double")).alias("m"), F.sum("_d2").alias("d2"))
             .collect()
         )
-        inertia = assign.agg(F.sum("_d2")).first()[0]
-        inertia_hist.append(round(float(inertia), 6))
+        inertia = math.fsum(r["d2"] for r in upd if r["pos"] == 0 and r["d2"] is not None)
+        inertia_hist.append(round(inertia, 6))
         nxt = [list(c) for c in cents]  # empty cells keep previous centroid
         acc: dict[int, dict[int, float]] = {}
         for r in upd:
@@ -869,7 +873,7 @@ def pca_power(
         (4096 rows at dim 64): per round one equi-join of the rank-1
         vector onto the covariance table + one partial agg + one
         single-row norm broadcast. No driver collect anywhere.
-      - each round's vector is localCheckpoint(eager=False)ed so the
+      - each round's vector is lazily materialized so the
         unrolled plan stays LINEAR in rounds (the vector is consumed
         twice per round; without the cut the subtree doubles per round).
 
@@ -977,13 +981,13 @@ def pca_power(
             ).alias("c"),
         )
     )
-    cov = (
+    cov = materialize(  # feeds every round + the Rayleigh agg
         cov0.unionByName(
             cov0.filter(F.col("i") != F.col("j")).select(
                 F.col("j").alias("i"), F.col("i").alias("j"), "c"
             )
-        )
-        .localCheckpoint(eager=False)  # feeds every round + the Rayleigh agg
+        ),
+        lazy=True,
     )
 
     spark = df.sparkSession
@@ -997,10 +1001,10 @@ def pca_power(
             .agg(F.sum(F.col("c") * F.col("v")).alias("w"))
         )
         nrm = w.agg(F.sqrt(F.sum(F.col("w") * F.col("w"))).alias("_n"))
-        v = (
+        v = materialize(  # keep the unrolled plan linear
             w.crossJoin(F.broadcast(nrm))
-            .select("i", F.round(F.col("w") / F.col("_n"), sync_dp).alias("v"))
-            .localCheckpoint(eager=False)  # keep the unrolled plan linear
+            .select("i", F.round(F.col("w") / F.col("_n"), sync_dp).alias("v")),
+            lazy=True,
         )
 
     sgn_row = v.agg(
@@ -1133,10 +1137,9 @@ def semdedup(
     # final anti-join — without it the n_cells·dim argmax expression is
     # compiled and evaluated once per branch (the pmi_cooccur precedent;
     # measured 3.8 s → 2.4 s at sf0.1 for identical output)
-    a = (
+    a = materialize(
         assigner(df.filter(F.col(vec_col).isNotNull()), vec_col, cents)
         .select(F.col(id_col), F.col(vec_col), F.col("ivf_cell").alias("cell"))
-        .localCheckpoint()
     )
     # norms once per ROW before the pair join, not per pair — 5× fewer
     # array folds in the quadratic hot loop (embedding_neardup_exact
@@ -1450,10 +1453,9 @@ def kcenter_select(
     for the seed round)."""
     from ..functions.text import md5_low32
 
-    base = (
+    base = materialize(
         df.filter(F.col(vec_col).isNotNull())
         .select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
-        .localCheckpoint()
     )
     seed = (
         base.orderBy(md5_low32(F.col("_id").cast("string")), F.col("_id"))
@@ -1467,20 +1469,20 @@ def kcenter_select(
         )
     chosen = [(1, seed[0]["_id"], None)]
     cvec = F.array(*[F.lit(float(x)) for x in seed[0]["_v"]])
-    state = base.select(
+    state = materialize(base.select(
         "_id", "_v", F.round(euclidean(F.col("_v"), cvec), 6).alias("_dmin")
-    ).localCheckpoint()
+    ))
     for r in range(2, int(k) + 1):
         far = state.orderBy(F.desc("_dmin"), F.asc("_id")).limit(1).collect()[0]
         chosen.append((r, far["_id"], float(far["_dmin"])))
         cvec = F.array(*[F.lit(float(x)) for x in far["_v"]])
-        state = state.select(
+        state = materialize(state.select(
             "_id",
             "_v",
             F.least(
                 F.col("_dmin"), F.round(euclidean(F.col("_v"), cvec), 6)
             ).alias("_dmin"),
-        ).localCheckpoint()
+        ))
     spark = df.sparkSession
     id_type = df.schema[id_col].dataType.simpleString()
     return spark.createDataFrame(
@@ -1531,7 +1533,7 @@ def mmr_select(
         )
 
     pv = F.array(*[F.lit(float(x)) for x in probe])
-    base = (
+    base = materialize(
         df.filter(F.col(vec_col).isNotNull())
         .select(
             F.col(id_col).alias("_id"),
@@ -1539,7 +1541,6 @@ def mmr_select(
             norm(F.col(vec_col)).alias("_nv"),
             F.round(cosine_similarity(F.col(vec_col), pv), 6).alias("_rel"),
         )
-        .localCheckpoint()
     )
     first = base.orderBy(F.desc("_rel"), F.asc("_id")).limit(1).collect()
     if not first:
@@ -1549,7 +1550,7 @@ def mmr_select(
         )
     chosen = [(1, first[0]["_id"], float(first[0]["_rel"]), None)]
     cvec = F.array(*[F.lit(float(x)) for x in first[0]["_v"]])
-    state = (
+    state = materialize(
         base.filter(F.col("_id") != F.lit(first[0]["_id"]))
         .select(
             "_id",
@@ -1558,7 +1559,6 @@ def mmr_select(
             "_rel",
             F.round(_sim_to(cvec, _py_norm(first[0]["_v"])), 6).alias("_ms"),
         )
-        .localCheckpoint()
     )
     for r in range(2, int(k) + 1):
         mmr = F.round(
@@ -1577,7 +1577,7 @@ def mmr_select(
         b = best[0]
         chosen.append((r, b["_id"], float(b["_rel"]), float(b["_mmr"])))
         cvec = F.array(*[F.lit(float(x)) for x in b["_v"]])
-        state = (
+        state = materialize(
             state.filter(F.col("_id") != F.lit(b["_id"]))
             .select(
                 "_id",
@@ -1588,12 +1588,12 @@ def mmr_select(
                     F.col("_ms"),
                     F.round(_sim_to(cvec, _py_norm(b["_v"])), 6),
                 ).alias("_ms"),
-            )
+            ),
             # lazy checkpoint (r11): the NEXT round's top-1 collect
             # materializes-and-persists this in ITS job instead of paying a
             # separate eager job per round — half the jobs, value-neutral,
             # plan depth still O(1) once persisted
-            .localCheckpoint(eager=False)
+            lazy=True,
         )
     spark = df.sparkSession
     id_type = df.schema[id_col].dataType.simpleString()

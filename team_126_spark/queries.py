@@ -29,6 +29,7 @@ from . import tables as T
 from .functions import geo as G
 from .functions import text as X
 from .functions import vector as V
+from .metrics import materialize
 from .operators import dedup as D
 from .operators import geo as OG
 from .operators import health as H
@@ -3322,10 +3323,8 @@ def q_doc_tfidf(spark, sf_dir):
     # checkpoint: TWO consumers (dfreq and the scored join) each re-ran the
     # corpus token explode + (doc, term) aggregation without it (r12 plan
     # read — two Generate-on-Scan pipelines, no ReusedExchange; guide §1.2)
-    tf = (
-        tok.groupBy("doc_id", "t")
-        .agg(F.count("*").cast("bigint").alias("tf"))
-        .localCheckpoint()
+    tf = materialize(
+        tok.groupBy("doc_id", "t").agg(F.count("*").cast("bigint").alias("tf"))
     )
     dfreq = tf.groupBy("t").agg(F.count("*").cast("bigint").alias("df"))
     n_docs = d.agg(F.count("*").cast("double").alias("n_docs"))
@@ -4051,7 +4050,7 @@ def q_matryoshka_eval(spark, sf_dir):
     emb = load(spark, sf_dir, "embeddings").filter(F.col("embedding").isNotNull())
     probe = _probe_embedding(spark, sf_dir)
     pv_full = F.array(*[F.lit(float(x)) for x in probe])
-    full = (
+    full = materialize(
         emb.select(
             "vec_id",
             F.round(V.cosine_similarity(F.col("embedding"), pv_full), 6).alias(
@@ -4060,7 +4059,6 @@ def q_matryoshka_eval(spark, sf_dir):
         )
         .orderBy(F.desc("sim_full"), F.asc("vec_id"))
         .limit(10)
-        .localCheckpoint()
     )
 
     def dim_row(d):
@@ -4962,11 +4960,7 @@ def q_minhash_incremental(spark, sf_dir):
     # lazy checkpoint: the signature job runs once for its two consumers
     # (banding + estimate re-attach) — production reads PERSISTED parquet
     # signatures instead, where the double scan is already cheap
-    corpus_sigs = (
-        D.minhash_signatures(corpus, "text", "doc_id", k=3, hash_fn="md5")
-        .filter(F.col("signature").isNotNull())
-        .localCheckpoint(eager=False)
-    )
+    corpus_sigs = D.checkpointed_signatures(corpus, "text", "doc_id", k=3, hash_fn="md5")
     return D.minhash_lsh_probe(
         new, corpus_sigs, "text", "doc_id", k=3, bands=16, threshold=0.3, hash_fn="md5"
     )
@@ -6385,7 +6379,7 @@ def q_graph_walks(spark, sf_dir):
             F.lit(":"), F.col("k").cast("string"),
         )
     )
-    edges = (
+    edges = materialize(  # three step-joins reuse it; cut the gen lineage
         c.select(
             F.col("c_custkey").alias("src"),
             F.explode(F.array(*[F.lit(k) for k in (1, 2, 3, 4)])).alias("k"),
@@ -6393,7 +6387,6 @@ def q_graph_walks(spark, sf_dir):
         .select("src", (1 + h_edge % 1000).alias("dst"))
         .filter(F.col("src") != F.col("dst"))
         .distinct()
-        .localCheckpoint()  # three step-joins reuse it; cut the gen lineage
     )
     pos = edges.select(F.col("src").alias("start")).distinct().select(
         "start", F.col("start").alias("cur")
@@ -6667,13 +6660,12 @@ def q_classifier_calibration(spark, sf_dir):
 def _logreg_features(e):
     """(rid, i, x) exploded features (checkpointed: reused by all rounds'
     dot + gradient passes) and (rid, y) labels for the embeddings table."""
-    ex = (
+    ex = materialize(  # reused by all 3 rounds (dot + gradient each)
         e.select(
             F.col("vec_id").alias("rid"),
             F.posexplode("embedding").alias("i", "x"),
         )
         .select("rid", F.col("i").cast("bigint").alias("i"), F.col("x").cast("double").alias("x"))
-        .localCheckpoint()  # reused by all 3 rounds (dot + gradient each)
     )
     ys = e.select(
         F.col("vec_id").alias("rid"),
@@ -6803,13 +6795,12 @@ def q_grouping_sets_counts(spark, sf_dir):
 )
 def q_pmi_cooccur(spark, sf_dir):
     d = load(spark, sf_dir, "documents")
-    dt = (
+    dt = materialize(  # feeds the df table AND both sides of the pair join
         d.select(
             "doc_id",
             F.explode(F.array_distinct(X.tokens(F.col("text")))).alias("term"),
         )
         .filter(F.col("term") != "")
-        .localCheckpoint()  # feeds the df table AND both sides of the pair join
     )
     nn = d.agg(F.count("*").cast("double").alias("n_docs"))
     dfreq = dt.groupBy("term").agg(F.count("*").cast("double").alias("df"))
@@ -6968,7 +6959,7 @@ def q_shortest_paths(spark, sf_dir):
     wcol = 1 + X.md5_low32(
         F.concat(F.lit("w:"), F.col("src"), F.lit(">"), F.col("dst"))
     ) % 10
-    edges = (
+    edges = materialize(
         eb.select("src", "dst", wcol.alias("w"))
         .select(
             F.explode(
@@ -6980,7 +6971,6 @@ def q_shortest_paths(spark, sf_dir):
             "w",
         )
         .select(F.col("e.a").alias("src"), F.col("e.b").alias("dst"), "w")
-        .localCheckpoint()
     )
     dist = edges.sparkSession.createDataFrame(
         [("c:1", 0)], "node string, dist long"
@@ -6992,11 +6982,8 @@ def q_shortest_paths(spark, sf_dir):
         relaxed = edges.join(F.broadcast(dist), edges["src"] == dist["node"]).select(
             F.col("dst").alias("node"), (F.col("dist") + F.col("w")).alias("dist")
         )
-        dist = (
-            dist.unionByName(relaxed)
-            .groupBy("node")
-            .agg(F.min("dist").cast("bigint").alias("dist"))
-            .localCheckpoint()
+        dist = materialize(
+            dist.unionByName(relaxed).groupBy("node").agg(F.min("dist").cast("bigint").alias("dist"))
         )
     return dist.orderBy(F.asc("dist"), F.asc("node")).limit(20)
 
@@ -7323,7 +7310,7 @@ def q_countmin_freq(spark, sf_dir):
 
     o = load(spark, sf_dir, "orders")
     sketch = B.countmin_build(o, "o_custkey", width=256, depth=4)
-    sketch = sketch.localCheckpoint(eager=False)
+    sketch = materialize(sketch, lazy=True)
     exact = (
         o.where(F.col("o_custkey").isNotNull())
         .groupBy("o_custkey")
@@ -7897,9 +7884,7 @@ def q_semdedup_index_probe(spark, sf_dir):
     # cell assignment, and the index write all read it — without this the
     # Arrow embed pass runs twice over the corpus-sized side (9.1 → 5.7 s
     # at sf0.1)
-    seed_v = vecs_of(
-        docs.filter(~F.col("source").isin("src0", "src1"))
-    ).localCheckpoint()
+    seed_v = materialize(vecs_of(docs.filter(~F.col("source").isin("src0", "src1"))))
     cents = OV.ivf_centroids(seed_v, "vec", "doc", 16)
 
     from .functions.vector import norm as _vnorm
@@ -7934,7 +7919,7 @@ def q_semdedup_index_probe(spark, sf_dir):
         "doc",
         threshold=0.9,
     )
-    b1 = assigned(docs.filter(F.col("source") == "src1")).localCheckpoint()
+    b1 = materialize(assigned(docs.filter(F.col("source") == "src1")))
     p1 = OV.embedding_index_probe(
         b1, spark.read.parquet(f"{idx}/vecs/*"), "vec", "doc", threshold=0.9
     )
@@ -8430,9 +8415,7 @@ def q_ngram_index_probe(spark, sf_dir):
     # checkpoint the seed gram set: it feeds BOTH probes (sp0's filter and
     # sp1's union), and without the cut the corpus-sized gram explode +
     # hash pass runs twice (r11, guide §1.2)
-    seed_h = (
-        D.span_grams(seed, "text", "doc_id", 5).select("h").distinct().localCheckpoint()
-    )
+    seed_h = materialize(D.span_grams(seed, "text", "doc_id", 5).select("h").distinct())
     h0 = D.span_grams(b0, "text", "doc_id", 5).select("h").distinct()
     sp0 = D.dup_spans_probe(b0, seed_h, "text", "doc_id", 5)
     sp1 = D.dup_spans_probe(b1, seed_h.unionByName(h0).distinct(), "text", "doc_id", 5)
@@ -8532,10 +8515,8 @@ def q_cluster_keywords(spark, sf_dir):
     # checkpoint: TWO consumers (dfreq and cell_tf) each re-ran the corpus
     # token explode + (doc, term) aggregation without it (r12 plan read —
     # two Generate-on-Scan pipelines, no ReusedExchange; guide §1.2)
-    tf = (
-        tok.groupBy("doc_id", "t")
-        .agg(F.count("*").cast("bigint").alias("tf"))
-        .localCheckpoint()
+    tf = materialize(
+        tok.groupBy("doc_id", "t").agg(F.count("*").cast("bigint").alias("tf"))
     )
     dfreq = tf.groupBy("t").agg(F.count("*").cast("bigint").alias("df"))
     n_docs = d.agg(F.count("*").cast("double").alias("n_docs"))

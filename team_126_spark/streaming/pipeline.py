@@ -42,6 +42,7 @@ from pyspark.sql.types import (
 )
 
 from ..functions.embed import Embedder, embed
+from ..metrics import materialize
 from ..tables import table
 
 # Regex the reference uses to pull coordinates out of message text
@@ -225,15 +226,12 @@ def stream_neardup_probe(
     `index_dir/{sigs,bands}/seed/` before starting the stream (tests do
     exactly that).
     """
-    from ..operators.dedup import banded_signatures, minhash_lsh_probe, minhash_signatures
+    from ..operators.dedup import banded_signatures, checkpointed_signatures, minhash_lsh_probe
 
     def probe_batch(bdf: DataFrame, batch_id: int) -> None:
         spark = bdf.sparkSession
-        sigs = (
-            minhash_signatures(bdf, text_col, id_col, k, hash_fn)
-            .filter(F.col("signature").isNotNull())
-            .localCheckpoint()
-        )
+        # the pairs write below fills it; the index writes re-read it
+        sigs = checkpointed_signatures(bdf, text_col, id_col, k, hash_fn)
         # Crash-replay exactness: a replayed batch's own sigs/bands may
         # already sit under b<batch_id>/ from the crashed attempt. Exclude
         # exactly that subdir — by file path, not by doc id (ADVICE r7): a
@@ -547,7 +545,7 @@ def stream_semdedup_probe(
         # writer): probes of the grown index read it instead of re-folding
         # norm(vec) per corpus row; legacy seeds without the column are
         # coalesce-guarded inside embedding_index_probe.
-        vecs = (
+        vecs = materialize(
             with_ivf_cell(
                 bdf.select(
                     F.col(id_col).alias("doc"),
@@ -558,7 +556,6 @@ def stream_semdedup_probe(
             )
             .withColumnRenamed("ivf_cell", "cell")
             .withColumn("_norm", _vnorm(F.col("vec")))
-            .localCheckpoint()
         )
         corpus = spark.read.parquet(f"{index_dir}/vecs/*").filter(
             ~F.input_file_name().contains(f"/vecs/b{batch_id}/")
@@ -621,7 +618,7 @@ def stream_dup_spans(
         spark = bdf.sparkSession
         # checkpoint the batch's grams ONCE: the span probe and the index
         # append both read them (the seed-embed-once lesson)
-        grams = span_grams(bdf, text_col, id_col, k).localCheckpoint()
+        grams = materialize(span_grams(bdf, text_col, id_col, k))
         jvm = spark._jvm
         groot = jvm.org.apache.hadoop.fs.Path(f"{index_dir}/grams")
         fs = groot.getFileSystem(spark._jsc.hadoopConfiguration())

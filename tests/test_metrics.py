@@ -1,57 +1,81 @@
-"""Pipeline-metrics (observe API) tests."""
+"""The materialization seam (`metrics.materialize`) and its observe()
+counters, plus the streaming observedMetrics path."""
 
 from __future__ import annotations
 
+import re
+from pathlib import Path
+
+import pytest
 from pyspark.sql import functions as F
 
-from team_126_spark.metrics import observe_counts
+from team_126_spark.metrics import materialize
 from team_126_spark.tables import table
 
 SF = "/root/testdata/sf0.001"
+ROOT = Path(__file__).resolve().parents[1]
 
 
-def test_observe_counts_no_extra_jobs(spark):
-    """Metrics ride the SAME job as the action: the observation's values
-    match a direct recomputation, and the instrumented action runs exactly
-    one job (tracked via the status API) — the zero-extra-scan property
-    that makes per-stage health counters affordable at 100 TB."""
+def _jobs(spark) -> int:
+    return len(spark.sparkContext.statusTracker().getJobIdsForGroup(None) or [])
+
+
+def test_materialize_counts_no_extra_jobs(spark):
+    """Counters ride the checkpoint's own job: the observation's values
+    match a direct recount, and the eager checkpoint runs exactly one job
+    (status API) — no per-metric jobs. Counters on a lazy checkpoint are
+    refused before any job starts."""
     docs = table(spark, SF, "documents")
     t = F.col("text")
-    out, obs = observe_counts(docs, "ingest", {
+    counts = {
         "rows": F.count(F.lit(1)),
         "null_text": F.count_if(t.isNull()),
         "total_chars": F.sum(F.coalesce(F.length(t), F.lit(0))),
-    })
-    tracker = spark.sparkContext.statusTracker()
-    before = len(tracker.getJobIdsForGroup(None) or [])
-    n = out.count()
-    got = obs.get
-    after = len(tracker.getJobIdsForGroup(None) or [])
-    assert after - before <= 2  # the count's own job(s); no per-metric jobs
-    assert got["rows"] == n == 500
+    }
+    before = _jobs(spark)
+    with pytest.raises(ValueError, match="eager"):
+        materialize(docs, lazy=True, counts=counts)
+    assert _jobs(spark) == before
+    out, got = materialize(docs, counts=counts)
+    assert _jobs(spark) - before == 1
+    assert got["rows"] == docs.count() == 500
     want_nulls = docs.filter(F.col("text").isNull()).count()
     want_chars = docs.agg(
         F.sum(F.coalesce(F.length("text"), F.lit(0)))
     ).first()[0]
     assert got["null_text"] == want_nulls
     assert got["total_chars"] == want_chars
+    assert out.count() == 500
 
 
-def test_observe_composes_with_curation(spark):
+def test_materialize_counts_compose_with_curation(spark):
     from team_126_spark.operators.textops import curate_corpus
 
     docs = table(spark, SF, "documents")
     curated = curate_corpus(docs, "text", "doc_id")
     # NB: DISTINCT aggregates are rejected in observed metrics
     # (INVALID_OBSERVED_METRICS); the sketch version is the observable one
-    out, obs = observe_counts(
-        curated, "curated", {"rows": F.count(F.lit(1)),
-                             "splits": F.approx_count_distinct(F.col("split"))}
+    out, got = materialize(
+        curated, counts={"rows": F.count(F.lit(1)),
+                         "splits": F.approx_count_distinct(F.col("split"))}
     )
-    n = out.count()
-    got = obs.get
-    assert got["rows"] == n > 0
+    assert got["rows"] == out.count() == curated.count() > 0
     assert 1 <= got["splits"] <= 3
+
+
+def test_materialize_is_the_only_checkpoint_seam():
+    """Every checkpoint and every Observation in the program, its tools and
+    bench.py goes through metrics.materialize."""
+    seam = ROOT / "team_126_spark" / "metrics.py"
+    files = [ROOT / "bench.py", *ROOT.glob("team_126_spark/**/*.py"), *ROOT.glob("tools/**/*.py")]
+    found = [
+        f"{f.relative_to(ROOT)}:{i}"
+        for f in files
+        if f != seam
+        for i, line in enumerate(f.read_text().splitlines(), 1)
+        if re.search(r"localCheckpoint\(|Observation\(", line)
+    ]
+    assert found == []
 
 
 def test_observe_metrics_in_streaming_progress(spark, tmp_path):

@@ -21,6 +21,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from team_126_spark.metrics import materialize  # noqa: E402
 from team_126_spark.operators import dedup as D  # noqa: E402
 from team_126_spark.operators import textops as TO  # noqa: E402
 from team_126_spark.session import get_spark  # noqa: E402
@@ -61,22 +62,22 @@ def main() -> None:
     canon = docs.join(
         groups.select(F.col("canonical_id").alias("doc_id")), "doc_id", "left_semi"
     )
-    canon = timed("exact_dedup+materialize", lambda: canon.localCheckpoint())
+    canon = timed("exact_dedup+materialize", lambda: materialize(canon))
 
     # 2a. signatures alone (the r4 bottleneck claim: 32 s of 43.5 s)
     sigs = timed(
         "minhash_signatures",
-        lambda: D.minhash_signatures(canon, "text", "doc_id", 3)
-        .filter(F.col("signature").isNotNull())
-        .localCheckpoint(),
+        lambda: materialize(
+            D.minhash_signatures(canon, "text", "doc_id", 3).filter(F.col("signature").isNotNull())
+        ),
     )
     # 2b. banding + candidate join + estimate verify, reusing the signatures
     pairs = D.lsh_pairs_from_signatures(sigs, 16, 0.5).select("id_a", "id_b")
-    pairs = timed("banding+pairs", lambda: pairs.localCheckpoint())
+    pairs = timed("banding+pairs", lambda: materialize(pairs))
 
     # 3. components + canonical select
     comps = timed(
-        "components", lambda: D.dedup_components(pairs).localCheckpoint()
+        "components", lambda: materialize(D.dedup_components(pairs))
     )
     quality = TO.quality_score(canon, "text", "doc_id").select("doc_id", "quality")
     labeled = quality.join(comps, quality["doc_id"] == comps["id"], "left").select(
@@ -90,7 +91,7 @@ def main() -> None:
     keep = labeled.withColumn("_rn", F.row_number().over(w)).filter(
         F.col("_rn") == 1
     ).select("doc_id", "cluster_id")
-    keep = timed("select", lambda: keep.localCheckpoint())
+    keep = timed("select", lambda: materialize(keep))
 
     # 4. model-based curation (round 8): quality-distill gate, then DSIR
     #    importance resampling toward the src0 target domain — the two
@@ -109,7 +110,7 @@ def main() -> None:
         # corpus-wide feature build + scoring pass, which any student pays)
         scored = TO.quality_distill(survivors, "text", "doc_id", train_pct=10)
         gate_ids = scored.filter(F.col("p_keep") >= 0.5).select("doc_id")
-        return survivors.join(gate_ids, "doc_id", "left_semi").localCheckpoint()
+        return materialize(survivors.join(gate_ids, "doc_id", "left_semi"))
 
     gated = timed("distill_gate", _distill_gate)
     n_gated = gated.count()
@@ -128,7 +129,7 @@ def main() -> None:
     from team_126_spark.operators.relational import weighted_resample
 
     resampled = weighted_resample(wts, "wt", "doc_id")
-    resampled = timed("dsir_resample", lambda: resampled.localCheckpoint())
+    resampled = timed("dsir_resample", lambda: materialize(resampled))
     print(f"    resample emitted {resampled.count():,} rows", flush=True)
 
     # 5. leakage-safe split + packing over the CURATED corpus: target-domain

@@ -1,12 +1,24 @@
 """Local mimic of the driver's correctness gate: run every declared query on
 Spark AND its DuckDB oracle at a given sf, compare row-count + column names +
-order-insensitive values.
+order-insensitive values. Queries without an oracle get the driver's weaker
+rows-only check (collected, counted, reported as rows-only).
 
-Usage: python tools/oracle_check.py [sf_dir] [query ...]
+Usage:
+    python tools/oracle_check.py [sf_dir] [--session engine|vanilla]
+                                 [--front|--back] [query ...]
+
+--session engine (default) runs on `session.get_spark()`. --session vanilla
+runs the way the driver does: a plain `SparkSession.builder` with no engine
+confs (no tune_session: default shuffle partitions, broadcast threshold,
+ANSI/timezone/Arrow settings), driving `__spark_entry__.queries()` and
+`oracle_sql()`. It catches any answer that depends on our session tuning.
+--front / --back slice the registry by position: the first 50 queries (the
+driver's sample) or the rest. Exits 1 when any query fails.
 """
 
 from __future__ import annotations
 
+import argparse
 import math
 import os
 import sys
@@ -22,6 +34,7 @@ from team_126_spark.session import get_spark  # noqa: E402
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings".split()
 )
+DRIVER_SAMPLE = 50  # the driver checks the registry's first 50 queries
 
 
 def canon(v):
@@ -52,41 +65,72 @@ def compare(name, spark_df, oracle_rows, oracle_cols):
     return None
 
 
-def main():
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = set(sys.argv[2:])
-    spark = get_spark("oracle_check")
+def _session(kind):
+    """(spark, {name: query fn}, {name: oracle sql}) for the session kind."""
+    if kind == "engine":
+        fns = {name: q.fn for name, q in REGISTRY.items()}
+        osql = {name: q.oracle for name, q in REGISTRY.items() if q.oracle is not None}
+        return get_spark("oracle_check"), fns, osql
+    from pyspark.sql import SparkSession
+
+    # imported after team_126_spark, so the contract drives this checkout's modules
+    import __spark_entry__ as mod
+
+    spark = SparkSession.builder.master("local[8]").getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark, mod.queries(), mod.oracle_sql()
+
+
+def main(argv=None):
+    ap = argparse.ArgumentParser(description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter)
+    ap.add_argument("sf_dir", nargs="?", default="/root/testdata/sf0.01")
+    ap.add_argument("names", nargs="*", metavar="query")
+    ap.add_argument("--session", choices=("engine", "vanilla"), default="engine")
+    part = ap.add_mutually_exclusive_group()
+    part.add_argument("--front", action="store_true", help=f"the first {DRIVER_SAMPLE} queries")
+    part.add_argument("--back", action="store_true", help=f"queries after the first {DRIVER_SAMPLE}")
+    args = ap.parse_args(argv)
+
+    spark, fns, osql = _session(args.session)
+    names = list(fns)
+    if args.front:
+        names = names[:DRIVER_SAMPLE]
+    elif args.back:
+        names = names[DRIVER_SAMPLE:]
+    if args.names:
+        names = [n for n in names if n in set(args.names)]
     con = duckdb.connect()
     for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{args.sf_dir}/{t}.parquet'")
 
-    n_pass = n_fail = n_skip = 0
-    for name, q in REGISTRY.items():
-        if only and name not in only:
-            continue
+    n_pass = n_skip = 0
+    fails: list[str] = []
+    for name in names:
         t0 = time.time()
         try:
-            df = q.fn(spark, sf_dir)
-            if q.oracle is None:
-                n = df.count()
+            df = fns[name](spark, args.sf_dir)
+            if name not in osql:
+                n = len(df.collect())
                 print(f"  SKIP(rows-only) {name}: {n} rows  [{time.time()-t0:.1f}s]")
                 n_skip += 1
                 continue
-            cur = con.execute(q.oracle)
+            cur = con.execute(osql[name])
             o_cols = [d[0] for d in cur.description]
             o_rows = cur.fetchall()
             err = compare(name, df, o_rows, o_cols)
             if err:
                 print(f"  FAIL {name}: {err}  [{time.time()-t0:.1f}s]")
-                n_fail += 1
+                fails.append(name)
             else:
                 print(f"  ok   {name} ({len(o_rows)} rows)  [{time.time()-t0:.1f}s]")
                 n_pass += 1
         except Exception as e:
             print(f"  ERROR {name}: {type(e).__name__}: {str(e)[:300]}")
-            n_fail += 1
-    print(f"\n{n_pass} pass, {n_fail} fail, {n_skip} rows-only")
-    return 1 if n_fail else 0
+            fails.append(name)
+    print(f"\n{n_pass} pass, {len(fails)} fail, {n_skip} rows-only ({args.session} session)")
+    if fails:
+        print("failed:", fails)
+    return 1 if fails else 0
 
 
 if __name__ == "__main__":
