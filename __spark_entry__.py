@@ -7,12 +7,14 @@ oracle_sql()  — DuckDB oracle twins for every SQL-expressible query.
 
 from __future__ import annotations
 
+import os
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, "/root/repo")
+# this checkout's own modules, wherever the checkout lives
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from team_126_spark.queries import REGISTRY  # noqa: E402
 from team_126_spark.session import tune_session  # noqa: E402

@@ -496,9 +496,10 @@ def dedup_components(
                 F.col("_old"),
             )
         labels, got = materialize(
-            stepped, counts={"changed": F.count_if(F.col("label") != F.col("_old"))}
+            stepped,
+            counts={"changed": F.count_if(F.col("label") != F.col("_old"))},
+            select=["id", "label"],
         )
-        labels = labels.drop("_old")
         rounds += 1
         changed = got["changed"]
         if changed == 0:

@@ -394,17 +394,19 @@ def with_ivf_cell(df: DataFrame, vec_col: str, centroids: list[list[float]]) -> 
     when() (chaining re-embeds the running best into every branch, growing
     the expression tree exponentially with n_cells).
 
-    The centroid matrix is ONE nested-array literal traversed with
-    transform() (r12): the previous per-centroid F.array(*[F.lit(x)...])
-    expansion put n_cells×dim literal NODES into the plan — 1024 per
-    assignment at the declared 16×64 — which (a) made every
-    assignment-bearing plan huge (analysis/planning cost, the
-    semdedup_index_probe per-step tax) and (b) recompiled as a giant
-    generated class that fell out of the codegen cache under a 137-query
-    bench session (the documented ann_ivf 1.5 s ↔ 11 s bimodality). One
-    Literal node + an interpreted HOF pass has none of that; the dot fold,
-    element order, and first-max tie-break are unchanged, so the result is
-    bit-identical (pinned vs the broadcast path)."""
+    The centroid matrix is one `F.lit` of the nested list, traversed with
+    transform() (r12). `F.lit(list)` still builds `array(array(lit, …),
+    …)`: the ANALYZED plan holds n_cells×dim literal nodes (1024 at the
+    declared 16×64) for each of the two uses of `scores`, and analysis
+    pays for them. The optimizer's ConstantFolding then folds each matrix
+    into one array Literal, so the optimized plan and the generated code
+    carry one constant and an interpreted HOF pass instead of n_cells×dim
+    expressions (checked on PySpark 4.1.2). The previous per-centroid
+    expansion recompiled as a giant generated class that fell out of the
+    codegen cache under a 137-query bench session (the documented ann_ivf
+    1.5 s ↔ 11 s bimodality). The dot fold, element order, and first-max
+    tie-break are unchanged, so the result is bit-identical (pinned vs the
+    broadcast path)."""
     from ..functions.vector import dot
 
     cmat = F.lit([_unit(c) for c in centroids])

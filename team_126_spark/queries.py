@@ -5030,7 +5030,7 @@ def _minhash_index_probe_oracle_sql(bands: int = 16, threshold: float = 0.3) -> 
     "index_dir/{sigs,bands}/b<id>/ parquet layout stream_neardup_probe "
     "maintains (seed = sources other than src0/src1; b0 = src0), then "
     "replays two ingest batches — b0 probes the seed subdir, b1 (src1) "
-    "probes the GROWN index via the multi-subdir glob — reproducing the "
+    "probes the GROWN index (read_index_layout) — reproducing the "
     "cross-batch pair set exactly (streaming/pipeline.stream_neardup_probe; "
     "md5 family → full DuckDB twin). Per-batch cost ∝ batch size; the "
     "corpus is never re-signed — the append-only 100 TB ingest shape",
@@ -5077,52 +5077,35 @@ def _minhash_index_probe_impl(spark, sf_dir, hash_fn: str):
     signature hash family differs (md5 = oracle-checkable, xxhash64 =
     production; the twin separates md5 CPU from the ingest-index plan
     cost, the bootstrap_ci_xx precedent)."""
+    from .streaming.pipeline import _write_index_batch, read_index_layout
+
     docs = load(spark, sf_dir, "documents")
     idx = _pid_index_dir(f"minhash_{hash_fn}", sf_dir)
     seed = docs.filter(~F.col("source").isin("src0", "src1"))
     b0 = docs.filter(F.col("source") == "src0")
     b1 = docs.filter(F.col("source") == "src1")
 
-    seed_sigs = D.minhash_signatures(seed, "text", "doc_id", k=3, hash_fn=hash_fn).filter(
-        F.col("signature").isNotNull()
-    )
+    # each side's signatures are signed once: its sigs write fills the
+    # checkpoint, and its banding (and b0's probe) read it back
+    seed_sigs = D.checkpointed_signatures(seed, "text", "doc_id", 3, hash_fn)
     seed_sigs.write.mode("overwrite").parquet(f"{idx}/sigs/seed")
-    # band from the JUST-WRITTEN sigs parquet, not the live plan: the live
-    # plan re-runs the whole signing pass (shingle explode + hash +
-    # collect_list + Arrow minhash) a second time over the corpus-sized
-    # seed — reading back the few-MB signature table costs one scan of
-    # already-reduced rows instead (guide §1.2 "don't compute things
-    # twice"; measured 8.7 → ~6 s at sf0.1, band rows identical since
-    # bkeys are a pure function of the signature column)
-    D.banded_signatures(spark.read.parquet(f"{idx}/sigs/seed"), 16).write.mode(
-        "overwrite"
-    ).parquet(f"{idx}/bands/seed")
-    b0_sigs = D.minhash_signatures(b0, "text", "doc_id", k=3, hash_fn=hash_fn).filter(
-        F.col("signature").isNotNull()
-    )
-    # batch subdirs are single-file, exactly like the streaming ingest
-    # (stream_neardup_probe) — repartition(1), NOT coalesce(1): coalesce
-    # would narrow the whole signing stage to one core; the exchange keeps
-    # signing parallel and only the tiny batch-sized write is single-file.
-    # The seed/backfill stays partitioned.
-    b0_sigs.repartition(1).write.mode("overwrite").parquet(f"{idx}/sigs/b0")
-    # same read-back trick as the seed: never sign a batch twice
-    D.banded_signatures(
-        spark.read.parquet(f"{idx}/sigs/b0"), 16
-    ).repartition(1).write.mode("overwrite").parquet(f"{idx}/bands/b0")
+    D.banded_signatures(seed_sigs, 16).write.mode("overwrite").parquet(f"{idx}/bands/seed")
+    b0_sigs = D.checkpointed_signatures(b0, "text", "doc_id", 3, hash_fn)
+    _write_index_batch(b0_sigs, idx, "sigs", 0)
+    _write_index_batch(D.banded_signatures(b0_sigs, 16), idx, "bands", 0)
 
-    # batch 0 probed the index state {seed}; batch 1 probes {seed, b0}
-    # through the same b<id>-glob read the streaming ingest performs
+    # batch 0 probes the index state {seed} (its own dir left out, as on a
+    # replay); batch 1 probes {seed, b0}, the streaming ingest's reads
     p0 = D.minhash_lsh_probe(
-        b0, spark.read.parquet(f"{idx}/sigs/seed"), "text", "doc_id",
+        b0, read_index_layout(spark, idx, "sigs", 0), "text", "doc_id",
         k=3, bands=16, threshold=0.3, hash_fn=hash_fn,
-        corpus_banded=spark.read.parquet(f"{idx}/bands/seed"),
-        new_sigs=spark.read.parquet(f"{idx}/sigs/b0"),
+        corpus_banded=read_index_layout(spark, idx, "bands", 0),
+        new_sigs=b0_sigs,
     )
     p1 = D.minhash_lsh_probe(
-        b1, spark.read.parquet(f"{idx}/sigs/*"), "text", "doc_id",
+        b1, read_index_layout(spark, idx, "sigs"), "text", "doc_id",
         k=3, bands=16, threshold=0.3, hash_fn=hash_fn,
-        corpus_banded=spark.read.parquet(f"{idx}/bands/*"),
+        corpus_banded=read_index_layout(spark, idx, "bands"),
     )
     return p0.select(F.lit(0).alias("batch"), "new_id", "corpus_id", "est_jaccard").unionByName(
         p1.select(F.lit(1).alias("batch"), "new_id", "corpus_id", "est_jaccard")
@@ -7863,7 +7846,7 @@ def _semdedup_index_probe_oracle_sql(n_cells: int, threshold: float) -> str:
     "stream_semdedup_probe maintains (seed = sources other than "
     "src0/src1, HashEmbedder vectors + IVF cells over seed-fit "
     "centroids), then replays two ingest batches — b0 probes the seed "
-    "subdir, b1 probes the GROWN index via the multi-subdir glob — "
+    "subdir, b1 probes the GROWN index (read_index_layout) — "
     "reproducing the cross-batch cosine pair set exactly. Per-batch cost "
     "∝ batch size × its cells' population; the corpus is never "
     "re-embedded (streaming/pipeline.stream_semdedup_probe; md5-family "
@@ -7871,6 +7854,7 @@ def _semdedup_index_probe_oracle_sql(n_cells: int, threshold: float) -> str:
 )
 def q_semdedup_index_probe(spark, sf_dir):
     from .functions.embed import embed
+    from .streaming.pipeline import _write_index_batch, read_index_layout
 
     docs = load(spark, sf_dir, "documents")
     idx = _pid_index_dir("semdedup", sf_dir)
@@ -7907,21 +7891,16 @@ def q_semdedup_index_probe(spark, sf_dir):
     ).withColumn("_norm", _vnorm(F.col("vec"))).write.mode("overwrite").parquet(
         f"{idx}/vecs/seed"
     )
-    b0 = assigned(docs.filter(F.col("source") == "src0"))
-    # batch subdirs single-file like the streaming ingest: repartition(1),
-    # never coalesce(1) (the minhash_index_probe lesson)
-    b0.repartition(1).write.mode("overwrite").parquet(f"{idx}/vecs/b0")
+    # embedded once: the batch-dir write fills it, b0's probe reads it back
+    b0 = materialize(assigned(docs.filter(F.col("source") == "src0")), lazy=True)
+    _write_index_batch(b0, idx, "vecs", 0)
 
     p0 = OV.embedding_index_probe(
-        spark.read.parquet(f"{idx}/vecs/b0"),
-        spark.read.parquet(f"{idx}/vecs/seed"),
-        "vec",
-        "doc",
-        threshold=0.9,
+        b0, read_index_layout(spark, idx, "vecs", 0), "vec", "doc", threshold=0.9
     )
     b1 = materialize(assigned(docs.filter(F.col("source") == "src1")))
     p1 = OV.embedding_index_probe(
-        b1, spark.read.parquet(f"{idx}/vecs/*"), "vec", "doc", threshold=0.9
+        b1, read_index_layout(spark, idx, "vecs"), "vec", "doc", threshold=0.9
     )
     return p0.select(
         F.lit(0).alias("batch"), "new_id", "corpus_id", "cos_sim"
@@ -8748,13 +8727,13 @@ def q_sliding_distinct(spark, sf_dir):
     "row-local integer-plane arithmetic, so batches need no corpus "
     "state — and the probe reads the stitched layout "
     "(read_index_layout), filters to its multi-probed buckets (a "
-    "PartitionFilter once compact_index_partitioned rewrites seed/ "
-    "partitionBy lsh_bucket), and dedups per id. Candidate set is "
+    "PartitionFilter once compact_index rewrites seed/ partitionBy "
+    "lsh_bucket), and dedups per id. Candidate set is "
     "pinned identical to the in-memory lsh_candidates and the DuckDB "
     "integer-plane twin (streaming/pipeline.stream_lsh_layout)",
 )
 def q_lsh_index_probe(spark, sf_dir):
-    from .streaming.pipeline import read_index_layout
+    from .streaming.pipeline import _write_index_batch, read_index_layout
 
     emb = load(spark, sf_dir, "embeddings")
     idx = _pid_index_dir("lshlayout", sf_dir)
@@ -8771,13 +8750,10 @@ def q_lsh_index_probe(spark, sf_dir):
     exploded(emb.filter(F.col("vec_id") >= 100)).write.mode("overwrite").parquet(
         f"{idx}/lsh/seed"
     )
-    # batch subdirs single-file like the streaming ingest: repartition(1)
-    exploded(emb.filter(F.col("vec_id") < 50)).repartition(1).write.mode(
-        "overwrite"
-    ).parquet(f"{idx}/lsh/b0")
-    exploded(
-        emb.filter((F.col("vec_id") >= 50) & (F.col("vec_id") < 100))
-    ).repartition(1).write.mode("overwrite").parquet(f"{idx}/lsh/b1")
+    _write_index_batch(exploded(emb.filter(F.col("vec_id") < 50)), idx, "lsh", 0)
+    _write_index_batch(
+        exploded(emb.filter((F.col("vec_id") >= 50) & (F.col("vec_id") < 100))), idx, "lsh", 1
+    )
 
     probe = _probe_embedding(spark, sf_dir, 1)
     targets = OV.probe_buckets(probe, 64, 8, 4, 4)

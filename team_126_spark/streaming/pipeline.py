@@ -26,7 +26,7 @@ of the DuckDB oracle discipline.
 
 from __future__ import annotations
 
-from typing import Iterable, Iterator
+from typing import Iterable, Iterator, NamedTuple
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -206,25 +206,20 @@ def stream_neardup_probe(
 
     Layout: `index_dir/sigs/b<id>/` (doc, signature) and
     `index_dir/bands/b<id>/` (doc, band, bkey) parquet, one subdir per
-    batch, read back with a `/*` glob. Batch-retry semantics: EVERY write
-    a batch performs is an overwrite of a batch-keyed location — the
-    pairs output (out_dir/batch=<id>) AND the index subdirs — so a
+    batch, read back through `read_index_layout`. Batch-retry semantics:
+    EVERY write a batch performs is an overwrite of a batch-keyed location
+    — the pairs output (out_dir/batch=<id>) AND the index subdirs — so a
     checkpoint replay after a crash between writes rewrites exactly the
-    same state instead of appending duplicate sig rows (a plain append
-    would fan out the estimate join of every LATER batch into duplicate
-    pair rows). A replayed batch probes an index that already contains
-    its own rows under b<batch_id>/ (written by the crashed attempt); the
-    probe therefore excludes exactly that subdir's files from the glob
-    read (an input_file_name filter — NOT a doc-id anti-join, which would
-    also drop a legitimately re-ingested doc_id's older corpus entries),
-    so the replay sees exactly the index state the original attempt saw
-    and emits the IDENTICAL pair set — not a superset with extra
+    same state instead of appending duplicate sig rows. A replayed batch
+    probes an index that already contains its own rows under b<batch_id>/
+    (written by the crashed attempt); the probe leaves that dir out of its
+    read, so the replay sees exactly the index state the original attempt
+    saw and emits the IDENTICAL pair set — not a superset with extra
     intra-batch pairs. Re-ingested doc ids pair normally against their
     older index entries; exact self-matches are dropped inside
-    minhash_lsh_probe. Seed the index by
-    writing the existing corpus's signatures/bands to
-    `index_dir/{sigs,bands}/seed/` before starting the stream (tests do
-    exactly that).
+    minhash_lsh_probe. Seed the index by writing the existing corpus's
+    signatures/bands to `index_dir/{sigs,bands}/seed/` before starting the
+    stream (tests do exactly that).
     """
     from ..operators.dedup import banded_signatures, checkpointed_signatures, minhash_lsh_probe
 
@@ -232,39 +227,15 @@ def stream_neardup_probe(
         spark = bdf.sparkSession
         # the pairs write below fills it; the index writes re-read it
         sigs = checkpointed_signatures(bdf, text_col, id_col, k, hash_fn)
-        # Crash-replay exactness: a replayed batch's own sigs/bands may
-        # already sit under b<batch_id>/ from the crashed attempt. Exclude
-        # exactly that subdir — by file path, not by doc id (ADVICE r7): a
-        # doc-id anti-join would also drop a legitimately re-ingested
-        # doc_id's OLDER corpus entries, silently losing every cross pair
-        # between the rest of the batch and those entries. Scoping to the
-        # b<batch_id>/ files makes replay probe precisely the pre-batch
-        # index state with no assumption that doc ids are never re-ingested
-        # (re-ingested ids pair against their older entries; exact
-        # self-matches are dropped inside minhash_lsh_probe).
-        corpus_sigs = spark.read.parquet(f"{index_dir}/sigs/*").filter(
-            ~F.input_file_name().contains(f"/sigs/b{batch_id}/")
-        )
-        corpus_banded = spark.read.parquet(f"{index_dir}/bands/*").filter(
-            ~F.input_file_name().contains(f"/bands/b{batch_id}/")
-        )
         pairs = minhash_lsh_probe(
-            bdf, corpus_sigs, text_col, id_col, k, bands, threshold, hash_fn,
-            corpus_banded=corpus_banded, new_sigs=sigs,
+            bdf, read_index_layout(spark, index_dir, "sigs", batch_id),
+            text_col, id_col, k, bands, threshold, hash_fn,
+            corpus_banded=read_index_layout(spark, index_dir, "bands", batch_id),
+            new_sigs=sigs,
         )
         pairs.write.mode("overwrite").parquet(f"{out_dir}/batch={batch_id}")
-        # batch index subdirs are micro-batch-sized by construction — write
-        # them as single files so the index glob doesn't accumulate
-        # shuffle-partition-count tiny files per batch (the corpus-scale
-        # seed/backfill under seed/ stays partitioned). repartition(1), not
-        # coalesce(1): coalesce would narrow the banding computation to one
-        # core; the exchange keeps it parallel and only the write is 1-file.
-        sigs.repartition(1).write.mode("overwrite").parquet(
-            f"{index_dir}/sigs/b{batch_id}"
-        )
-        banded_signatures(sigs, bands).repartition(1).write.mode("overwrite").parquet(
-            f"{index_dir}/bands/b{batch_id}"
-        )
+        _write_index_batch(sigs, index_dir, "sigs", batch_id)
+        _write_index_batch(banded_signatures(sigs, bands), index_dir, "bands", batch_id)
 
     q = (
         docs_stream.writeStream.foreachBatch(probe_batch)
@@ -520,21 +491,19 @@ def stream_semdedup_probe(
     provider via `embedder`), assigns them to IVF cells over the FIXED
     `centroids` (fit once on the seed corpus — drifting centroids would
     silently re-shard the index), probes the PERSISTED per-cell vector
-    index at `index_dir/vecs/*`, writes match pairs to
-    `out_dir/batch=<id>`, and appends its own (doc, vec, cell) rows under
+    index `index_dir/vecs/`, writes match pairs to `out_dir/batch=<id>`,
+    and appends its own (doc, vec, cell) rows under
     `index_dir/vecs/b<batch_id>` — so the next batch near-dups against
     THIS one. Per-batch cost ∝ batch size × its cells' population; the
-    corpus is never re-embedded, and at 100 TB the index is written
-    partitionBy(cell) so a batch reads only its own cells' files.
+    corpus is never re-embedded, and compact_index rewrites seed/
+    partitioned by cell, so a batch reads only its own cells' files.
 
     Crash-replay exactness (the stream_neardup_probe contract): every
-    write is a batch-keyed overwrite, and the probe excludes exactly the
-    crashed attempt's b<batch_id>/ files from the glob read (an
-    input_file_name filter — never a doc-id anti-join, which would drop a
-    legitimately re-ingested doc_id's older corpus entries); exact
-    self-matches are dropped inside embedding_index_probe. Seed the index
-    by writing the existing corpus's vectors+cells to
-    `index_dir/vecs/seed/` before starting the stream."""
+    write is a batch-keyed overwrite, and the probe leaves the crashed
+    attempt's b<batch_id>/ dir out of its read; exact self-matches are
+    dropped inside embedding_index_probe. Seed the index by writing the
+    existing corpus's vectors+cells to `index_dir/vecs/seed/` before
+    starting the stream."""
     from ..functions.embed import embed
     from ..functions.vector import norm as _vnorm
     from ..operators.vector import embedding_index_probe, with_ivf_cell
@@ -557,16 +526,10 @@ def stream_semdedup_probe(
             .withColumnRenamed("ivf_cell", "cell")
             .withColumn("_norm", _vnorm(F.col("vec")))
         )
-        corpus = spark.read.parquet(f"{index_dir}/vecs/*").filter(
-            ~F.input_file_name().contains(f"/vecs/b{batch_id}/")
-        )
+        corpus = read_index_layout(spark, index_dir, "vecs", batch_id)
         pairs = embedding_index_probe(vecs, corpus, "vec", "doc", threshold)
         pairs.write.mode("overwrite").parquet(f"{out_dir}/batch={batch_id}")
-        # micro-batch-sized subdir: repartition(1), never coalesce(1) — the
-        # same single-file/parallel-compute trade as the minhash index
-        vecs.repartition(1).write.mode("overwrite").parquet(
-            f"{index_dir}/vecs/b{batch_id}"
-        )
+        _write_index_batch(vecs, index_dir, "vecs", batch_id)
 
     q = (
         docs_stream.writeStream.foreachBatch(probe_batch)
@@ -589,8 +552,8 @@ def stream_dup_spans(
     """Streaming ingest-time SPAN dedup — the ExactSubstr gate as the 13th
     streaming surface (the stream_neardup_probe contract, n-gram-index
     flavor): each micro-batch hashes its own k-grams, flags every
-    position whose gram exists in the PERSISTED distinct-gram index at
-    `index_dir/grams/*`, merges flagged positions into maximal spans
+    position whose gram exists in the PERSISTED distinct-gram index
+    `index_dir/grams/`, merges flagged positions into maximal spans
     (operators/dedup.dup_spans_probe), writes spans to
     `out_dir/batch=<id>`, and appends its own DISTINCT gram hashes under
     `index_dir/grams/b<batch_id>` — so the next batch's spans see THIS
@@ -599,12 +562,12 @@ def stream_dup_spans(
     compact_index(..., subdirs=("grams",)) folds the per-batch dirs into
     seed/ like the MinHash and semantic layouts.
 
-    Crash-replay exactness: batch-keyed overwrites + the probe excludes
-    exactly the crashed attempt's b<batch_id>/ files via input_file_name
-    (never an anti-join on content). Seed by writing the existing
-    corpus's distinct gram hashes to `index_dir/grams/seed/`; an
-    UNSEEDED stream is also valid (ADVICE r9) — a missing/empty grams/
-    layout reads as an empty index instead of throwing on batch 0, so a
+    Crash-replay exactness: batch-keyed overwrites + the probe leaves the
+    crashed attempt's b<batch_id>/ dir out of its read (never an
+    anti-join on content). Seed by writing the existing corpus's distinct
+    gram hashes to `index_dir/grams/seed/`; an UNSEEDED stream is also
+    valid (ADVICE r9) — `read_index_layout` reads a missing/empty grams/
+    layout as an empty index instead of throwing on batch 0, so a
     brand-new corpus can start from its own first micro-batch. Appends
     are anti-joined against the probed index (ADVICE r9): only hashes
     the index has never seen land in b<batch_id>/, so the index stays
@@ -619,21 +582,14 @@ def stream_dup_spans(
         # checkpoint the batch's grams ONCE: the span probe and the index
         # append both read them (the seed-embed-once lesson)
         grams = materialize(span_grams(bdf, text_col, id_col, k))
-        jvm = spark._jvm
-        groot = jvm.org.apache.hadoop.fs.Path(f"{index_dir}/grams")
-        fs = groot.getFileSystem(spark._jsc.hadoopConfiguration())
-        if fs.exists(groot) and list(fs.globStatus(jvm.org.apache.hadoop.fs.Path(f"{index_dir}/grams/*"))):
-            corpus = spark.read.parquet(f"{index_dir}/grams/*").filter(
-                ~F.input_file_name().contains(f"/grams/b{batch_id}/")
-            ).select("h")
-        else:
-            corpus = spark.createDataFrame([], "h bigint")
+        corpus = read_index_layout(spark, index_dir, "grams", batch_id).select("h")
         flagged = grams.join(corpus, "h", "left_semi")
         spans = merge_flagged_spans(flagged, id_col, k)
         spans.write.mode("overwrite").parquet(f"{out_dir}/batch={batch_id}")
-        grams.select("h").distinct().join(corpus, "h", "left_anti").repartition(
-            1
-        ).write.mode("overwrite").parquet(f"{index_dir}/grams/b{batch_id}")
+        _write_index_batch(
+            grams.select("h").distinct().join(corpus, "h", "left_anti"),
+            index_dir, "grams", batch_id,
+        )
 
     q = (
         docs_stream.writeStream.foreachBatch(probe_batch)
@@ -644,9 +600,27 @@ def stream_dup_spans(
     q.awaitTermination()
 
 
-# layouts that are logically SETS (probed by left_semi): compaction dedups
-# them; per-doc signature layouts (sigs/bands/vecs) keep row multiplicity
-_DISTINCT_LAYOUTS = ("grams",)
+class _Layout(NamedTuple):
+    """How one ingest-index layout under `index_dir` is stored."""
+
+    # blocking key compact_index partitions seed/ by, so a probe joining on
+    # it reads only its own keys' directories; sigs join on doc id and grams
+    # on the hash itself, so neither is partitioned
+    key: str | None = None
+    # a SET probed by left_semi: compaction dedups it (the per-doc layouts
+    # keep row multiplicity)
+    is_set: bool = False
+    # schema an unseeded layout reads as; None: it must be seeded first
+    empty: str | None = None
+
+
+_LAYOUTS = {
+    "sigs": _Layout(),
+    "bands": _Layout(key="band"),
+    "vecs": _Layout(key="cell"),
+    "grams": _Layout(is_set=True, empty="h bigint"),
+    "lsh": _Layout(key="lsh_bucket"),
+}
 
 
 def _manifest_write(fs, jvm, path: str, names: list[str]) -> None:
@@ -670,24 +644,86 @@ def _manifest_read(fs, jvm, path: str) -> list[str]:
     return [n for n in blob.split("\n") if n]
 
 
+def read_index_layout(
+    spark: SparkSession, index_dir: str, layout: str, exclude_batch: int | None = None
+) -> DataFrame:
+    """Read one ingest-index layout (seed/ plus its per-batch b<id>/ dirs)
+    as one DataFrame; the only reader of an index layout.
+
+    A compacted seed/ stores its blocking key as a directory column, so it
+    is read with seed/ as the base path (partition discovery), while b-dirs
+    store the key as a data column; `unionByName` stitches the two physical
+    layouts into one logical table. A raw `{layout}/*` glob cannot mix them
+    (CONFLICTING_DIRECTORY_STRUCTURES once a batch lands after a
+    compaction).
+
+    `exclude_batch` gives a replayed micro-batch the index state its first
+    attempt saw: the crashed attempt may already have written the batch's
+    own rows under b<exclude_batch>/, so that dir is not listed. The
+    exclusion is by path, never by doc id (ADVICE r7): a doc-id anti-join
+    would also drop a re-ingested doc id's OLDER corpus entries, losing
+    every cross pair between the rest of the batch and them.
+
+    A layout with neither seed/ nor b-dirs reads as its empty schema where
+    `_LAYOUTS` gives one (grams: a brand-new corpus starts from its own
+    first micro-batch, ADVICE r9) and raises FileNotFoundError otherwise."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path
+    root = hpath(f"{index_dir}/{layout}")
+    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
+    names = (
+        [st.getPath().getName() for st in fs.listStatus(root) if st.isDirectory()]
+        if fs.exists(root)
+        else []
+    )
+    skip = None if exclude_batch is None else f"b{exclude_batch}"
+    batches = sorted(f"{index_dir}/{layout}/{n}" for n in names if n.startswith("b") and n != skip)
+    parts = [spark.read.parquet(f"{index_dir}/{layout}/seed")] if "seed" in names else []
+    if batches:
+        parts.append(spark.read.parquet(*batches))
+    if not parts:
+        if _LAYOUTS[layout].empty is None:
+            raise FileNotFoundError(f"no seed/ or b*/ dirs under {index_dir}/{layout}")
+        return spark.createDataFrame([], _LAYOUTS[layout].empty)
+    # missing columns read as null: a vecs seed written before the layout
+    # carried `_norm` still unions with newer batch dirs
+    # (embedding_index_probe coalesce-guards the nulls)
+    return parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1], allowMissingColumns=True)
+
+
+def _write_index_batch(df: DataFrame, index_dir: str, layout: str, batch_id: int) -> None:
+    """Write one micro-batch's rows to `{layout}/b<batch_id>/`, the only
+    writer of a batch dir. It overwrites, so a replayed batch rewrites its
+    own dir instead of appending duplicate rows that would fan out every
+    later probe. A batch dir is micro-batch sized, so it is one file and the
+    layout does not gain a shuffle-partition count of tiny files per batch:
+    repartition(1), never coalesce(1), which would narrow the computation
+    behind the write to one core; the exchange keeps it parallel."""
+    df.repartition(1).write.mode("overwrite").parquet(f"{index_dir}/{layout}/b{batch_id}")
+
+
 def compact_index(
-    spark: SparkSession, index_dir: str, subdirs: tuple[str, ...] = ("sigs", "bands", "vecs")
+    spark: SparkSession, index_dir: str, subdirs: tuple[str, ...] = tuple(_LAYOUTS)
 ) -> dict:
     """Ingest-index maintenance: fold the accumulated per-batch b<id>/
-    subdirs into the corpus-scale seed/ partition — the compaction step
-    every growing index needs (a year of micro-batches is a year of tiny
-    subdirs: the glob read's file-listing cost grows linearly with batch
-    COUNT even though the data doesn't). For each existing layout subdir
-    (sigs/bands for the MinHash index, vecs for the semantic one): read
-    seed/* plus every b*/, rewrite the union to a temp dir, SWAP it into
-    place, then drop the folded sources.
+    subdirs into the corpus-scale seed/ — the compaction step every growing
+    index needs (a year of micro-batches is a year of tiny subdirs: the
+    file-listing cost grows linearly with batch COUNT even though the data
+    doesn't). For each existing layout subdir: read seed/ plus every b<id>/
+    through `read_index_layout`, rewrite the union to a temp dir
+    partitioned by the layout's blocking key (`_LAYOUTS`: bands by band,
+    vecs by cell, lsh by lsh_bucket; sigs and grams flat; grams deduped),
+    SWAP it into place, then drop the folded sources. A filter on the key
+    prunes to its seed/<key>=K/ directories (pinned in tests), and since
+    the probe side of an index join is a micro-batch (small → broadcast),
+    dynamic partition pruning can skip the directories its batch never
+    touches instead of scanning the whole corpus index.
 
     Crash-safe by rename-before-delete (ADVICE r8): the swap order is
     write tmp (with a `_FOLDED` manifest naming the b-dirs it absorbed) →
     rename seed → seed_old → rename tmp → seed → delete seed_old + exactly
     the manifested b-dirs. Every crash window leaves a full copy on disk
     and a recoverable marker; the next run auto-recovers instead of
-    re-reading a partial glob and overwriting the only copy:
+    re-reading a partial union and overwriting the only copy:
       * tmp + seed both exist   → crash before the swap: sources are
         intact, tmp is a stale snapshot — drop tmp, recompact fresh.
       * tmp exists, seed absent → crash mid-swap: finish it (tmp holds the
@@ -698,83 +734,15 @@ def compact_index(
     a stream that resumed AFTER the crash are not in it and survive to the
     next compaction. (`_`-prefixed files are invisible to parquet reads.)
 
-    Probe-equivalence is exact BY CONSTRUCTION — probes read the
-    `{layout}/*` glob, and compaction only moves rows between subdirs of
-    that glob (pinned in tests: identical pair sets before/after). Run it
-    BETWEEN stream restarts (it deletes locations an in-flight batch may
-    treat as its own b<batch_id> overwrite target); at 100 TB scale,
-    partition the seed rewrite by the blocking key (band / cell) so
-    probes prune files — `compact_index_partitioned`.
+    Probe-equivalence is exact BY CONSTRUCTION — probes read the layout
+    through `read_index_layout`, and compaction only moves rows between the
+    dirs it lists (pinned in tests: identical pair sets before/after). Run
+    it BETWEEN stream restarts (it deletes locations an in-flight batch may
+    treat as its own b<batch_id> overwrite target).
 
     Returns {subdir: n_batch_dirs_folded}. Local/HDFS-style dirs via the
     Hadoop FileSystem API — works on any Spark-supported filesystem.
     """
-    return _compact_index(spark, index_dir, subdirs, partition_cols=None)
-
-
-def compact_index_partitioned(
-    spark: SparkSession,
-    index_dir: str,
-    partition_cols: dict | None = None,
-    subdirs: tuple[str, ...] = ("sigs", "bands", "vecs"),
-) -> dict:
-    """`compact_index` with the 100 TB seed layout: rewrite each layout's
-    seed/ `partitionBy` its blocking key (default bands→band, vecs→cell)
-    so probe joins prune whole partition directories instead of scanning
-    the full corpus index. The probe side of the index join is a
-    micro-batch (small → broadcast), so Spark's dynamic partition pruning
-    can skip every seed/band=K/ (seed/cell=K/) directory the batch never
-    touches — at corpus scale that turns each probe from a full-index scan
-    into a read of only the batch's blocks. sigs/ stays unpartitioned (its
-    probe joins on doc id, not a block key). Crash-safety protocol is
-    identical to `compact_index` (rename-before-delete + `_FOLDED`
-    manifest). Probe-equivalence and file-pruning are pinned in
-    tests/test_streaming.py.
-
-    After a partitioned compaction, read the layout with
-    `read_index_layout` (handles a partitioned seed coexisting with
-    later unpartitioned b<id>/ ingest dirs; the raw `{layout}/*` glob
-    cannot mix the two)."""
-    if partition_cols is None:
-        partition_cols = {"bands": "band", "vecs": "cell"}
-    return _compact_index(spark, index_dir, subdirs, partition_cols=partition_cols)
-
-
-def read_index_layout(spark: SparkSession, index_dir: str, layout: str) -> DataFrame:
-    """Read one index layout (seed/ + any per-batch b<id>/ dirs) into a
-    single DataFrame, whether or not seed/ was rewritten partitioned.
-    A partitioned seed stores its blocking key as a directory column, so
-    it must be read with seed/ as the base path (partition discovery),
-    while b-dirs store the key as a data column — `unionByName` stitches
-    the two physical layouts back into one logical table. Equivalent to
-    the `{layout}/*` glob on an unpartitioned index."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    root = jvm.org.apache.hadoop.fs.Path(f"{index_dir}/{layout}")
-    fs = root.getFileSystem(conf)
-    parts = []
-    if fs.exists(jvm.org.apache.hadoop.fs.Path(f"{index_dir}/{layout}/seed")):
-        parts.append(spark.read.parquet(f"{index_dir}/{layout}/seed"))
-    has_batches = fs.exists(root) and any(
-        st.isDirectory() and st.getPath().getName().startswith("b")
-        for st in fs.listStatus(root)
-    )
-    if has_batches:
-        parts.append(spark.read.parquet(f"{index_dir}/{layout}/b*"))
-    if not parts:
-        raise FileNotFoundError(f"no seed/ or b*/ dirs under {index_dir}/{layout}")
-    df = parts[0]
-    for p in parts[1:]:
-        df = df.unionByName(p)
-    return df
-
-
-def _compact_index(
-    spark: SparkSession,
-    index_dir: str,
-    subdirs: tuple[str, ...],
-    partition_cols: dict | None,
-) -> dict:
     jvm = spark._jvm
     conf = spark._jsc.hadoopConfiguration()
     hpath = jvm.org.apache.hadoop.fs.Path
@@ -833,22 +801,16 @@ def _compact_index(
             folded[layout] = 0
             continue
 
-        # read_index_layout, not the raw glob: a prior partitioned
-        # compaction leaves seed's blocking key as a directory column,
-        # which the glob read cannot mix with unpartitioned b-dirs
+        spec = _LAYOUTS[layout]
         union = read_index_layout(spark, index_dir, layout)
-        if layout in _DISTINCT_LAYOUTS:
-            # the grams layout is a SET probed by left_semi (ADVICE r9):
-            # per-batch appends are only batch-distinct, so hashes shared
-            # with the seed/earlier batches would otherwise accumulate —
-            # correct for the probe, superlinear for the index. Compaction
-            # is the dedup point (signature layouts stay multi-row:
-            # sigs/bands/vecs carry per-doc rows, not set members).
+        if spec.is_set:
+            # per-batch appends are only batch-distinct (ADVICE r9), so
+            # hashes shared with the seed/earlier batches would otherwise
+            # accumulate — correct for the probe, superlinear for the index
             union = union.distinct()
         writer = union.write.mode("overwrite")
-        pcol = (partition_cols or {}).get(layout)
-        if pcol:
-            writer = writer.partitionBy(pcol)
+        if spec.key:
+            writer = writer.partitionBy(spec.key)
         writer.parquet(str(tmp))
         _manifest_write(fs, jvm, f"{str(tmp)}/_FOLDED", batch_dirs)
         # --- swap: rename before delete; a crash anywhere is recoverable ---
@@ -990,76 +952,6 @@ def read_cdc_snapshot(spark: SparkSession, snapshot_dir: str) -> DataFrame:
     return spark.read.parquet(_cdc_version_dir(spark, snapshot_dir))
 
 
-def user_running_state_tws(df: DataFrame) -> DataFrame:
-    """The `user_running_state` summary on Spark 4's transformWithState
-    API (StatefulProcessor + typed ValueState) instead of
-    applyInPandasWithState's single opaque tuple: state is declared as a
-    named, schema'd variable on the processor handle, the engine owns
-    layout/TTL/eviction (RocksDB state store), and init/close have
-    explicit lifecycle hooks — the forward path for custom stateful
-    operators (applyInPandasWithState remains for compatibility).
-
-    Emits the same (user_id, n_messages, total_value, last_ts,
-    last_event_type) row per user per micro-batch; the suite pins the two
-    APIs' outputs equal on the same input stream.
-
-    Environment gate (the Pillow-codec pattern, §7.4): the engine's
-    transformWithState driver worker imports google.protobuf at runtime
-    (its state-server protocol), which this container does not ship — the
-    pinned test importorskips protobuf and runs fully where it exists;
-    applyInPandasWithState (`user_running_state`) is the path exercised
-    live here.
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class RunningSummary(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._agg = handle.getValueState(
-                "agg", StructType(
-                    [
-                        StructField("n", LongType()),
-                        StructField("total", DoubleType()),
-                    ]
-                )
-            )
-
-        def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-            (user_id,) = key
-            n, total = (self._agg.get() or (0, 0.0)) if self._agg.exists() else (0, 0.0)
-            last_ts, last_type = None, None
-            for pdf in rows:
-                pdf = pdf.sort_values(["ts", "event_id"])
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-                last_ts = pdf["ts"].iloc[-1]
-                last_type = pdf["event_type"].iloc[-1]
-            self._agg.update((n, total))
-            yield pd.DataFrame(
-                [
-                    {
-                        "user_id": user_id,
-                        "n_messages": n,
-                        "total_value": round(total, 2),
-                        "last_ts": last_ts,
-                        "last_event_type": last_type,
-                    }
-                ]
-            )
-
-        def close(self) -> None:
-            pass
-
-    return df.groupBy("user_id").transformWithStateInPandas(
-        RunningSummary(),
-        outputStructType=RUNNING_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
 def stream_lsh_layout(
     vec_stream: DataFrame,
     index_dir: str,
@@ -1077,8 +969,7 @@ def stream_lsh_layout(
     EXPLODED (row, lsh_bucket) rows to `{index_dir}/lsh/b<batch_id>`.
     Batch dirs store lsh_bucket as a DATA column (micro-batch-sized —
     probes scan them whole, the bands/cells convention);
-    `compact_index_partitioned(..., subdirs=("lsh",),
-    partition_cols={"lsh": "lsh_bucket"})` folds them into a seed/
+    `compact_index(..., subdirs=("lsh",))` folds them into a seed/
     PARTITIONED by the bucket, so the corpus-scale side of every probe
     partition-prunes to its multi-probed buckets' directories while
     only the slim fresh batch dirs are scanned whole. Probe via
@@ -1100,9 +991,7 @@ def stream_lsh_layout(
             .withColumn("lsh_bucket", F.explode("lsh_buckets"))
             .drop("lsh_buckets")
         )
-        exploded.repartition(1).write.mode("overwrite").parquet(
-            f"{index_dir}/lsh/b{batch_id}"
-        )
+        _write_index_batch(exploded, index_dir, "lsh", batch_id)
 
     q = (
         vec_stream.writeStream.foreachBatch(write_batch)

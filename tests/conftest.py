@@ -16,11 +16,11 @@ SF_SMOKE = "/root/testdata/sf0.001"
 
 def pytest_report_header(config):
     """Surface which dependency-gated twins are live (VERDICT r4 #9): a
-    container upgrade flips the suite's 2 skips to passes — this line makes
+    container upgrade flips the suite's Pillow skip to a pass — this line makes
     that visible in the run header without re-reading the skip list."""
     import importlib.util
 
-    gates = {"pillow": "PIL", "protobuf": "google.protobuf"}
+    gates = {"pillow": "PIL"}
     states = []
     for name, module in gates.items():
         try:

@@ -191,6 +191,15 @@ def test_dedup_components_transitive_clusters(spark):
     assert again == got
 
 
+def test_dedup_components_checkpoints_only_id_and_label(spark):
+    """Each round's checkpoint stores (id, label) alone: the convergence
+    counter reads `_old` before the projection, so the result's plan scans
+    no `_old` column."""
+    pairs = spark.createDataFrame([(2, 3), (1, 2), (7, 9)], "id_a long, id_b long")
+    plan = D.dedup_components(pairs)._jdf.queryExecution().executedPlan().toString()
+    assert "Scan ExistingRDD" in plan and "_old" not in plan
+
+
 def test_dedup_components_long_chain_log_rounds(spark):
     """A 60-hop chain (diameter > the old one-hop max_iter=25) converges in
     O(log diameter) rounds thanks to pointer doubling, with correct labels —

@@ -3,6 +3,7 @@ counters, plus the streaming observedMetrics path."""
 
 from __future__ import annotations
 
+import ast
 import re
 from pathlib import Path
 
@@ -75,6 +76,31 @@ def test_materialize_is_the_only_checkpoint_seam():
         for i, line in enumerate(f.read_text().splitlines(), 1)
         if re.search(r"localCheckpoint\(|Observation\(", line)
     ]
+    assert found == []
+
+
+def test_read_index_layout_is_the_only_index_reader():
+    """No code in the program, its tools or bench.py reads an ingest-index
+    layout (sigs, bands, vecs, grams, lsh) by path or glob, or writes a
+    b<id>/ batch dir: reads go through streaming.pipeline.read_index_layout
+    and batch writes through its batch writer, which take the layout name
+    as a value."""
+    layout = r"/(sigs|bands|vecs|grams|lsh)"
+    files = [ROOT / "bench.py", *ROOT.glob("team_126_spark/**/*.py"), *ROOT.glob("tools/**/*.py")]
+    found = []
+    for f in files:
+        for node in ast.walk(ast.parse(f.read_text())):
+            if not (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "parquet"
+                and node.args
+            ):
+                continue
+            path = ast.unparse(node.args[0])
+            is_read = isinstance(node.func.value, ast.Attribute) and node.func.value.attr == "read"
+            if re.search(layout + r"/(\*|b\{|b\d)", path) or (is_read and re.search(layout + r"\b", path)):
+                found.append(f"{f.relative_to(ROOT)}:{node.lineno}: {path}")
     assert found == []
 
 

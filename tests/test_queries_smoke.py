@@ -5,11 +5,14 @@ fast inside pytest."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 
 from team_126_spark.queries import REGISTRY
 
 SF_SMOKE = "/root/testdata/sf0.001"
+ROOT = Path(__file__).resolve().parents[1]
 
 
 @pytest.mark.parametrize("name", sorted(REGISTRY))
@@ -233,3 +236,29 @@ def test_cluster_keywords_shape(spark):
     assert by_cell and all(len(v) <= 5 for v in by_cell.values())
     # the window emits scores in rank order per cell
     assert all(v == sorted(v, reverse=True) for v in by_cell.values())
+
+
+def test_spark_entry_imports_its_own_checkout(tmp_path):
+    """The driver contract puts its own directory first on sys.path, so a
+    copy of the checkout that imports `__spark_entry__` runs the copy's
+    modules, not those of another checkout on the path."""
+    import shutil
+    import subprocess
+    import sys
+
+    copy = tmp_path / "checkout"
+    shutil.copytree(ROOT / "team_126_spark", copy / "team_126_spark",
+                    ignore=shutil.ignore_patterns("__pycache__"))
+    shutil.copy(ROOT / "__spark_entry__.py", copy)
+    load = (
+        "import importlib.util, sys\n"
+        "spec = importlib.util.spec_from_file_location('__spark_entry__', sys.argv[1])\n"
+        "spec.loader.exec_module(importlib.util.module_from_spec(spec))\n"
+        "import team_126_spark\n"
+        "print(team_126_spark.__file__)\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", load, str(copy / "__spark_entry__.py")],
+        cwd=tmp_path, capture_output=True, text=True, check=True,
+    ).stdout.strip().splitlines()[-1]
+    assert Path(out).resolve().is_relative_to(copy.resolve()), out

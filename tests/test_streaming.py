@@ -364,35 +364,6 @@ def test_stream_apply_cdc_maintains_snapshot(spark, tmp_path):
     assert v0 == {1: 10.0, 2: 21.0, 4: 40.0}
 
 
-def test_user_running_state_tws_matches_legacy_api(spark, events_batch, stream_dir):
-    """Spark 4 transformWithState twin: same per-user final summary as the
-    applyInPandasWithState path AND as the batch groupBy oracle. The
-    engine's transformWithState driver worker imports google.protobuf at
-    runtime (StateMessage proto) — absent in this container, so the test
-    importorskips it (the Pillow-codec gating pattern); it runs fully
-    wherever protobuf is installed."""
-    pytest.importorskip(
-        "google.protobuf.descriptor",
-        reason="transformWithState's state-server protocol needs protobuf at runtime",
-    )
-    src = STR.stream_events(spark, SF, stream_dir)
-    try:
-        got = STR.run_to_memory(
-            STR.user_running_state_tws(src), "t_state_tws", output_mode="update"
-        )
-    except Exception as e:  # pragma: no cover - environment-dependent backend
-        if "RocksDB" in str(e) or "state store" in str(e).lower() or "TransformWithState" in str(e):
-            pytest.skip(f"transformWithState backend unavailable: {e}")
-        raise
-    final = got.groupBy("user_id").agg(
-        F.max("n_messages").alias("n"), F.max("total_value").alias("total")
-    )
-    want = events_batch.groupBy("user_id").agg(
-        F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("total")
-    )
-    assert canon(final) == canon(want)
-
-
 def test_stream_enrich_equals_batch(spark, events_batch, stream_dir):
     """Stream-static enrichment drains to exactly the batch join answer
     (stateless — no watermark horizon to lose rows to), left-keeps events
@@ -814,9 +785,10 @@ def test_stream_dup_spans_replay_is_exact(spark, tmp_path):
 
 def test_compact_index_preserves_probe_results(spark, tmp_path):
     """Folding the accumulated b<id>/ subdirs into seed/ leaves every
-    probe's pair set IDENTICAL (probes read the glob; compaction only
-    moves rows between its subdirs) and removes the per-batch dirs for
-    both index layouts (MinHash sigs/bands and semantic vecs)."""
+    probe's pair set IDENTICAL (probes read through read_index_layout;
+    compaction only moves rows between the dirs it lists) and removes the
+    per-batch dirs for both index layouts (MinHash sigs/bands and
+    semantic vecs)."""
     import os
 
     from team_126_spark.operators.dedup import (
@@ -848,9 +820,9 @@ def test_compact_index_preserves_probe_results(spark, tmp_path):
     def minhash_pairs():
         return canon(
             minhash_lsh_probe(
-                probe_docs, spark.read.parquet(f"{index_dir}/sigs/*"),
+                probe_docs, STR.read_index_layout(spark, index_dir, "sigs"),
                 "text", "doc_id", threshold=0.3,
-                corpus_banded=spark.read.parquet(f"{index_dir}/bands/*"),
+                corpus_banded=STR.read_index_layout(spark, index_dir, "bands"),
             ),
             ["new_id", "corpus_id", "est_jaccard"],
         )
@@ -858,7 +830,7 @@ def test_compact_index_preserves_probe_results(spark, tmp_path):
     def vec_pairs():
         return canon(
             embedding_index_probe(
-                probe_vecs, spark.read.parquet(f"{index_dir}/vecs/*"),
+                probe_vecs, STR.read_index_layout(spark, index_dir, "vecs"),
                 "vec", "doc", 0.9,
             ),
             ["new_id", "corpus_id", "cos_sim"],
@@ -930,13 +902,13 @@ def test_compact_index_crash_recovery(spark, tmp_path):
     baseline = pairs(corpus)
     assert baseline
     STR.compact_index(spark, index_dir, subdirs=("vecs",))
-    assert pairs(spark.read.parquet(f"{index_dir}/vecs/*")) == baseline
+    assert pairs(STR.read_index_layout(spark, index_dir, "vecs")) == baseline
 
     # A) incomplete tmp (no _FOLDED), sources intact
     d, pairs_a = _vecs_layout(spark, tmp_path, "a")
     spark.read.parquet(f"{d}/vecs/b0").limit(3).write.parquet(f"{d}/vecs__compact_tmp")
     assert STR.compact_index(spark, d, subdirs=("vecs",)) == {"vecs": 2}
-    assert pairs_a(spark.read.parquet(f"{d}/vecs/*")) == baseline and only_seed(d)
+    assert pairs_a(STR.read_index_layout(spark, d, "vecs")) == baseline and only_seed(d)
 
     # B) complete tmp + manifest, seed renamed away (crash between renames)
     d, pairs_b = _vecs_layout(spark, tmp_path, "b")
@@ -945,7 +917,7 @@ def test_compact_index_crash_recovery(spark, tmp_path):
     shutil.move(f"{d}/vecs/seed", f"{d}/vecs__seed_old")
     # recovery finishes the swap; nothing new to fold afterwards
     assert STR.compact_index(spark, d, subdirs=("vecs",)) == {"vecs": 0}
-    assert pairs_b(spark.read.parquet(f"{d}/vecs/*")) == baseline and only_seed(d)
+    assert pairs_b(STR.read_index_layout(spark, d, "vecs")) == baseline and only_seed(d)
 
     # C) swap done, cleanup not run: seed holds the union + _FOLDED,
     #    seed_old and the folded b-dirs still on disk
@@ -955,7 +927,7 @@ def test_compact_index_crash_recovery(spark, tmp_path):
     shutil.move(f"{d}/vecs/seed", f"{d}/vecs__seed_old")
     shutil.move(f"{d}/vecs__compact_tmp", f"{d}/vecs/seed")
     assert STR.compact_index(spark, d, subdirs=("vecs",)) == {"vecs": 0}
-    assert pairs_c(spark.read.parquet(f"{d}/vecs/*")) == baseline and only_seed(d)
+    assert pairs_c(STR.read_index_layout(spark, d, "vecs")) == baseline and only_seed(d)
 
     # D) stale incomplete tmp + seed renamed away: roll seed_old back,
     #    then a fresh compaction folds the (intact) b-dirs
@@ -963,11 +935,11 @@ def test_compact_index_crash_recovery(spark, tmp_path):
     spark.read.parquet(f"{d}/vecs/b1").limit(2).write.parquet(f"{d}/vecs__compact_tmp")
     shutil.move(f"{d}/vecs/seed", f"{d}/vecs__seed_old")
     assert STR.compact_index(spark, d, subdirs=("vecs",)) == {"vecs": 2}
-    assert pairs_d(spark.read.parquet(f"{d}/vecs/*")) == baseline and only_seed(d)
+    assert pairs_d(STR.read_index_layout(spark, d, "vecs")) == baseline and only_seed(d)
 
 
-def test_compact_index_partitioned_prunes_and_round_trips(spark, tmp_path):
-    """compact_index_partitioned rewrites seed/ partitionBy the blocking
+def test_compact_index_partitions_seed_prunes_and_round_trips(spark, tmp_path):
+    """compact_index rewrites seed/ partitionBy the blocking
     key (vecs→cell): probe pairs are unchanged, a cell-filtered scan gets
     a PartitionFilter and touches only that cell's files, and a later
     unpartitioned b-dir coexists via read_index_layout (then re-compacts
@@ -979,9 +951,7 @@ def test_compact_index_partitioned_prunes_and_round_trips(spark, tmp_path):
     baseline = pairs(spark.read.parquet(f"{index_dir}/vecs/*"))
     assert baseline
 
-    assert STR.compact_index_partitioned(spark, index_dir, subdirs=("vecs",)) == {
-        "vecs": 2
-    }
+    assert STR.compact_index(spark, index_dir, subdirs=("vecs",)) == {"vecs": 2}
     # seed is now hive-partitioned by cell
     cell_dirs = [
         p for p in os.listdir(f"{index_dir}/vecs/seed") if p.startswith("cell=")
@@ -1014,13 +984,78 @@ def test_compact_index_partitioned_prunes_and_round_trips(spark, tmp_path):
     extra.write.parquet(f"{index_dir}/vecs/b9")
     mixed_count = STR.read_index_layout(spark, index_dir, "vecs").count()
     assert mixed_count == n_before + extra.count()
-    assert STR.compact_index_partitioned(spark, index_dir, subdirs=("vecs",)) == {
-        "vecs": 1
-    }
+    assert STR.compact_index(spark, index_dir, subdirs=("vecs",)) == {"vecs": 1}
     assert STR.read_index_layout(spark, index_dir, "vecs").count() == mixed_count
     assert sorted(
         p for p in os.listdir(f"{index_dir}/vecs") if not p.startswith(".")
     ) == ["seed"]
+
+
+def test_compaction_between_micro_batches_keeps_pair_sets(spark, tmp_path):
+    """An index compacted between stream runs keeps serving later
+    micro-batches: stream_neardup_probe and stream_semdedup_probe each
+    drain one batch, compact_index rewrites seed/ partitioned by the
+    blocking key, two more batches drain, and every batch's pairs equal
+    those of the same three batches drained in one run with no compaction.
+    The last batch reads a partitioned seed/ next to the flat b<id>/ its
+    predecessor wrote — a layout a raw `{layout}/*` glob cannot read
+    (CONFLICTING_DIRECTORY_STRUCTURES). The
+    vecs seed has no `_norm` column, like a seed written before the layout
+    carried one, so compaction also unions it with batch dirs that do."""
+    import glob
+    import os
+    import time
+
+    from team_126_spark.operators.dedup import banded_signatures, minhash_signatures
+
+    docs, assigned, cents = _semdedup_stream_fixture(spark)
+    seed_sigs = minhash_signatures(docs.filter(F.col("doc_id") % 4 == 0), "text", "doc_id", 3).filter(
+        F.col("signature").isNotNull()
+    )
+
+    t0 = time.time() - 60
+
+    def run(name, compact):
+        base = tmp_path / name
+        index_dir, src_dir = str(base / "index"), str(base / "incoming")
+        seed_sigs.write.parquet(f"{index_dir}/sigs/seed")
+        banded_signatures(seed_sigs, 16).write.parquet(f"{index_dir}/bands/seed")
+        assigned.filter(F.col("doc") % 4 == 0).write.parquet(f"{index_dir}/vecs/seed")
+
+        def drain(parts):
+            for part in parts:
+                # one file per part, stamped with its own mtime: the file
+                # source orders by mtime, so batch ids 0, 1, 2 hold parts 1, 2, 3
+                before = set(glob.glob(f"{src_dir}/*.parquet"))
+                docs.filter(F.col("doc_id") % 4 == part).coalesce(1).write.mode("append").parquet(src_dir)
+                for f in set(glob.glob(f"{src_dir}/*.parquet")) - before:
+                    os.utime(f, (t0 + part, t0 + part))
+            src = spark.readStream.schema(docs.schema).option("maxFilesPerTrigger", 1).parquet(src_dir)
+            STR.stream_neardup_probe(
+                src, index_dir, str(base / "mh"), str(base / "ck_mh"), threshold=0.3
+            )
+            STR.stream_semdedup_probe(
+                src, index_dir, str(base / "sem"), str(base / "ck_sem"), cents, threshold=0.9
+            )
+
+        if compact:
+            drain((1,))
+            assert STR.compact_index(spark, index_dir) == {"sigs": 1, "bands": 1, "vecs": 1}
+            for layout, key in (("bands", "band"), ("vecs", "cell")):
+                assert any(
+                    p.startswith(f"{key}=") for p in os.listdir(f"{index_dir}/{layout}/seed")
+                ), layout
+            drain((2, 3))
+        else:
+            drain((1, 2, 3))
+        return [
+            canon(spark.read.parquet(str(base / out)), ["batch", "new_id", "corpus_id", sim])
+            for out, sim in (("mh", "est_jaccard"), ("sem", "cos_sim"))
+        ]
+
+    plain = run("plain", compact=False)
+    assert all(plain)
+    assert run("compacted", compact=True) == plain
 
 
 def test_compact_index_first_compaction_crash_window(spark, tmp_path):
@@ -1113,9 +1148,9 @@ def test_stream_lsh_layout_matches_memory_and_compacts_partitioned(spark, tmp_pa
     stream_lsh_layout writes batch-keyed exploded (row, lsh_bucket)
     dirs; a probe over the stitched layout (seed + batch dirs) returns
     the IDENTICAL candidate set to the in-memory lsh_candidates on the
-    full corpus; compact_index_partitioned(partition_cols lsh_bucket)
-    folds the batch dirs into a bucket-partitioned seed with the probe
-    unchanged, a PartitionFilter in the plan, and a strict file subset
+    full corpus; compact_index(subdirs=("lsh",)) folds the batch dirs
+    into a bucket-partitioned seed with the probe unchanged, a
+    PartitionFilter in the plan, and a strict file subset
     for one bucket; a stream restart (same source, fresh checkpoint)
     rewrites identical batch dirs (replay exactness)."""
     import glob as pyglob
@@ -1187,9 +1222,7 @@ def test_stream_lsh_layout_matches_memory_and_compacts_partitioned(spark, tmp_pa
 
     # partitioned compaction: probe unchanged, seed hive-partitioned,
     # bucket filter prunes to a strict file subset
-    folded = STR.compact_index_partitioned(
-        spark, index_dir, subdirs=("lsh",), partition_cols={"lsh": "lsh_bucket"}
-    )
+    folded = STR.compact_index(spark, index_dir, subdirs=("lsh",))
     assert folded == {"lsh": 2}
     assert sorted(os.listdir(f"{index_dir}/lsh")) == ["seed"]
     assert layout_cands() == want

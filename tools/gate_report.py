@@ -19,19 +19,13 @@ GATES = {
         "real image decode/feature path (operators/multimodal.py)",
         "deterministic fake codec exercised by test_sources_multimodal",
     ),
-    "protobuf": (
-        "google.protobuf",
-        "transformWithStateInPandas twin (streaming/pipeline.py)",
-        "applyInPandasWithState twin exercised by test_streaming",
-    ),
 }
 
-# Install attempts (VERDICT r6 #9, re-attempted r7/r8/r9): both
-# `import PIL` and `import google.protobuf` raise ModuleNotFoundError in
-# this container (r9 re-probe: 0/2 live), and the build environment
+# Install attempts (VERDICT r6 #9, re-attempted r7/r8/r9): `import PIL`
+# raises ModuleNotFoundError in this container, and the build environment
 # prohibits package installation (no pip/apt) — the gate cannot be
 # flipped from inside the repo; it flips automatically on a container
-# upgrade that ships the packages (importlib probe below).
+# upgrade that ships the package (importlib probe below).
 
 
 def main() -> int:
