@@ -291,6 +291,24 @@ HEADLINE = [
 ]
 
 
+def measure(spark, fn, sf_dir: str) -> tuple[float, float, list[float]]:
+    """Time `fn(spark, sf_dir)` into a noop sink three times: (median,
+    spread, runs). The MEDIAN, because the min rewards a lucky run and the
+    mean is dragged by one-off JIT/GC/OS stalls; the n=3 median damps the
+    box's documented contention noise (SCALING.md) that made r02's
+    simhash/minhash rows look regressed."""
+    runs = []
+    for _ in range(3):
+        t0 = time.time()
+        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        runs.append(time.time() - t0)
+    med = sorted(runs)[1]
+    # per-row noise indicator: (max-min)/median. A row with spread > ~1
+    # was hit by contention mid-measurement.
+    spr = round((max(runs) - min(runs)) / med, 2) if med > 0 else 0.0
+    return round(med, 3), spr, runs
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0)
@@ -343,26 +361,10 @@ def main() -> None:
     except OSError:  # pragma: no cover
         pass
 
-    # Three timed runs per query, report the MEDIAN: the min rewards a lucky
-    # run and the mean is dragged by one-off JIT/GC/OS stalls; the n=3
-    # median damps the box's documented contention noise (SCALING.md) that
-    # made r02's simhash/minhash rows look regressed.
-    def measure(fn):
-        runs = []
-        for _ in range(3):
-            t0 = time.time()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            runs.append(time.time() - t0)
-        med = sorted(runs)[1]
-        # per-row noise indicator: (max-min)/median. A row with spread > ~1
-        # was hit by contention mid-measurement.
-        spr = round((max(runs) - min(runs)) / med, 2) if med > 0 else 0.0
-        return round(med, 3), spr, runs
-
     timings: dict[str, float] = {}
     spread: dict[str, float] = {}
     for name, fn in benched.items():
-        timings[name], spread[name], runs = measure(fn)
+        timings[name], spread[name], runs = measure(spark, fn, sf_dir)
         if spread[name] > 1.0:
             # self-adjudicating contention marker (VERDICT r8 #5): the
             # row's median was measured under shifting load — read it with
@@ -380,7 +382,7 @@ def main() -> None:
     # number silently disappears.
     reruns: dict[str, dict] = {}
     for name in [n for n, s in spread.items() if s > 1.0]:
-        med2, spr2, _ = measure(benched[name])
+        med2, spr2, _ = measure(spark, benched[name], sf_dir)
         reruns[name] = {
             "first_median": timings[name], "first_spread": spread[name],
             "rerun_median": med2, "rerun_spread": spr2,

@@ -5026,14 +5026,15 @@ def _minhash_index_probe_oracle_sql(bands: int = 16, threshold: float = 0.3) -> 
     "minhash_index_probe",
     oracle=_minhash_index_probe_oracle_sql(bands=16, threshold=0.3),
     doc="§2.10/§2.12 the streaming ingest-index layout under the batch "
-    "oracle gate (VERDICT r6 #6): builds the SAME persisted "
-    "index_dir/{sigs,bands}/b<id>/ parquet layout stream_neardup_probe "
-    "maintains (seed = sources other than src0/src1; b0 = src0), then "
-    "replays two ingest batches — b0 probes the seed subdir, b1 (src1) "
-    "probes the GROWN index (read_index_layout) — reproducing the "
-    "cross-batch pair set exactly (streaming/pipeline.stream_neardup_probe; "
-    "md5 family → full DuckDB twin). Per-batch cost ∝ batch size; the "
-    "corpus is never re-signed — the append-only 100 TB ingest shape",
+    "oracle gate (VERDICT r6 #6): seeds index_dir/{sigs,bands}/seed/ "
+    "(sources other than src0/src1), runs stream_neardup_probe's own "
+    "per-batch function, streaming/pipeline.neardup_step, for batch 0 "
+    "(src0: probes the seed, writes its pairs, appends b0/), reads those "
+    "pairs back and unions the step's own probe, neardup_batch_probe, "
+    "of batch 1 (src1) against the GROWN index — so the oracle checks "
+    "the code the stream runs (md5 family → full "
+    "DuckDB twin). Per-batch cost ∝ batch size; the corpus is never "
+    "re-signed — the append-only 100 TB ingest shape",
 )
 def q_minhash_index_probe(spark, sf_dir):
     return _minhash_index_probe_impl(spark, sf_dir, hash_fn="md5")
@@ -5042,33 +5043,37 @@ def q_minhash_index_probe(spark, sf_dir):
 _PID_INDEX_DIRS: set = set()
 
 
-def _cleanup_pid_index_dirs() -> None:
-    import shutil
-
-    for p in _PID_INDEX_DIRS:
-        shutil.rmtree(p, ignore_errors=True)
-
-
 def _pid_index_dir(kind: str, sf_dir: str) -> str:
-    """Per-run unique index dir (ADVICE r7): a fixed path let two
-    concurrent runs (e.g. bench + oracle sweep) interleave overwrite
-    writes with the other run's lazy glob reads. PID keeps it
-    deterministic WITHIN a run (same path -> idempotent overwrite),
-    unique across processes; TEAM126_INDEX_BASE overrides the base for
-    non-/tmp environments. Registered for atexit removal so repeated
-    runs don't accumulate corpus-sized parquet trees (ADVICE r8)."""
+    """Empty per-run index dir for one replay of an index-probe row
+    (ADVICE r7): a fixed path let two concurrent runs (e.g. bench + oracle
+    sweep) interleave overwrite writes with the other run's reads, so the
+    path carries the PID; TEAM126_INDEX_BASE overrides the base for
+    non-/tmp environments. Emptied on every call, so a replay never reads
+    what an earlier call left (whose returned DataFrame then stops being
+    readable, as with any rewrite of its files). Registered for atexit
+    removal so repeated runs don't accumulate parquet trees (ADVICE r8)."""
     import atexit
     import os
+    import shutil
 
     base = os.environ.get("TEAM126_INDEX_BASE", "/tmp")
     path = (
         f"{base}/team126_{kind}_index_{os.getpid()}_"
         f"{os.path.basename(sf_dir.rstrip('/'))}"
     )
-    if not _PID_INDEX_DIRS:
-        atexit.register(_cleanup_pid_index_dirs)
-    _PID_INDEX_DIRS.add(path)
+    shutil.rmtree(path, ignore_errors=True)
+    if path not in _PID_INDEX_DIRS:
+        _PID_INDEX_DIRS.add(path)
+        atexit.register(shutil.rmtree, path, ignore_errors=True)
     return path
+
+
+def _replayed(spark, out_dir: str, probe1: DataFrame, cols: list) -> DataFrame:
+    """An index-probe row's result: batch 0's output as its stream step
+    wrote it under `out_dir`, then the step's own probe of batch 1, lazy
+    (batch 1's index append would go unread, so the row skips it)."""
+    batch1 = probe1.withColumn("batch", F.lit(1)).select(cols)
+    return spark.read.parquet(out_dir).select(cols).unionByName(batch1)
 
 
 def _minhash_index_probe_impl(spark, sf_dir, hash_fn: str):
@@ -5077,39 +5082,21 @@ def _minhash_index_probe_impl(spark, sf_dir, hash_fn: str):
     signature hash family differs (md5 = oracle-checkable, xxhash64 =
     production; the twin separates md5 CPU from the ingest-index plan
     cost, the bootstrap_ci_xx precedent)."""
-    from .streaming.pipeline import _write_index_batch, read_index_layout
+    from .streaming.pipeline import neardup_batch_probe, neardup_step
 
     docs = load(spark, sf_dir, "documents")
     idx = _pid_index_dir(f"minhash_{hash_fn}", sf_dir)
-    seed = docs.filter(~F.col("source").isin("src0", "src1"))
-    b0 = docs.filter(F.col("source") == "src0")
-    b1 = docs.filter(F.col("source") == "src1")
-
-    # each side's signatures are signed once: its sigs write fills the
-    # checkpoint, and its banding (and b0's probe) read it back
-    seed_sigs = D.checkpointed_signatures(seed, "text", "doc_id", 3, hash_fn)
+    # the sigs write fills the checkpoint; the banding reads it back
+    seed_sigs = D.checkpointed_signatures(
+        docs.filter(~F.col("source").isin("src0", "src1")), "text", "doc_id", 3, hash_fn
+    )
     seed_sigs.write.mode("overwrite").parquet(f"{idx}/sigs/seed")
     D.banded_signatures(seed_sigs, 16).write.mode("overwrite").parquet(f"{idx}/bands/seed")
-    b0_sigs = D.checkpointed_signatures(b0, "text", "doc_id", 3, hash_fn)
-    _write_index_batch(b0_sigs, idx, "sigs", 0)
-    _write_index_batch(D.banded_signatures(b0_sigs, 16), idx, "bands", 0)
-
-    # batch 0 probes the index state {seed} (its own dir left out, as on a
-    # replay); batch 1 probes {seed, b0}, the streaming ingest's reads
-    p0 = D.minhash_lsh_probe(
-        b0, read_index_layout(spark, idx, "sigs", 0), "text", "doc_id",
-        k=3, bands=16, threshold=0.3, hash_fn=hash_fn,
-        corpus_banded=read_index_layout(spark, idx, "bands", 0),
-        new_sigs=b0_sigs,
-    )
-    p1 = D.minhash_lsh_probe(
-        b1, read_index_layout(spark, idx, "sigs"), "text", "doc_id",
-        k=3, bands=16, threshold=0.3, hash_fn=hash_fn,
-        corpus_banded=read_index_layout(spark, idx, "bands"),
-    )
-    return p0.select(F.lit(0).alias("batch"), "new_id", "corpus_id", "est_jaccard").unionByName(
-        p1.select(F.lit(1).alias("batch"), "new_id", "corpus_id", "est_jaccard")
-    )
+    params = dict(text_col="text", id_col="doc_id", k=3, bands=16, threshold=0.3, hash_fn=hash_fn)
+    # batch 0 probes {seed} and appends b0/; batch 1 probes {seed, b0}
+    neardup_step(docs.filter(F.col("source") == "src0"), 0, idx, f"{idx}/pairs", **params)
+    p1 = neardup_batch_probe(docs.filter(F.col("source") == "src1"), 1, idx, **params)
+    return _replayed(spark, f"{idx}/pairs", p1, ["batch", "new_id", "corpus_id", "est_jaccard"])
 
 
 def _lsh_blocking_eval_oracle_sql(
@@ -7842,71 +7829,34 @@ def _semdedup_index_probe_oracle_sql(n_cells: int, threshold: float) -> str:
     oracle=_semdedup_index_probe_oracle_sql(n_cells=16, threshold=0.9),
     doc="§2.16 the streaming SEMANTIC ingest-index layout under the batch "
     "oracle gate (the minhash_index_probe pattern, embedding flavor): "
-    "builds the SAME persisted index_dir/vecs/b<id>/ parquet layout "
-    "stream_semdedup_probe maintains (seed = sources other than "
-    "src0/src1, HashEmbedder vectors + IVF cells over seed-fit "
-    "centroids), then replays two ingest batches — b0 probes the seed "
-    "subdir, b1 probes the GROWN index (read_index_layout) — "
-    "reproducing the cross-batch cosine pair set exactly. Per-batch cost "
-    "∝ batch size × its cells' population; the corpus is never "
-    "re-embedded (streaming/pipeline.stream_semdedup_probe; md5-family "
+    "seeds index_dir/vecs/seed/ (sources other than src0/src1, "
+    "HashEmbedder vectors + IVF cells over seed-fit centroids, "
+    "streaming/pipeline.vecs_index_rows), runs stream_semdedup_probe's "
+    "own per-batch function, semdedup_step, for batch 0 (probes the "
+    "seed, writes its pairs, appends b0/), reads those pairs back and "
+    "unions the step's own probe, semdedup_batch_probe, of batch 1 "
+    "against the GROWN index. Per-batch cost ∝ batch size × "
+    "its cells' population; the corpus is never re-embedded (md5-family "
     "embedder + centroids ⇒ full DuckDB twin of embed, assign, probe)",
 )
 def q_semdedup_index_probe(spark, sf_dir):
-    from .functions.embed import embed
-    from .streaming.pipeline import _write_index_batch, read_index_layout
+    from .streaming.pipeline import doc_vecs, semdedup_batch_probe, semdedup_step, vecs_index_rows
 
     docs = load(spark, sf_dir, "documents")
     idx = _pid_index_dir("semdedup", sf_dir)
-
-    def vecs_of(df):
-        return df.select(
-            F.col("doc_id").alias("doc"), embed(F.col("text")).alias("vec")
-        ).filter(F.col("vec").isNotNull())
-
-    # embed the seed corpus ONCE (checkpoint): the centroid sample, the
-    # cell assignment, and the index write all read it — without this the
-    # Arrow embed pass runs twice over the corpus-sized side (9.1 → 5.7 s
-    # at sf0.1)
-    seed_v = materialize(vecs_of(docs.filter(~F.col("source").isin("src0", "src1"))))
+    # embed the seed corpus ONCE (checkpoint): the centroid sample and the
+    # index write both read it — without this the Arrow embed pass runs
+    # twice over the corpus-sized side (9.1 → 5.7 s at sf0.1)
+    embedded = dict(text_col="text", id_col="doc_id", embedder=None)
+    seed_v = materialize(doc_vecs(docs.filter(~F.col("source").isin("src0", "src1")), **embedded))
     cents = OV.ivf_centroids(seed_v, "vec", "doc", 16)
-
-    from .functions.vector import norm as _vnorm
-
-    # `_norm` is persisted INTO the layout (r12, the builder's standing #2):
-    # each probe previously recomputed norm(vec) per corpus row per probe —
-    # the GROWN-index probe (b1) paid it over seed+b0 again. norm is a
-    # deterministic fn of vec and float round-trips parquet exactly, so the
-    # stored value is bit-identical to the recompute it replaces
-    # (embedding_index_probe coalesce-guards legacy layouts without it).
-    def assigned(df):
-        return (
-            OV.with_ivf_cell(vecs_of(df), "vec", cents)
-            .withColumnRenamed("ivf_cell", "cell")
-            .withColumn("_norm", _vnorm(F.col("vec")))
-        )
-
-    OV.with_ivf_cell(seed_v, "vec", cents).withColumnRenamed(
-        "ivf_cell", "cell"
-    ).withColumn("_norm", _vnorm(F.col("vec"))).write.mode("overwrite").parquet(
-        f"{idx}/vecs/seed"
-    )
-    # embedded once: the batch-dir write fills it, b0's probe reads it back
-    b0 = materialize(assigned(docs.filter(F.col("source") == "src0")), lazy=True)
-    _write_index_batch(b0, idx, "vecs", 0)
-
-    p0 = OV.embedding_index_probe(
-        b0, read_index_layout(spark, idx, "vecs", 0), "vec", "doc", threshold=0.9
-    )
-    b1 = materialize(assigned(docs.filter(F.col("source") == "src1")))
-    p1 = OV.embedding_index_probe(
-        b1, read_index_layout(spark, idx, "vecs"), "vec", "doc", threshold=0.9
-    )
-    return p0.select(
-        F.lit(0).alias("batch"), "new_id", "corpus_id", "cos_sim"
-    ).unionByName(
-        p1.select(F.lit(1).alias("batch"), "new_id", "corpus_id", "cos_sim")
-    )
+    vecs_index_rows(seed_v, cents).write.mode("overwrite").parquet(f"{idx}/vecs/seed")
+    b0, b1 = (docs.filter(F.col("source") == s) for s in ("src0", "src1"))
+    semdedup_step(b0, 0, idx, f"{idx}/pairs", centroids=cents, threshold=0.9, **embedded)
+    # embedded once for the probe's two reads of its side
+    b1 = materialize(vecs_index_rows(doc_vecs(b1, **embedded), cents))
+    p1 = semdedup_batch_probe(b1, 1, idx, threshold=0.9)
+    return _replayed(spark, f"{idx}/pairs", p1, ["batch", "new_id", "corpus_id", "cos_sim"])
 
 
 def _winnow_oracle_sql(k: int, w: int) -> str:
@@ -8375,40 +8325,32 @@ def _ngram_probe_oracle_sql(k: int) -> str:
 @declared(
     "ngram_index_probe",
     oracle=_ngram_probe_oracle_sql(5),
-    doc="\u00a72.17 the ExactSubstr gate INCREMENTALLY \u2014 batch twin of the "
-    "13th streaming surface (streaming/pipeline.stream_dup_spans): two "
-    "arrival-ordered batches probe the persisted distinct-gram index "
-    "(batch 0 vs the seed corpus's grams, batch 1 vs seed + batch 0), "
-    "flagged positions merge into maximal spans per batch. Each probe is "
-    "ONE semi join of the batch's grams against the index \u2014 cost \u221d "
+    doc="\u00a72.17 the ExactSubstr gate INCREMENTALLY \u2014 the 13th "
+    "streaming surface's batch replay: seeds the persisted distinct-gram "
+    "index index_dir/grams/seed/, runs stream_dup_spans's own per-batch "
+    "function, streaming/pipeline.dup_spans_step, for batch 0 (vs the "
+    "seed's grams; writes its spans, appends b0/), reads those spans "
+    "back and unions the step's own probe, dup_spans_batch_probe, of "
+    "batch 1 (vs seed + the grams batch 0 appended). Each probe is ONE "
+    "semi join of the batch's grams against the index \u2014 cost \u221d "
     "batch grams, never corpus size; the gram index is one slim bigint "
     "per distinct gram, folded by compact_index like the MinHash and "
-    "semantic layouts (operators/dedup.dup_spans_probe; stream-vs-batch "
-    "parity + replay exactness + compaction-equivalence pytest-pinned)",
+    "semantic layouts (stream-vs-batch parity + replay exactness + "
+    "compaction-equivalence pytest-pinned)",
 )
 def q_ngram_index_probe(spark, sf_dir):
+    from .streaming.pipeline import dup_spans_batch_probe, dup_spans_step
+
     docs = load(spark, sf_dir, "documents")
-    seed = docs.filter(~F.col("source").isin("src0", "src1"))
-    b0 = docs.filter(F.col("source") == "src0")
-    b1 = docs.filter(F.col("source") == "src1")
-    # checkpoint the seed gram set: it feeds BOTH probes (sp0's filter and
-    # sp1's union), and without the cut the corpus-sized gram explode +
-    # hash pass runs twice (r11, guide §1.2)
-    seed_h = materialize(D.span_grams(seed, "text", "doc_id", 5).select("h").distinct())
-    h0 = D.span_grams(b0, "text", "doc_id", 5).select("h").distinct()
-    sp0 = D.dup_spans_probe(b0, seed_h, "text", "doc_id", 5)
-    sp1 = D.dup_spans_probe(b1, seed_h.unionByName(h0).distinct(), "text", "doc_id", 5)
-    cast = lambda df: df.select(  # noqa: E731
-        "doc_id",
-        F.col("span_start").cast("bigint").alias("span_start"),
-        F.col("span_end").cast("bigint").alias("span_end"),
-        F.col("span_tokens").cast("bigint").alias("span_tokens"),
-        F.col("n_dup_grams").cast("bigint").alias("n_dup_grams"),
-    )
-    return (
-        cast(sp0).select(F.lit(0).alias("batch"), "*")
-        .unionByName(cast(sp1).select(F.lit(1).alias("batch"), "*"))
-    )
+    idx = _pid_index_dir("ngram", sf_dir)
+    D.span_grams(
+        docs.filter(~F.col("source").isin("src0", "src1")), "text", "doc_id", 5
+    ).select("h").distinct().write.mode("overwrite").parquet(f"{idx}/grams/seed")
+    b0, b1 = (docs.filter(F.col("source") == s) for s in ("src0", "src1"))
+    dup_spans_step(b0, 0, idx, f"{idx}/spans", text_col="text", id_col="doc_id", k=5)
+    sp1 = dup_spans_batch_probe(D.span_grams(b1, "text", "doc_id", 5), 1, idx, id_col="doc_id", k=5)
+    spans = [F.col(c).cast("bigint").alias(c) for c in ("span_start", "span_end", "span_tokens", "n_dup_grams")]
+    return _replayed(spark, f"{idx}/spans", sp1, ["batch", "doc_id", *spans])
 
 
 def _cluster_keywords_oracle_sql(n_cells: int, top_k: int) -> str:
@@ -8722,10 +8664,12 @@ def q_sliding_distinct(spark, sf_dir):
     """,
     doc="§2.18 partition-prunable LSH layout as a maintained INDEX (the "
     "14th streaming surface's batch replay, VERDICT r9 #6): the corpus "
-    "lands as three real parquet layout dirs (seed + two ingest "
-    "batches) of EXPLODED (row, lsh_bucket) rows — bucket ids are pure "
-    "row-local integer-plane arithmetic, so batches need no corpus "
-    "state — and the probe reads the stitched layout "
+    "lands as three real parquet layout dirs of EXPLODED (row, "
+    "lsh_bucket) rows — a seed from streaming/pipeline.lsh_index_rows "
+    "and two batches written by stream_lsh_layout's own per-batch "
+    "function, lsh_layout_step; bucket ids are pure row-local "
+    "integer-plane arithmetic, so batches need no corpus state — and "
+    "the probe reads the stitched layout "
     "(read_index_layout), filters to its multi-probed buckets (a "
     "PartitionFilter once compact_index rewrites seed/ partitionBy "
     "lsh_bucket), and dedups per id. Candidate set is "
@@ -8733,29 +8677,18 @@ def q_sliding_distinct(spark, sf_dir):
     "integer-plane twin (streaming/pipeline.stream_lsh_layout)",
 )
 def q_lsh_index_probe(spark, sf_dir):
-    from .streaming.pipeline import _write_index_batch, read_index_layout
+    from .streaming.pipeline import lsh_index_rows, lsh_layout_step, read_index_layout
 
     emb = load(spark, sf_dir, "embeddings")
+    probe = _probe_embedding(spark, sf_dir, 1)
     idx = _pid_index_dir("lshlayout", sf_dir)
-
-    def exploded(df):
-        return (
-            OV.with_lsh_buckets(
-                df.filter(F.col("embedding").isNotNull()), "embedding", 64, 8, 4
-            )
-            .withColumn("lsh_bucket", F.explode("lsh_buckets"))
-            .drop("lsh_buckets")
-        )
-
-    exploded(emb.filter(F.col("vec_id") >= 100)).write.mode("overwrite").parquet(
+    planes = dict(vec_col="embedding", dim=64, n_planes=8, n_tables=4)
+    lsh_index_rows(emb.filter(F.col("vec_id") >= 100), **planes).write.mode("overwrite").parquet(
         f"{idx}/lsh/seed"
     )
-    _write_index_batch(exploded(emb.filter(F.col("vec_id") < 50)), idx, "lsh", 0)
-    _write_index_batch(
-        exploded(emb.filter((F.col("vec_id") >= 50) & (F.col("vec_id") < 100))), idx, "lsh", 1
-    )
+    lsh_layout_step(emb.filter(F.col("vec_id") < 50), 0, idx, **planes)
+    lsh_layout_step(emb.filter((F.col("vec_id") >= 50) & (F.col("vec_id") < 100)), 1, idx, **planes)
 
-    probe = _probe_embedding(spark, sf_dir, 1)
     targets = OV.probe_buckets(probe, 64, 8, 4, 4)
     pv = F.array(*[F.lit(float(x)) for x in probe])
     return (

@@ -25,24 +25,31 @@ def cpu_count() -> int:
         return 8
 
 
-def configure(builder: SparkSession.Builder, shuffle_partitions: int | None = None) -> SparkSession.Builder:
-    """Apply engine defaults to any builder (also used on driver-provided sessions' conf)."""
-    n = shuffle_partitions or cpu_count()
-    return (
-        builder.config("spark.sql.shuffle.partitions", str(n))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.parquet.filterPushdown", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+def runtime_confs() -> dict[str, str]:
+    """Engine confs that are mutable at runtime: `configure` puts them on a
+    builder, `tune_session` on an externally created session."""
+    return {
+        "spark.sql.shuffle.partitions": str(cpu_count()),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
         # ObjectHashAggregate (collect_list/minhash kernels) falls back to
         # SORT-based aggregation after only 128 in-memory keys by default —
         # at any real per-partition group count that turns linear aggs
         # superlinear (measured 9x on simhash at 400k docs). 64k keys ×
         # ~1KB list state ≈ 64MB/task worst case: safe at executor sizes.
-        .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
+        "spark.sql.objectHashAggregate.sortBased.fallbackThreshold": "65536",
+    }
+
+
+def configure(builder: SparkSession.Builder) -> SparkSession.Builder:
+    """Apply engine defaults to any builder (also used on driver-provided sessions' conf)."""
+    return (
+        builder.config(map=runtime_confs())
+        .config("spark.sql.parquet.filterPushdown", "true")
+        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         # managed tables (bucketed layouts) land in /tmp, never the repo
@@ -64,15 +71,7 @@ def get_spark(app_name: str = "team_126_spark") -> SparkSession:
 def tune_session(spark: SparkSession) -> SparkSession:
     """Best-effort runtime tuning for an externally created session (e.g. the
     driver's). Only sets confs that are mutable at runtime."""
-    for key, value in [
-        ("spark.sql.session.timeZone", "UTC"),
-        ("spark.sql.adaptive.enabled", "true"),
-        ("spark.sql.adaptive.coalescePartitions.enabled", "true"),
-        ("spark.sql.adaptive.skewJoin.enabled", "true"),
-        ("spark.sql.shuffle.partitions", str(cpu_count())),
-        ("spark.sql.execution.arrow.pyspark.enabled", "true"),
-        ("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536"),
-    ]:
+    for key, value in runtime_confs().items():
         try:
             spark.conf.set(key, value)
         except Exception:

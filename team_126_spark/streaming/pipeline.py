@@ -26,6 +26,7 @@ of the DuckDB oracle discipline.
 
 from __future__ import annotations
 
+from functools import partial
 from typing import Iterable, Iterator, NamedTuple
 
 import pandas as pd
@@ -220,30 +221,65 @@ def stream_neardup_probe(
     minhash_lsh_probe. Seed the index by writing the existing corpus's
     signatures/bands to `index_dir/{sigs,bands}/seed/` before starting the
     stream (tests do exactly that).
+
+    Each micro-batch runs `neardup_step`; the `minhash_index_probe` row
+    runs it for batch 0 and its probe, `neardup_batch_probe`, for batch 1.
     """
-    from ..operators.dedup import banded_signatures, checkpointed_signatures, minhash_lsh_probe
+    _drain(docs_stream, checkpoint_dir, partial(
+        neardup_step, index_dir=index_dir, out_dir=out_dir, text_col=text_col, id_col=id_col,
+        k=k, bands=bands, threshold=threshold, hash_fn=hash_fn,
+    ))
 
-    def probe_batch(bdf: DataFrame, batch_id: int) -> None:
-        spark = bdf.sparkSession
-        # the pairs write below fills it; the index writes re-read it
-        sigs = checkpointed_signatures(bdf, text_col, id_col, k, hash_fn)
-        pairs = minhash_lsh_probe(
-            bdf, read_index_layout(spark, index_dir, "sigs", batch_id),
-            text_col, id_col, k, bands, threshold, hash_fn,
-            corpus_banded=read_index_layout(spark, index_dir, "bands", batch_id),
-            new_sigs=sigs,
-        )
-        pairs.write.mode("overwrite").parquet(f"{out_dir}/batch={batch_id}")
-        _write_index_batch(sigs, index_dir, "sigs", batch_id)
-        _write_index_batch(banded_signatures(sigs, bands), index_dir, "bands", batch_id)
 
-    q = (
-        docs_stream.writeStream.foreachBatch(probe_batch)
+def neardup_batch_probe(
+    bdf: DataFrame, batch_id: int, index_dir: str, *, text_col: str, id_col: str, k: int,
+    bands: int, threshold: float, hash_fn: str, sigs: DataFrame | None = None,
+) -> DataFrame:
+    """(new_id, corpus_id, est_jaccard) pairs of one micro-batch against the
+    sigs/bands index without its own b<batch_id>/ dir; `sigs`: the batch's
+    signatures if the caller holds them (minhash_lsh_probe's `new_sigs`)."""
+    from ..operators.dedup import minhash_lsh_probe
+
+    spark = bdf.sparkSession
+    return minhash_lsh_probe(
+        bdf, read_index_layout(spark, index_dir, "sigs", batch_id),
+        text_col, id_col, k, bands, threshold, hash_fn,
+        corpus_banded=read_index_layout(spark, index_dir, "bands", batch_id),
+        new_sigs=sigs,
+    )
+
+
+def neardup_step(
+    bdf: DataFrame, batch_id: int, index_dir: str, out_dir: str, *, text_col: str, id_col: str,
+    k: int, bands: int, threshold: float, hash_fn: str,
+) -> None:
+    """One micro-batch of `stream_neardup_probe`: sign the batch, write its
+    `neardup_batch_probe` pairs to `out_dir/batch=<batch_id>`, then append
+    the batch's sigs and bands."""
+    from ..operators.dedup import banded_signatures, checkpointed_signatures
+
+    # the pairs write below fills it; the index writes re-read it
+    sigs = checkpointed_signatures(bdf, text_col, id_col, k, hash_fn)
+    neardup_batch_probe(
+        bdf, batch_id, index_dir, text_col=text_col, id_col=id_col, k=k,
+        bands=bands, threshold=threshold, hash_fn=hash_fn, sigs=sigs,
+    ).write.mode("overwrite").parquet(f"{out_dir}/batch={batch_id}")
+    _write_index_batch(sigs, index_dir, "sigs", batch_id)
+    _write_index_batch(banded_signatures(sigs, bands), index_dir, "bands", batch_id)
+
+
+def _drain(stream: DataFrame, checkpoint_dir: str, step) -> None:
+    """Run `step(batch_df, batch_id)` on every micro-batch of `stream` that
+    is available now, tracking progress in `checkpoint_dir`, and wait for
+    it to finish (test/backfill harness; on a cluster drop the trigger for
+    continuous micro-batches)."""
+    (
+        stream.writeStream.foreachBatch(step)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
+        .awaitTermination()
     )
-    q.awaitTermination()
 
 
 STATE_SCHEMA = StructType(
@@ -352,13 +388,7 @@ def run_idempotent_file_sink(
         out = bdf.dropDuplicates(keys) if keys else bdf
         out.write.mode("overwrite").parquet(f"{out_dir}/batch={batch_id}")
 
-    q = (
-        stream_df.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(stream_df, checkpoint_dir, write_batch)
 
 
 def stream_enrich(
@@ -424,13 +454,7 @@ def stream_token_divergence(
         out = token_divergence(bdf, text_col, group_col, baseline_df=baseline_df)
         out.write.mode("overwrite").parquet(f"{out_dir}/batch={batch_id}")
 
-    q = (
-        docs_stream.writeStream.foreachBatch(drift_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(docs_stream, checkpoint_dir, drift_batch)
 
 
 def stream_dsir_score(
@@ -464,13 +488,7 @@ def stream_dsir_score(
         out = dsir_score(bdf, text_col, id_col, ratios_df, buckets)
         out.write.mode("overwrite").parquet(f"{out_dir}/batch={batch_id}")
 
-    q = (
-        docs_stream.writeStream.foreachBatch(score_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(docs_stream, checkpoint_dir, score_batch)
 
 
 def stream_semdedup_probe(
@@ -502,42 +520,63 @@ def stream_semdedup_probe(
     write is a batch-keyed overwrite, and the probe leaves the crashed
     attempt's b<batch_id>/ dir out of its read; exact self-matches are
     dropped inside embedding_index_probe. Seed the index by writing the
-    existing corpus's vectors+cells to `index_dir/vecs/seed/` before
-    starting the stream."""
-    from ..functions.embed import embed
-    from ..functions.vector import norm as _vnorm
-    from ..operators.vector import embedding_index_probe, with_ivf_cell
+    existing corpus's `vecs_index_rows` to `index_dir/vecs/seed/` before
+    starting the stream. Each micro-batch runs `semdedup_step`; the
+    `semdedup_index_probe` row runs it for batch 0 and its probe,
+    `semdedup_batch_probe`, for batch 1."""
+    _drain(docs_stream, checkpoint_dir, partial(
+        semdedup_step, index_dir=index_dir, out_dir=out_dir, centroids=centroids,
+        text_col=text_col, id_col=id_col, threshold=threshold, embedder=embedder,
+    ))
 
-    def probe_batch(bdf: DataFrame, batch_id: int) -> None:
-        spark = bdf.sparkSession
-        # `_norm` rides the layout (r12, parity with q_semdedup_index_probe's
-        # writer): probes of the grown index read it instead of re-folding
-        # norm(vec) per corpus row; legacy seeds without the column are
-        # coalesce-guarded inside embedding_index_probe.
-        vecs = materialize(
-            with_ivf_cell(
-                bdf.select(
-                    F.col(id_col).alias("doc"),
-                    embed(F.col(text_col), embedder).alias("vec"),
-                ).filter(F.col("vec").isNotNull()),
-                "vec",
-                centroids,
-            )
-            .withColumnRenamed("ivf_cell", "cell")
-            .withColumn("_norm", _vnorm(F.col("vec")))
-        )
-        corpus = read_index_layout(spark, index_dir, "vecs", batch_id)
-        pairs = embedding_index_probe(vecs, corpus, "vec", "doc", threshold)
-        pairs.write.mode("overwrite").parquet(f"{out_dir}/batch={batch_id}")
-        _write_index_batch(vecs, index_dir, "vecs", batch_id)
 
-    q = (
-        docs_stream.writeStream.foreachBatch(probe_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+def doc_vecs(df: DataFrame, *, text_col: str, id_col: str, embedder) -> DataFrame:
+    """(doc, vec) rows of the documents that embed to a non-null vector."""
+    return df.select(
+        F.col(id_col).alias("doc"), embed(F.col(text_col), embedder).alias("vec")
+    ).filter(F.col("vec").isNotNull())
+
+
+def vecs_index_rows(vecs: DataFrame, centroids: list) -> DataFrame:
+    """The `vecs` layout's rows for (doc, vec) rows: (doc, vec, cell,
+    _norm), cell being the nearest of the FIXED `centroids`. `_norm` rides
+    the layout, so probes of the grown index read it instead of re-folding
+    norm(vec) per corpus row; seeds written before the column existed are
+    coalesce-guarded inside embedding_index_probe."""
+    from ..functions.vector import norm
+    from ..operators.vector import with_ivf_cell
+
+    return (
+        with_ivf_cell(vecs, "vec", centroids)
+        .withColumnRenamed("ivf_cell", "cell")
+        .withColumn("_norm", norm(F.col("vec")))
     )
-    q.awaitTermination()
+
+
+def semdedup_batch_probe(
+    vecs: DataFrame, batch_id: int, index_dir: str, *, threshold: float
+) -> DataFrame:
+    """(new_id, corpus_id, cos_sim) pairs of a micro-batch's `vecs_index_rows`
+    against the vecs index without its own b<batch_id>/ dir."""
+    from ..operators.vector import embedding_index_probe
+
+    corpus = read_index_layout(vecs.sparkSession, index_dir, "vecs", batch_id)
+    return embedding_index_probe(vecs, corpus, "vec", "doc", threshold)
+
+
+def semdedup_step(
+    bdf: DataFrame, batch_id: int, index_dir: str, out_dir: str, *, centroids: list,
+    text_col: str, id_col: str, threshold: float, embedder,
+) -> None:
+    """One micro-batch of `stream_semdedup_probe`: embed and assign the
+    batch, write its `semdedup_batch_probe` pairs to
+    `out_dir/batch=<batch_id>`, then append the batch's vecs rows."""
+    # embedded once: the pairs write fills it, the index write re-reads it
+    vecs = doc_vecs(bdf, text_col=text_col, id_col=id_col, embedder=embedder)
+    vecs = materialize(vecs_index_rows(vecs, centroids), lazy=True)
+    pairs = semdedup_batch_probe(vecs, batch_id, index_dir, threshold=threshold)
+    pairs.write.mode("overwrite").parquet(f"{out_dir}/batch={batch_id}")
+    _write_index_batch(vecs, index_dir, "vecs", batch_id)
 
 
 def stream_dup_spans(
@@ -554,7 +593,7 @@ def stream_dup_spans(
     flavor): each micro-batch hashes its own k-grams, flags every
     position whose gram exists in the PERSISTED distinct-gram index
     `index_dir/grams/`, merges flagged positions into maximal spans
-    (operators/dedup.dup_spans_probe), writes spans to
+    (`dup_spans_batch_probe`), writes spans to
     `out_dir/batch=<id>`, and appends its own DISTINCT gram hashes under
     `index_dir/grams/b<batch_id>` — so the next batch's spans see THIS
     batch's content. Per-batch cost ∝ batch grams (one semi join against
@@ -574,30 +613,44 @@ def stream_dup_spans(
     near-distinct online (grows with NEW grams, not batch grams) and
     replay-exact — the anti-join reads the same index state the crashed
     attempt did (own-b-dir excluded). compact_index's grams-layout
-    distinct() heals the residue."""
-    from ..operators.dedup import merge_flagged_spans, span_grams
+    distinct() heals the residue. Each micro-batch runs `dup_spans_step`;
+    the `ngram_index_probe` row runs it for batch 0 and its probe,
+    `dup_spans_batch_probe`, for batch 1."""
+    _drain(docs_stream, checkpoint_dir, partial(
+        dup_spans_step, index_dir=index_dir, out_dir=out_dir, text_col=text_col, id_col=id_col, k=k
+    ))
 
-    def probe_batch(bdf: DataFrame, batch_id: int) -> None:
-        spark = bdf.sparkSession
-        # checkpoint the batch's grams ONCE: the span probe and the index
-        # append both read them (the seed-embed-once lesson)
-        grams = materialize(span_grams(bdf, text_col, id_col, k))
-        corpus = read_index_layout(spark, index_dir, "grams", batch_id).select("h")
-        flagged = grams.join(corpus, "h", "left_semi")
-        spans = merge_flagged_spans(flagged, id_col, k)
-        spans.write.mode("overwrite").parquet(f"{out_dir}/batch={batch_id}")
-        _write_index_batch(
-            grams.select("h").distinct().join(corpus, "h", "left_anti"),
-            index_dir, "grams", batch_id,
-        )
 
-    q = (
-        docs_stream.writeStream.foreachBatch(probe_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+def dup_spans_batch_probe(
+    grams: DataFrame, batch_id: int, index_dir: str, *, id_col: str, k: int
+) -> DataFrame:
+    """Maximal duplicated spans of a micro-batch's `span_grams` rows: its
+    positions whose gram is in the index without its own b<batch_id>/ dir."""
+    from ..operators.dedup import merge_flagged_spans
+
+    corpus = read_index_layout(grams.sparkSession, index_dir, "grams", batch_id)
+    return merge_flagged_spans(grams.join(corpus.select("h"), "h", "left_semi"), id_col, k)
+
+
+def dup_spans_step(
+    bdf: DataFrame, batch_id: int, index_dir: str, out_dir: str, *, text_col: str, id_col: str,
+    k: int,
+) -> None:
+    """One micro-batch of `stream_dup_spans`: write the batch's
+    `dup_spans_batch_probe` spans to `out_dir/batch=<batch_id>`, then
+    append the batch's grams the index (without b<batch_id>/) has not
+    seen."""
+    from ..operators.dedup import span_grams
+
+    # hashed once: the spans write fills it, the index append re-reads it
+    grams = materialize(span_grams(bdf, text_col, id_col, k), lazy=True)
+    spans = dup_spans_batch_probe(grams, batch_id, index_dir, id_col=id_col, k=k)
+    spans.write.mode("overwrite").parquet(f"{out_dir}/batch={batch_id}")
+    corpus = read_index_layout(bdf.sparkSession, index_dir, "grams", batch_id)
+    _write_index_batch(
+        grams.select("h").distinct().join(corpus.select("h"), "h", "left_anti"),
+        index_dir, "grams", batch_id,
     )
-    q.awaitTermination()
 
 
 class _Layout(NamedTuple):
@@ -712,7 +765,11 @@ def compact_index(
     through `read_index_layout`, rewrite the union to a temp dir
     partitioned by the layout's blocking key (`_LAYOUTS`: bands by band,
     vecs by cell, lsh by lsh_bucket; sigs and grams flat; grams deduped),
-    SWAP it into place, then drop the folded sources. A filter on the key
+    SWAP it into place, then drop the folded sources. The union is
+    rebalanced on the key first (one shuffle per compaction), so a
+    seed/<key>=K/ directory holds one file unless K's rows exceed AQE's
+    advisory partition size (spark.sql.adaptive.advisoryPartitionSizeInBytes),
+    which splits them over several write tasks. A filter on the key
     prunes to its seed/<key>=K/ directories (pinned in tests), and since
     the probe side of an index join is a micro-batch (small → broadcast),
     dynamic partition pruning can skip the directories its batch never
@@ -808,10 +865,16 @@ def compact_index(
             # hashes shared with the seed/earlier batches would otherwise
             # accumulate — correct for the probe, superlinear for the index
             union = union.distinct()
-        writer = union.write.mode("overwrite")
         if spec.key:
-            writer = writer.partitionBy(spec.key)
-        writer.parquet(str(tmp))
+            # rebalance on the key: a key's rows meet in one write task (one
+            # file per seed/<key>=K/ dir, not one per task that held rows of
+            # K), while AQE splits a key larger than the advisory partition
+            # size over several tasks, so a hot key or a layout with few
+            # keys (bands: 16) still writes in parallel
+            writer = union.hint("rebalance", spec.key).write.partitionBy(spec.key)
+            writer.mode("overwrite").parquet(str(tmp))
+        else:
+            union.write.mode("overwrite").parquet(str(tmp))
         _manifest_write(fs, jvm, f"{str(tmp)}/_FOLDED", batch_dirs)
         # --- swap: rename before delete; a crash anywhere is recoverable ---
         if fs.exists(seed):
@@ -938,13 +1001,7 @@ def stream_apply_cdc(
         out = cdc_apply(prev, bdf, key_list, seq_col, op_col)
         out.write.mode("overwrite").parquet(f"{snapshot_dir}/v={batch_id}")
 
-    q = (
-        changes_stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(changes_stream, checkpoint_dir, apply_batch)
 
 
 def read_cdc_snapshot(spark: SparkSession, snapshot_dir: str) -> DataFrame:
@@ -979,24 +1036,37 @@ def stream_lsh_layout(
 
     Crash-replay exactness is trivial here: the write is a batch-keyed
     overwrite of a PURE function of the batch (no read-your-own-index
-    hazard, unlike the gram/minhash gates)."""
+    hazard, unlike the gram/minhash gates). Each micro-batch runs
+    `lsh_layout_step`, which the `lsh_index_probe` registry row also runs
+    for its two batches; seeds are written from `lsh_index_rows`."""
+    _drain(vec_stream, checkpoint_dir, partial(
+        lsh_layout_step, index_dir=index_dir, vec_col=vec_col, dim=dim, n_planes=n_planes,
+        n_tables=n_tables,
+    ))
+
+
+def lsh_index_rows(
+    df: DataFrame, *, vec_col: str, dim: int, n_planes: int, n_tables: int
+) -> DataFrame:
+    """The `lsh` layout's rows for `df`: one row per (row, lsh_bucket) for
+    every row with a non-null `vec_col`, `df`'s columns kept."""
     from ..operators.vector import with_lsh_buckets
 
-    def write_batch(bdf: DataFrame, batch_id: int) -> None:
-        exploded = (
-            with_lsh_buckets(
-                bdf.filter(F.col(vec_col).isNotNull()), vec_col, dim,
-                n_planes, n_tables,
-            )
-            .withColumn("lsh_bucket", F.explode("lsh_buckets"))
-            .drop("lsh_buckets")
-        )
-        _write_index_batch(exploded, index_dir, "lsh", batch_id)
-
-    q = (
-        vec_stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return (
+        with_lsh_buckets(df.filter(F.col(vec_col).isNotNull()), vec_col, dim, n_planes, n_tables)
+        .withColumn("lsh_bucket", F.explode("lsh_buckets"))
+        .drop("lsh_buckets")
     )
-    q.awaitTermination()
+
+
+def lsh_layout_step(
+    bdf: DataFrame, batch_id: int, index_dir: str, *, vec_col: str, dim: int, n_planes: int,
+    n_tables: int,
+) -> None:
+    """One micro-batch of `stream_lsh_layout`: write the batch's
+    `lsh_index_rows` to `lsh/b<batch_id>/` (no output dir: the layout is
+    the product)."""
+    _write_index_batch(
+        lsh_index_rows(bdf, vec_col=vec_col, dim=dim, n_planes=n_planes, n_tables=n_tables),
+        index_dir, "lsh", batch_id,
+    )

@@ -84,7 +84,7 @@ def test_read_index_layout_is_the_only_index_reader():
     layout (sigs, bands, vecs, grams, lsh) by path or glob, or writes a
     b<id>/ batch dir: reads go through streaming.pipeline.read_index_layout
     and batch writes through its batch writer, which take the layout name
-    as a value."""
+    as a value, and only the streaming module calls that writer."""
     layout = r"/(sigs|bands|vecs|grams|lsh)"
     files = [ROOT / "bench.py", *ROOT.glob("team_126_spark/**/*.py"), *ROOT.glob("tools/**/*.py")]
     found = []
@@ -102,6 +102,19 @@ def test_read_index_layout_is_the_only_index_reader():
             if re.search(layout + r"/(\*|b\{|b\d)", path) or (is_read and re.search(layout + r"\b", path)):
                 found.append(f"{f.relative_to(ROOT)}:{node.lineno}: {path}")
     assert found == []
+
+    # the batch writer has no caller outside the streaming module: index
+    # rows reach a b<id>/ dir only through its per-batch steps
+    pipeline = ROOT / "team_126_spark" / "streaming" / "pipeline.py"
+    writers = [
+        f"{f.relative_to(ROOT)}:{node.lineno}"
+        for f in files
+        if f != pipeline
+        for node in ast.walk(ast.parse(f.read_text()))
+        if isinstance(node, ast.Call)
+        and (getattr(node.func, "id", None) or getattr(node.func, "attr", None)) == "_write_index_batch"
+    ]
+    assert writers == []
 
 
 def test_observe_metrics_in_streaming_progress(spark, tmp_path):

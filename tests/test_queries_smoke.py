@@ -127,15 +127,20 @@ def test_every_oracle_parses_in_duckdb():
 def test_session_scale_confs_pinned(spark):
     """tune_session (what the driver contract's entry() applies to an
     externally built session) must set every conf the 100 TB story depends
-    on: AQE re-planning, UTC oracle comparability, the Arrow boundary."""
-    from team_126_spark.session import tune_session
+    on: AQE re-planning, UTC oracle comparability, the Arrow boundary —
+    the whole runtime list `configure` also puts on the engine's builder."""
+    from team_126_spark.session import runtime_confs, tune_session
 
+    pinned = {
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+    }
+    confs = runtime_confs()
+    assert {k: confs[k] for k in pinned} == pinned
     tune_session(spark)
-    conf = spark.conf
-    assert conf.get("spark.sql.adaptive.enabled") == "true"
-    assert conf.get("spark.sql.adaptive.skewJoin.enabled") == "true"
-    assert conf.get("spark.sql.session.timeZone") == "UTC"
-    assert conf.get("spark.sql.execution.arrow.pyspark.enabled") == "true"
+    assert {k: spark.conf.get(k) for k in confs} == confs
 
 
 def test_temperature_mix_semantics_and_float_margins(spark):

@@ -1151,8 +1151,9 @@ def test_stream_lsh_layout_matches_memory_and_compacts_partitioned(spark, tmp_pa
     full corpus; compact_index(subdirs=("lsh",)) folds the batch dirs
     into a bucket-partitioned seed with the probe unchanged, a
     PartitionFilter in the plan, and a strict file subset
-    for one bucket; a stream restart (same source, fresh checkpoint)
-    rewrites identical batch dirs (replay exactness)."""
+    for one bucket and exactly one file per bucket directory; a stream
+    restart (same source, fresh checkpoint) rewrites identical batch dirs
+    (replay exactness)."""
     import glob as pyglob
     import os
 
@@ -1238,3 +1239,46 @@ def test_stream_lsh_layout_matches_memory_and_compacts_partitioned(spark, tmp_pa
         if int(p.split("lsh_bucket=")[1].split("/")[0]) in set(targets)
     ]
     assert 0 < len(in_target) < len(all_files)
+    # one parquet file per bucket directory: compaction rebalances on the
+    # key before the partitioned write, and every bucket here is far below
+    # the advisory partition size that would split it
+    key_dirs = pyglob.glob(f"{index_dir}/lsh/seed/lsh_bucket=*")
+    assert key_dirs and all(
+        len(pyglob.glob(f"{d}/*.parquet")) == 1 for d in key_dirs
+    )
+
+
+def test_compact_index_splits_a_hot_key_over_write_tasks(spark, tmp_path):
+    """compact_index rebalances on the layout's key instead of hashing each
+    key to one write task: a key whose rows exceed AQE's advisory partition
+    size is written by several tasks (at most one per source dir here), so
+    a hot key or a layout with few keys (bands: 16) still compacts in
+    parallel, and no row is lost or added."""
+    import glob as pyglob
+
+    index_dir = str(tmp_path / "index")
+    rows = spark.range(0, 4000).select(
+        F.col("id").alias("doc"),
+        # band 0 holds 99% of the rows, band 1 the rest
+        F.when(F.col("id") % 100 == 0, 1).otherwise(0).alias("band"),
+        F.sha2(F.col("id").cast("string"), 256).alias("bkey"),
+    )
+    sources = ["seed", "b0", "b1", "b2"]
+    for i, name in enumerate(sources):
+        rows.filter((F.col("id") >= i * 1000) & (F.col("id") < (i + 1) * 1000)).coalesce(1).write.parquet(
+            f"{index_dir}/bands/{name}"
+        )
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "16k")
+    try:
+        assert STR.compact_index(spark, index_dir, subdirs=("bands",)) == {"bands": 3}
+    finally:
+        spark.conf.set(key, old)
+    hot = pyglob.glob(f"{index_dir}/bands/seed/band=0/*.parquet")
+    assert 1 < len(hot) <= len(sources)
+    got = STR.read_index_layout(spark, index_dir, "bands")
+    assert sorted(map(tuple, got.select("doc", "band", "bkey").collect())) == sorted(
+        map(tuple, rows.collect())
+    )
+

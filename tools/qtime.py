@@ -10,11 +10,10 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import EXTRA_BENCH  # noqa: E402
+from bench import EXTRA_BENCH, measure  # noqa: E402
 from team_126_spark.queries import REGISTRY  # noqa: E402
 from team_126_spark.session import get_spark  # noqa: E402
 
@@ -30,12 +29,7 @@ def main() -> None:
     for n, fn in fns.items():
         if os.path.isdir(warm_dir):
             fn(spark, warm_dir).write.format("noop").mode("overwrite").save()
-        runs = []
-        for _ in range(3):
-            t0 = time.time()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            runs.append(time.time() - t0)
-        med = sorted(runs)[1]
+        med, _, runs = measure(spark, fn, sf_dir)
         print(f"QTIME {n:30s} median={med:7.3f}s runs={[round(r, 3) for r in runs]}")
 
 
