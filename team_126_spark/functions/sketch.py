@@ -21,7 +21,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, DoubleType, LongType
+from pyspark.sql.types import ArrayType, LongType
 
 N_MINHASH = 64
 
@@ -112,31 +112,6 @@ def lsh_bucket_kernel(dim: int, n_planes: int, n_tables: int):
         return pd.Series(list(packed))
 
     return buckets
-
-
-@F.pandas_udf(DoubleType())
-def cosine_kernel(va: pd.Series, vb: pd.Series) -> pd.Series:
-    """Arrow-batched pairwise cosine: one (n × dim) einsum per batch instead
-    of n interpreted zip_with/aggregate folds. Null or zero-norm vectors map
-    to similarity 0.0 (same convention as the fold path).
-
-    NOT bit-identical to the column-expression fold: numpy's pairwise/SIMD
-    summation can differ in the last ulp, which may flip a 6-decimal
-    rounding on ~1e-5 of pairs. Use in rows-only scale paths (LSH verify);
-    oracle-hash-checked queries keep the fold so Spark and DuckDB share the
-    exact left-to-right summation order."""
-    if len(va) == 0:
-        return pd.Series([], dtype="float64")
-    ok = (~va.isna() & ~vb.isna()).to_numpy()
-    out = np.zeros(len(va), dtype=np.float64)
-    if ok.any():
-        # one C-level stack per batch — no per-row Python loop
-        Am = np.stack(va[ok].to_numpy()).astype(np.float64)
-        Bm = np.stack(vb[ok].to_numpy()).astype(np.float64)
-        num = np.einsum("ij,ij->i", Am, Bm)
-        den = np.linalg.norm(Am, axis=1) * np.linalg.norm(Bm, axis=1)
-        out[ok] = np.where(den == 0.0, 0.0, num / np.where(den == 0.0, 1.0, den))
-    return pd.Series(out)
 
 
 @F.pandas_udf(LongType())

@@ -107,6 +107,24 @@ def md5_low32_sql(s: str) -> str:
     return f"('0x' || substr(md5({s}), 25, 8))::BIGINT"
 
 
+def token_hash(col: Column, hash_fn: str) -> Column:
+    """The 64-bit hash-family value of a token/shingle/seed string — the one
+    place the md5/xxhash64 choice is made.
+
+    'xxhash64': fastest, JVM codegen — the production family.
+    'md5': md5_low60 — ~2× more scan CPU, but DuckDB reproduces it exactly,
+    so the whole sketch pipeline becomes oracle-checkable (VERDICT r1 item
+    5). Both are deterministic and uniform. Callers that need fewer bits
+    take pmod(h, 2**bits): md5_low60 is below 2^60, and its low 32 bits
+    are md5_low32 (the low hex digits of the same digest).
+    """
+    if hash_fn == "xxhash64":
+        return F.xxhash64(col)
+    if hash_fn == "md5":
+        return md5_low60(col)
+    raise ValueError(f"hash_fn must be 'xxhash64' or 'md5', got {hash_fn!r}")
+
+
 def token_windows(toks: Column, k: int) -> Column:
     """Ordered k-token sliding-window strings over a token array (length
     n-k+1; [] when n < k). Built as arrays_zip of k shifted slices + one

@@ -22,26 +22,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import Column
 
 from ..functions.sketch import minhash_from_hashes
-from ..functions.text import fingerprint, md5_low60, tokens, word_shingles
+from ..functions.text import fingerprint, md5_low60, token_hash, tokens, word_shingles
 from ..functions.vector import cosine_similarity
 from ..metrics import materialize
 from ..tables import spread
-
-
-def _token_hash(col: Column, hash_fn: str) -> Column:
-    """The shingle/token hash feeding MinHash/SimHash kernels.
-
-    'xxhash64' (default): fastest, JVM codegen — the production family.
-    'md5': low-60-bit md5 — ~2× more scan CPU, but DuckDB reproduces it
-    exactly, so the full sketch pipeline becomes oracle-checkable
-    (VERDICT r1 item 5). Both are deterministic and uniform; the kernels
-    downstream are family-agnostic.
-    """
-    if hash_fn == "xxhash64":
-        return F.xxhash64(col)
-    if hash_fn == "md5":
-        return md5_low60(col)
-    raise ValueError(f"hash_fn must be 'xxhash64' or 'md5', got {hash_fn!r}")
 
 
 def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -126,7 +110,7 @@ def minhash_signatures(
     sh = spread(df, id_col).select(
         F.col(id_col).alias("doc"), F.explode(word_shingles(F.col(text_col), k)).alias("shingle")
     )
-    pre = sh.select("doc", _token_hash(F.col("shingle"), hash_fn).alias("h"))
+    pre = sh.select("doc", token_hash(F.col("shingle"), hash_fn).alias("h"))
     return pre.groupBy("doc").agg(
         minhash_from_hashes(F.collect_list("h")).alias("signature")
     )
@@ -550,13 +534,13 @@ def decontaminate(
     tr = (
         spread(train, id_col)
         .select(F.explode(word_shingles(F.col(text_col), k)).alias("shingle"))
-        .select(_token_hash(F.col("shingle"), hash_fn).alias("sh"))
+        .select(token_hash(F.col("shingle"), hash_fn).alias("sh"))
         .distinct()
     )
     ev = spread(eval_df, id_col).select(
         F.col(id_col).alias("doc"),
         F.explode(word_shingles(F.col(text_col), k)).alias("shingle"),
-    ).select("doc", _token_hash(F.col("shingle"), hash_fn).alias("sh"))
+    ).select("doc", token_hash(F.col("shingle"), hash_fn).alias("sh"))
     tot = ev.groupBy("doc").agg(F.count("*").cast("bigint").alias("n_shingles"))
     hits = (
         ev.join(tr, "sh", "left_semi")
@@ -598,7 +582,7 @@ def simhash64(df: DataFrame, text_col: str, id_col: str, hash_fn: str = "xxhash6
     tok = spread(df, id_col).select(
         F.col(id_col).alias("doc"), F.explode(tokens(F.col(text_col))).alias("t")
     )
-    pre = tok.select("doc", _token_hash(F.col("t"), hash_fn).alias("h"))
+    pre = tok.select("doc", token_hash(F.col("t"), hash_fn).alias("h"))
     sums = [
         F.sum(F.shiftrightunsigned(F.col("h"), i).bitwiseAND(F.lit(1)) * 2 - 1).alias(f"_s{i}")
         for i in range(64)
@@ -679,7 +663,6 @@ def embedding_neardup_lsh(
     threshold: float = 0.95,
     n_planes: int = 8,
     n_tables: int = 4,
-    verify: str = "kernel",
 ) -> DataFrame:
     """Scale path: sign-hash LSH candidates, then exact cosine verify.
 
@@ -707,17 +690,11 @@ def embedding_neardup_lsh(
        slower at 10× data before this shape);
     3. vectors join back by id (equi joins Catalyst can broadcast or
        shuffle as sizes dictate) and the exact cosine runs once per
-       surviving pair, with norms precomputed per row, not per pair.
-
-    `verify` picks the per-pair cosine implementation: 'kernel' (default)
-    is the Arrow-batched einsum — ~1.5× faster end-to-end at 1M candidate
-    pairs; 'expr' is the interpreted column-expression fold whose summation
-    order is bit-identical to the DuckDB oracle (use when hash-matching
-    against the exact variant matters more than speed).
+       surviving pair, with norms precomputed per row, not per pair. The
+       cosine is the column-expression fold whose summation order is
+       bit-identical to the DuckDB oracle and to embedding_neardup_exact.
     """
-    if verify not in ("kernel", "expr"):
-        raise ValueError(f"verify must be 'kernel' or 'expr', got {verify!r}")
-    from ..functions.sketch import cosine_kernel, lsh_bucket_kernel
+    from ..functions.sketch import lsh_bucket_kernel
     from ..functions.vector import dot, norm
 
     # Null/zero vectors can never pass a cosine threshold > 0 (verify maps
@@ -739,20 +716,15 @@ def embedding_neardup_lsh(
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .dropDuplicates(["id_a", "id_b"])
     )
-    if verify == "kernel":
-        va = base.select(F.col("id").alias("id_a"), F.col("vec").alias("_va"))
-        vb = base.select(F.col("id").alias("id_b"), F.col("vec").alias("_vb"))
-        sim = cosine_kernel(F.col("_va"), F.col("_vb"))
-    else:
-        va = base.select(
-            F.col("id").alias("id_a"), F.col("vec").alias("_va"), norm(F.col("vec")).alias("_na")
-        )
-        vb = base.select(
-            F.col("id").alias("id_b"), F.col("vec").alias("_vb"), norm(F.col("vec")).alias("_nb")
-        )
-        sim = F.when((F.col("_na") == 0.0) | (F.col("_nb") == 0.0), F.lit(0.0)).otherwise(
-            dot(F.col("_va"), F.col("_vb")) / (F.col("_na") * F.col("_nb"))
-        )
+    va = base.select(
+        F.col("id").alias("id_a"), F.col("vec").alias("_va"), norm(F.col("vec")).alias("_na")
+    )
+    vb = base.select(
+        F.col("id").alias("id_b"), F.col("vec").alias("_vb"), norm(F.col("vec")).alias("_nb")
+    )
+    sim = F.when((F.col("_na") == 0.0) | (F.col("_nb") == 0.0), F.lit(0.0)).otherwise(
+        dot(F.col("_va"), F.col("_vb")) / (F.col("_na") * F.col("_nb"))
+    )
     return (
         cand.join(va, "id_a")
         .join(vb, "id_b")

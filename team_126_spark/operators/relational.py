@@ -968,7 +968,7 @@ def poisson_bootstrap_means(
     keyless round-robin because the latter pays a per-partition sort
     (spark.sql.execution.sortBeforeRepartition) on every row.
     """
-    from ..functions.text import md5_low60
+    from ..functions.text import token_hash
     from ..tables import spread
 
     reps = F.explode(F.sequence(F.lit(0), F.lit(replicas - 1))).alias("r")
@@ -990,12 +990,7 @@ def poisson_bootstrap_means(
     seed = F.concat(
         F.lit("bs"), F.col("r").cast("string"), F.lit(":"), F.col("_k")
     )
-    if hash_fn == "md5":
-        h = md5_low60(seed)
-    elif hash_fn == "xxhash64":
-        h = F.pmod(F.xxhash64(seed), F.lit(2**60))
-    else:
-        raise ValueError(f"hash_fn must be 'xxhash64' or 'md5', got {hash_fn!r}")
+    h = F.pmod(token_hash(seed, hash_fn), F.lit(2**60))
     u = (h % 1_000_000) / F.lit(1_000_000.0)
     w = F.lit(5)
     for k in range(len(POISSON1_CDF) - 1, -1, -1):

@@ -119,15 +119,13 @@ def doc_fingerprints(
 
     The rolling hash is a left fold  h = (h*31 + hash32(token)) mod 2^32 —
     order-sensitive (unlike the md5 of normalized text) so it distinguishes
-    permuted documents with equal token sets. hash32 is pmod(xxhash64, 2^32)
-    by default, or low-32-bit md5 with hash_fn='md5' — the oracle-checkable
-    family DuckDB reproduces."""
-    from ..functions.text import md5_low32
+    permuted documents with equal token sets. hash32 is the low 32 bits of
+    the token_hash family: pmod(xxhash64, 2^32) by default, or low-32-bit
+    md5 with hash_fn='md5' — the oracle-checkable family DuckDB reproduces."""
+    from ..functions.text import token_hash
 
     def hash32(tok):
-        if hash_fn == "md5":
-            return md5_low32(tok)
-        return F.pmod(F.xxhash64(tok), F.lit(2**32))
+        return F.pmod(token_hash(tok, hash_fn), F.lit(2**32))
 
     rolling = F.aggregate(
         tokens(F.col(text_col)),
@@ -528,21 +526,15 @@ def ngram_diversity(
     per-element slicing. Output: (source, n, total_ngrams, distinct_ngrams,
     diversity) with diversity rounded to 6 places for the cross-engine cut.
     """
-    from ..functions.text import md5_low60, token_windows, tokens
+    from ..functions.text import token_hash, token_windows, tokens
 
-    if hash_fn == "xxhash64":
-        ghash = F.xxhash64
-    elif hash_fn == "md5":
-        ghash = md5_low60
-    else:
-        raise ValueError(f"hash_fn must be 'xxhash64' or 'md5', got {hash_fn!r}")
     toks = tokens(F.col(text_col))
     parts = [
         df.select(
             F.col(source_col).alias("source"),
             F.lit(n).alias("n"),
             F.explode(token_windows(toks, n)).alias("gram"),
-        ).select("source", "n", ghash(F.col("gram")).alias("gh"))
+        ).select("source", "n", token_hash(F.col("gram"), hash_fn).alias("gh"))
         for n in range(1, max_n + 1)
     ]
     u = parts[0]
@@ -1510,7 +1502,8 @@ def _distill_fit(
     )
     # Bare checkpoint, NO rid pre-partitioning: r11 added spread(..., "rid")
     # here claiming per-GD-round exchange reuse, but the runtime receipt
-    # (r12, tools/job_metrics.py at sf0.1) shows IDENTICAL total shuffle
+    # (r12, executed-plan shuffle bytes at sf0.1; `python bench.py
+    # quality_distill_score` reads them today) shows IDENTICAL total shuffle
     # bytes with and without it (2.61 MiB either way) — each round's
     # groupBy(rid) already collapses the triples to per-rid partial
     # aggregates map-side before its exchange, so there is no corpus-sized

@@ -2531,7 +2531,6 @@ def q_embedding_neardup_lsh(spark, sf_dir):
         threshold=0.9,
         n_planes=8,
         n_tables=4,
-        verify="expr",  # summation order bit-identical to the DuckDB oracle
     )
 
 

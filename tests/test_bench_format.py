@@ -21,12 +21,19 @@ def _fake_timings():
     return t
 
 
+def _fake_layers(timings):
+    return {name: {"jobs": 54.0, "shuffle_write_mb": 10.675} for name in timings}
+
+
 def test_final_line_fits_driver_window():
     timings = _fake_timings()
     spread = {name: 1.59 for name in timings}
-    detail, line = bench.build_outputs(timings, spread, [9.99, 9.99, 9.99], 0.1)
+    detail, line = bench.build_outputs(
+        timings, spread, _fake_layers(timings), [9.99, 9.99, 9.99], 0.1
+    )
     assert len(line) < 1800
     parsed = json.loads(line)
+    assert "layers" not in parsed  # per-row layers live in the detail file
     assert parsed["metric"] == "headline_total_sec"
     assert parsed["rows"] == len(bench.HEADLINE)
     assert len(parsed["queries"]) == 10  # top-10 slowest only
@@ -35,13 +42,15 @@ def test_final_line_fits_driver_window():
 
 def test_headline_total_excludes_extra_bench():
     timings = _fake_timings()
-    detail, line = bench.build_outputs(timings, {}, [None, None, None], 0.1)
+    detail, line = bench.build_outputs(timings, {}, _fake_layers(timings), [None, None, None], 0.1)
     expected = round(123.456 * len(bench.HEADLINE), 3)
     assert json.loads(line)["value"] == expected
     assert detail["value"] == expected
     assert detail["extra_total_sec"] == round(99.999 * len(bench.EXTRA_BENCH), 3)
     # detail keeps the FULL per-query map (the committed record the judge reads)
     assert set(detail["queries"]) == set(timings)
+    # and one layer record per timed row, keyed like `queries`
+    assert set(detail["layers"]) == set(detail["queries"])
 
 
 def test_headline_names_resolve_in_registry():

@@ -121,7 +121,7 @@ def test_embedding_neardup_lsh_exact_in_pruning_regime(spark):
     lsh = {
         (r["id_a"], r["id_b"], r["cos_sim"])
         for r in D.embedding_neardup_lsh(
-            corpus, "embedding", "vec_id", dim=64, threshold=0.9, verify="expr"
+            corpus, "embedding", "vec_id", dim=64, threshold=0.9
         ).collect()
     }
     corpus.unpersist()
@@ -557,8 +557,8 @@ def test_simhash_relational_matches_arrow_kernel(spark):
     assembly) must be bit-identical to the retained Arrow reference kernel
     (functions/sketch.simhash_from_hashes) on both hash families."""
     from team_126_spark.functions.sketch import simhash_from_hashes
-    from team_126_spark.functions.text import tokens
-    from team_126_spark.operators.dedup import _token_hash, simhash64
+    from team_126_spark.functions.text import token_hash, tokens
+    from team_126_spark.operators.dedup import simhash64
 
     rows = [(i, f"tok{i % 7} alpha beta {i} gamma tok{i % 3} " * (1 + i % 4)) for i in range(60)]
     rows.append((60, "single"))
@@ -569,7 +569,7 @@ def test_simhash_relational_matches_arrow_kernel(spark):
                 F.col("doc_id").alias("doc"),
                 F.explode(tokens(F.col("text"))).alias("t"),
             )
-            .select("doc", _token_hash(F.col("t"), fam).alias("h"))
+            .select("doc", token_hash(F.col("t"), fam).alias("h"))
             .groupBy("doc")
             .agg(simhash_from_hashes(F.collect_list("h")).alias("ref"))
         )

@@ -379,32 +379,6 @@ def test_pack_sequences_invariants(spark):
     assert sorted(map(tuple, rows)) == sorted(map(tuple, again.collect()))
 
 
-def test_cosine_kernel_matches_fold_and_handles_nulls(spark):
-    from team_126_spark.functions.sketch import cosine_kernel
-    from team_126_spark.functions import vector as VF
-
-    rows = [
-        (1, [1.0, 0.0], [1.0, 0.0]),
-        (2, [1.0, 0.0], [0.0, 1.0]),
-        (3, [1.0, 2.0], [2.0, 4.0]),
-        (4, None, [1.0, 0.0]),
-        (5, [0.0, 0.0], [1.0, 0.0]),
-    ]
-    df = spark.createDataFrame(rows, "id int, a array<double>, b array<double>")
-    kern = {r["id"]: r["k"] for r in df.select("id", cosine_kernel("a", "b").alias("k")).collect()}
-    assert kern[1] == pytest.approx(1.0) and kern[2] == pytest.approx(0.0)
-    assert kern[3] == pytest.approx(1.0)
-    assert kern[4] == 0.0 and kern[5] == 0.0  # null / zero-norm -> 0.0 like the fold
-    fold = {
-        r["id"]: r["k"]
-        for r in df.filter("a is not null")
-        .select("id", VF.cosine_similarity(F.col("a"), F.col("b")).alias("k"))
-        .collect()
-    }
-    for i in fold:
-        assert kern[i] == pytest.approx(fold[i], abs=1e-12)
-
-
 def test_column_quantiles_known_values(spark):
     from team_126_spark.operators.relational import column_quantiles
 
@@ -1233,10 +1207,8 @@ def test_curriculum_order_shards_ramp_and_stratify(spark):
     token count (ntile semantics incl. the ceil-sized leading bucket),
     every source appears in every shard it has rows for, and the plan
     never partitions a window by the raw group alone (scalable-only)."""
-    import contextlib
-    import io
-
     from team_126_spark.operators.textops import curriculum_order
+    from tools.plan_capture import plan_text
 
     rows = [(i, f"s{i % 2}", "w " * (i + 1)) for i in range(10)]
     df = spark.createDataFrame(rows, ["doc_id", "source", "text"])
@@ -1247,10 +1219,7 @@ def test_curriculum_order_shards_ramp_and_stratify(spark):
         ts = [(t, sh) for (src, t, sh) in got if src == s]
         assert [sh for _, sh in ts] == [1, 1, 1, 2, 2]
         assert [t for t, _ in ts] == sorted(t for t, _ in ts)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        out.explain("formatted")
-    specs = [ln for ln in buf.getvalue().splitlines() if "windowspecdefinition" in ln]
+    specs = [ln for ln in plan_text(out).splitlines() if "windowspecdefinition" in ln]
     assert specs and all("_p#" in ln for ln in specs)
 
 

@@ -148,23 +148,42 @@ def test_observe_metrics_in_streaming_progress(spark, tmp_path):
     assert got == 100
 
 
-def test_job_metrics_tool(spark):
-    """tools/job_metrics reads executed-plan SQL metrics: parser units plus
-    one live query whose metrics must be self-consistent."""
+def test_job_metrics_tool():
+    """tools/job_metrics keeps the SQL-metric byte parser perfbench uses."""
     import sys
     from pathlib import Path
 
     sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
-    from tools.job_metrics import _parse_bytes, _parse_count, query_metrics
+    from tools.job_metrics import _parse_bytes
 
     assert _parse_bytes("216.0 B") == 216
     assert _parse_bytes("1.5 KiB") == 1536
     assert _parse_bytes("total (min, med, max (stageId: taskId))\n2.0 MiB") == 2 * 2**20
-    assert _parse_count("15,000") == 15000
-    assert _parse_count("no digits here") == 0
 
+
+def test_bench_measure_reads_layers(spark):
+    """bench.measure times a row and reads its per-run Spark layers from
+    the status store: every row runs at least one job, a tiny input never
+    spills, and the MinHash-LSH row shuffles."""
+    import sys
+    from pathlib import Path
+
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
+    from bench import measure
     from team_126_spark.queries import REGISTRY
 
-    m = query_metrics(spark, REGISTRY["agg_global"].fn, "/root/testdata/sf0.001")
-    assert m["sec"] > 0 and m["max_rows"] > 0
-    assert m["shuffle_mb"] >= 0 and m["spill_mb"] == 0  # tiny agg never spills
+    keys = {
+        "jobs", "build_jobs", "stages", "tasks", "shuffle_write_mb",
+        "shuffle_read_mb", "spill_mb", "codegen_compiles", "codegen_ms", "build_s",
+    }
+    got = {}
+    for name in ("agg_global", "minhash_lsh_pairs"):
+        fn = REGISTRY[name].fn
+        rec = measure(spark, lambda: fn(spark, "/root/testdata/sf0.001"))
+        assert len(rec["runs"]) == 3 and rec["median"] > 0
+        layers = got[name] = rec["layers"]
+        assert set(layers) == keys, name
+        assert layers["jobs"] >= 1 and layers["spill_mb"] == 0, (name, layers)
+        assert layers["stages"] >= 1, (name, layers)
+        assert layers["build_jobs"] <= layers["jobs"], (name, layers)
+    assert got["minhash_lsh_pairs"]["shuffle_write_mb"] > 0, got

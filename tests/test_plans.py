@@ -7,22 +7,16 @@ value checks at sf0.01; THIS is where that regression gets caught."""
 
 from __future__ import annotations
 
-import contextlib
-import io
-
 import pytest
 
 from team_126_spark.queries import REGISTRY
+from tools.plan_capture import plan_text
 
 SF = "/root/testdata/sf0.001"
 
 
 def plan_of(spark, name: str) -> str:
-    df = REGISTRY[name].fn(spark, SF)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
+    return plan_text(REGISTRY[name].fn(spark, SF))
 
 
 def test_filter_pushdown_reaches_scan(spark):
@@ -243,15 +237,9 @@ def test_cartesian_allowlist_pinned(spark):
         # library callers)
         "embedding_neardup",
     }
-    import contextlib
-    import io as _io
-
     offenders = {}
-    for name, q in REGISTRY.items():
-        buf = _io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            q.fn(spark, SF).explain("formatted")
-        plan = buf.getvalue()
+    for name in REGISTRY:
+        plan = plan_of(spark, name)
         cart = "CartesianProduct" in plan or "BroadcastNestedLoopJoin" in plan
         if cart and name not in ALLOWED:
             offenders[name] = True

@@ -189,9 +189,8 @@ def test_salted_join_matches_plain_join(spark):
 
 
 def test_bucketed_join_has_no_shuffle(spark, tmp_path):
-    import contextlib, io as _io
-
     from team_126_spark.sources.io import write_bucketed
+    from tools.plan_capture import plan_text
 
     spark.sql("DROP TABLE IF EXISTS orders_b")
     spark.sql("DROP TABLE IF EXISTS cust_b")
@@ -208,10 +207,7 @@ def test_bucketed_join_has_no_shuffle(spark, tmp_path):
         .hint("merge")
         .join(spark.table("cust_b").hint("merge"), "custkey")
     )
-    buf = _io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        joined.explain("formatted")
-    plan = buf.getvalue()
+    plan = plan_text(joined)
     # bucket-aligned sort-merge join: no Exchange on either side
     assert "SortMergeJoin" in plan
     assert "Exchange hashpartitioning" not in plan

@@ -21,11 +21,13 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from bench import sink  # noqa: E402
 from team_126_spark.metrics import materialize  # noqa: E402
 from team_126_spark.operators import dedup as D  # noqa: E402
 from team_126_spark.operators import textops as TO  # noqa: E402
 from team_126_spark.session import get_spark  # noqa: E402
 from team_126_spark.sources.synth import register  # noqa: E402
+from tools.scale_curves import _materialize  # noqa: E402
 
 
 def main() -> None:
@@ -33,16 +35,7 @@ def main() -> None:
     spark = get_spark("composed-chain")
     register(spark)
     tmp = os.path.join(os.environ.get("TMPDIR", "/tmp"), "team126_scale")
-    path = f"{tmp}/docs_{n}"
-    if not os.path.isdir(path):
-        (
-            spark.read.format("synthdocs")
-            .options(rows=str(n), partitions=str(max(32, n // 8000)), seed="7")
-            .load()
-            .write.mode("overwrite")
-            .parquet(path)
-        )
-    docs = spark.read.parquet(path)
+    docs = _materialize(spark, "synthdocs", n, max(32, n // 8000), f"{tmp}/docs_{n}")
     print(f"load_avg={tuple(round(x, 2) for x in os.getloadavg())} n={n}")
 
     stages: list[tuple[str, float]] = []
@@ -156,7 +149,7 @@ def main() -> None:
     packed = TO.pack_sequences(
         kept_docs.filter(F.col("split") == "train"), "text", "pack_id", budget=512
     )
-    timed("split+pack", lambda: packed.write.format("noop").mode("overwrite").save())
+    timed("split+pack", lambda: sink(packed))
 
     total = time.time() - t_all
     core = sum(dt for label, dt in stages if label not in ("distill_gate", "dsir_resample"))

@@ -1,29 +1,14 @@
-"""Measured shuffle/spill footprint per declared query — the runtime
-counterpart of tools/plan_audit.py's static checks: plan shape says a
-query SHOULD shuffle slim keys; this reads the executed plan's SQL
-metrics (shuffle bytes written, spill size, peak rows) from the
-SQLAppStatusStore and prints what it actually moved, so "is this join
-dragging text through the exchange" is an observed number, not an
-argument.
+"""`_parse_bytes`: the byte count of a Spark SQL metric string.
 
-Usage:
-    python tools/job_metrics.py [sf_dir] query [query ...]
-
-Prints one line per query: wall seconds, total shuffle bytes written,
-total spill bytes, and the largest single-metric row count.
+perfbench/run.py imports it from this module (`tools.job_metrics`), so it
+lives here. Per-row shuffle, spill, job, stage and task counts come from
+bench.py's row mode (`python bench.py ROW [ROW...]`), which reads them
+through perfbench.tracing.SparkProbe.
 """
 
 from __future__ import annotations
 
-import os
 import re
-import sys
-import time
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-from team_126_spark.queries import REGISTRY  # noqa: E402
-from team_126_spark.session import get_spark  # noqa: E402
 
 _UNIT = {"B": 1, "KiB": 2**10, "MiB": 2**20, "GiB": 2**30, "TiB": 2**40}
 
@@ -33,74 +18,3 @@ def _parse_bytes(s: str) -> int:
     '216.0 B' / '1.2 MiB'; take the FIRST size token."""
     m = re.search(r"([\d.]+)\s*(B|KiB|MiB|GiB|TiB)", s)
     return int(float(m.group(1)) * _UNIT[m.group(2)]) if m else 0
-
-
-def _parse_count(s: str) -> int:
-    m = re.search(r"[\d,]+", s)
-    return int(m.group(0).replace(",", "")) if m else 0
-
-
-def query_metrics(spark, fn, sf_dir: str) -> dict:
-    store = spark._jsparkSession.sharedState().statusStore()
-    before = store.executionsList().size()
-    t0 = time.time()
-    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    wall = time.time() - t0
-    shuffle_b = spill_b = max_rows = 0
-    execs = store.executionsList()
-    for ei in range(before, execs.size()):
-        e = execs.apply(ei)
-        vals = store.executionMetrics(e.executionId())
-        pm, seen = e.metrics(), set()
-        for i in range(pm.size()):
-            m = pm.apply(i)
-            mid = m.accumulatorId()
-            if mid in seen or not vals.contains(mid):
-                continue
-            seen.add(mid)
-            name, val = m.name(), vals.apply(mid)
-            if name == "shuffle bytes written":
-                shuffle_b += _parse_bytes(val)
-            elif name == "spill size":
-                spill_b += _parse_bytes(val)
-            elif name == "number of output rows":
-                max_rows = max(max_rows, _parse_count(val))
-    return {
-        "sec": round(wall, 2),
-        "shuffle_mb": round(shuffle_b / 2**20, 2),
-        "spill_mb": round(spill_b / 2**20, 2),
-        "max_rows": max_rows,
-    }
-
-
-def main() -> None:
-    args = list(sys.argv[1:])
-    sf_dir = args.pop(0) if args and os.path.isdir(args[0]) else "/root/testdata/sf0.01"
-    # default sweep: relational/dedup staples + the iterative graph family
-    # (VERDICT r5 #8: the O(E^1.5) wedge bound and broadcast-frontier
-    # claims get runtime shuffle/peak-row evidence every round)
-    names = args or [
-        "agg_pricing_summary", "minhash_lsh_pairs", "dedup_select",
-        "pagerank_topk", "triangle_count", "shortest_paths", "graph_walks",
-        "lsh_blocking_eval", "ngram_novelty_split", "token_divergence",
-        "classifier_auc_eval", "hybrid_ndcg_eval", "embedding_isotropy",
-        # round-8 family: the DSIR log-ratio model must cross the exchange
-        # as B rows (never per-doc text), semdedup's pair scan as slim
-        # (id, vec, cell) within-cell rows only
-        "dsir_weights", "dsir_resample", "semdedup_select",
-        "quality_distill_score",
-    ]
-    spark = get_spark("job-metrics")
-    for n in names:
-        if n not in REGISTRY:
-            print(f"  unknown query: {n}")
-            continue
-        m = query_metrics(spark, REGISTRY[n].fn, sf_dir)
-        print(
-            f"{n:28s} {m['sec']:7.2f}s  shuffle {m['shuffle_mb']:9.2f} MiB  "
-            f"spill {m['spill_mb']:8.2f} MiB  max-operator-rows {m['max_rows']:,}"
-        )
-
-
-if __name__ == "__main__":
-    main()

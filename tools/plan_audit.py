@@ -17,8 +17,6 @@ degrades to a cross join still returns the right rows at sf0.01).
 
 from __future__ import annotations
 
-import contextlib
-import io
 import json
 import os
 import sys
@@ -27,6 +25,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from team_126_spark.queries import REGISTRY  # noqa: E402
 from team_126_spark.session import get_spark  # noqa: E402
+from tools.plan_capture import plan_text  # noqa: E402
 
 
 def main() -> None:
@@ -35,11 +34,7 @@ def main() -> None:
     out: dict[str, dict] = {}
     for name, q in REGISTRY.items():
         try:
-            df = q.fn(spark, sf_dir)
-            buf = io.StringIO()
-            with contextlib.redirect_stdout(buf):
-                df.explain("formatted")
-            plan = buf.getvalue()
+            plan = plan_text(q.fn(spark, sf_dir))
         except Exception as e:  # noqa: BLE001
             out[name] = {"error": str(e).splitlines()[0][:120]}
             continue

@@ -8,20 +8,22 @@ ops at two sizes and prints per-op seconds plus the size-ratio exponent.
 Usage:
     python tools/scale_curves.py [small_rows] [big_rows]   # default 100000 400000
 
-Box load matters: numbers in SCALING.md were min-of-2 on local[32]; the
-script prints os.getloadavg() so a contended run is identifiable.
+Each op is timed by bench.measure (noop sink, median of 3; SCALING.md's
+older curves were min-of-2). Box load matters: the script prints
+os.getloadavg() so a contended run is identifiable.
 """
 
 from __future__ import annotations
 
+import math
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from bench import measure, sink  # noqa: E402
 from team_126_spark.operators import dedup as D  # noqa: E402
 from team_126_spark.operators import textops as TO  # noqa: E402
 from team_126_spark.operators import vector as OV  # noqa: E402
@@ -39,18 +41,6 @@ def _materialize(spark, fmt, rows, parts, path, **opts):
             .parquet(path)
         )
     return spark.read.parquet(path)
-
-
-def _time(build, runs=2) -> float:
-    """Min-of-`runs` seconds to build a DataFrame and write it to the noop
-    sink. Each run builds inside the timer, so build-time jobs (eager
-    checkpoints) count and no run reads blocks an earlier run materialized."""
-    ts = []
-    for _ in range(runs):
-        t0 = time.time()
-        build().write.format("noop").mode("overwrite").save()
-        ts.append(time.time() - t0)
-    return min(ts)
 
 
 def main() -> None:
@@ -98,11 +88,10 @@ def main() -> None:
     for tables, ops in ((docs, doc_ops), (vecs, vec_ops)):
         # warm codegen on a slice
         for f in ops.values():
-            f(tables[small].limit(3000)).write.format("noop").mode("overwrite").save()
+            sink(f(tables[small].limit(3000)))
         for name, f in ops.items():
-            a, b = _time(lambda: f(tables[small])), _time(lambda: f(tables[big]))
-            import math
-
+            a = measure(spark, lambda: f(tables[small]))["median"]
+            b = measure(spark, lambda: f(tables[big]))["median"]
             exp = math.log(b / a) / math.log(ratio) if a > 0 else float("nan")
             print(
                 f"{name:20s} {small}: {a:7.2f}s   {big}: {b:7.2f}s   "

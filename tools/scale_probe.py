@@ -18,24 +18,27 @@ and document texts get a per-copy suffix token so the corpus is not a
 pile of exact duplicates (which would stress-test LSH bucket skew
 instead of throughput).
 
+Each side is timed by bench.measure (noop sink, median of 3); query
+names resolve through bench.resolve (REGISTRY plus EXTRA_BENCH twins).
+
 Usage: python tools/scale_probe.py [n_copies] [query ...]
 Writes nothing outside /tmp; prints one JSON line.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import shutil
 import sys
 import tempfile
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from team_126_spark.queries import REGISTRY  # noqa: E402
+from bench import measure, resolve  # noqa: E402
 from team_126_spark.session import get_spark  # noqa: E402
 
 BASE = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -126,26 +129,6 @@ def build_scaled(spark, out_dir: str, n: int) -> None:
         scaled.drop("_copy").write.mode("overwrite").parquet(f"{out_dir}/{name}.parquet")
 
 
-def _resolve(name: str):
-    """REGISTRY queries plus the bench-only production-hash twins
-    (bench.EXTRA_BENCH) — the r6 cost leaders include bootstrap_ci_xx."""
-    if name in REGISTRY:
-        return REGISTRY[name].fn
-    import bench
-
-    return bench.EXTRA_BENCH[name]
-
-
-def time_query(spark, name: str, sf_dir: str) -> float:
-    fn = _resolve(name)
-    best = float("inf")
-    for _ in range(2):
-        t0 = time.time()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        best = min(best, time.time() - t0)
-    return round(best, 3)
-
-
 def main() -> None:
     n = int(sys.argv[1]) if len(sys.argv) > 1 and sys.argv[1].isdigit() else 10
     names = [a for a in sys.argv[1:] if not a.isdigit()] or PROBE_QUERIES
@@ -155,8 +138,9 @@ def main() -> None:
         build_scaled(spark, scaled_dir, n)
         out = {}
         for name in names:
-            t1 = time_query(spark, name, BASE)
-            tn = time_query(spark, name, scaled_dir)
+            fn = resolve(name)
+            t1 = measure(spark, functools.partial(fn, spark, BASE))["median"]
+            tn = measure(spark, functools.partial(fn, spark, scaled_dir))["median"]
             out[name] = {"t_1x": t1, f"t_{n}x": tn, "ratio": round(tn / max(t1, 1e-9), 2)}
             print(f"  {name:24s} 1x={t1:7.3f}s {n}x={tn:7.3f}s ratio={out[name]['ratio']}", file=sys.stderr)
         print(json.dumps({"n_copies": n, "base": BASE, "queries": out}))
