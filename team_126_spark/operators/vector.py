@@ -18,24 +18,24 @@ from __future__ import annotations
 
 import math
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.vector import cosine_similarity, distance_score, euclidean, fuse_scores
+from ..functions.vector import (
+    cosine_similarity,
+    cosine_to_probe,
+    distance_score,
+    euclidean,
+    fuse_scores,
+    probe_lit,
+    py_norm,
+)
 from ..metrics import materialize
 
 
-def _py_norm(v) -> float:
-    """Driver-side twin of the column `norm()`: left-fold sum of squares in
-    double, then a correctly rounded sqrt — the same IEEE op sequence."""
-    acc = 0.0
-    for x in v:
-        acc = acc + float(x) * float(x)
-    return math.sqrt(acc)
-
-
 def _unit(c: list[float]) -> list[float]:
-    n = _py_norm(c) or 1.0
+    n = py_norm(c) or 1.0
     return [float(x) / n for x in c]
 
 
@@ -50,9 +50,8 @@ def knn(
 ) -> DataFrame:
     """Exact top-k by cosine similarity to `probe` (V3/W8), optional P15
     threshold. Map-only + top-k: no shuffle, scales to any row count."""
-    pv = F.array(*[F.lit(float(x)) for x in probe])
     out = df.filter(F.col(vec_col).isNotNull()).withColumn(
-        sim_name, cosine_similarity(F.col(vec_col), pv)
+        sim_name, cosine_to_probe(F.col(vec_col), probe)
     )
     if threshold is not None:
         out = out.filter(F.col(sim_name) >= threshold)
@@ -88,15 +87,41 @@ def hybrid_search(
         cands = cands.orderBy(F.col("distance_km").asc(), F.col(id_col).asc()).limit(
             k * candidate_factor
         )
-    pv = F.array(*[F.lit(float(x)) for x in probe_vec])
-    sim = F.when(
-        F.col(vec_col).isNull(), F.lit(0.0)
-    ).otherwise(cosine_similarity(F.col(vec_col), pv))
+    return _fused_topk(cands, vec_col, probe_vec, max_km, k, id_col, weight)
+
+
+def _fused_topk(
+    cands: DataFrame,
+    vec_col: str,
+    probe_vec: list[float],
+    max_km: float,
+    k: int,
+    id_col: str,
+    weight: float,
+    score_round: int | None = None,
+) -> DataFrame:
+    """Stage 2 of both hybrid searches: `similarity`, `distance_score` and
+    `combined_score` in ONE projection, then the exact top-k.
+
+    One projection keeps both limits top-k plans. Three `withColumn`s leave
+    three Projects (CollapseProject will not duplicate the cosine), the
+    optimizer pushes them between an over-fetch's Limit and its Sort, and
+    SpecialLimits then misses the pattern: a range-partitioned global sort
+    plus a single-partition exchange instead of a TakeOrderedAndProject.
+    The fused score inlines the same two expressions, so its doubles are
+    the ones the stacked columns gave."""
+    sim = F.when(F.col(vec_col).isNull(), F.lit(0.0)).otherwise(
+        cosine_to_probe(F.col(vec_col), probe_vec)
+    )
+    dscore = distance_score(F.col("distance_km"), max_km)
+    fused = fuse_scores(sim, dscore, weight)
+    if score_round is not None:
+        # round BEFORE the sort so the top-k cut is engine-agnostic
+        # (the oracle sorts the same 6dp doubles)
+        fused = F.round(fused, score_round)
     return (
-        cands.withColumn("similarity", sim)
-        .withColumn("distance_score", distance_score(F.col("distance_km"), max_km))
-        .withColumn(
-            "combined_score", fuse_scores(F.col("similarity"), F.col("distance_score"), weight)
+        cands.withColumns(
+            {"similarity": sim, "distance_score": dscore, "combined_score": fused}
         )
         .orderBy(F.desc("combined_score"), F.col(id_col).asc())
         .limit(k)
@@ -162,22 +187,7 @@ def hybrid_search_adaptive(
             n_probe_bits,
         ).drop("lsh_buckets")
         cands = near.unionByName(sem).dropDuplicates([id_col])
-    pv = F.array(*[F.lit(float(x)) for x in probe_vec])
-    sim = F.when(F.col(vec_col).isNull(), F.lit(0.0)).otherwise(
-        cosine_similarity(F.col(vec_col), pv)
-    )
-    fused = fuse_scores(F.col("similarity"), F.col("distance_score"), weight)
-    if score_round is not None:
-        # round BEFORE the sort so the top-k cut is engine-agnostic
-        # (the oracle sorts the same 6dp doubles)
-        fused = F.round(fused, score_round)
-    return (
-        cands.withColumn("similarity", sim)
-        .withColumn("distance_score", distance_score(F.col("distance_km"), max_km))
-        .withColumn("combined_score", fused)
-        .orderBy(F.desc("combined_score"), F.col(id_col).asc())
-        .limit(k)
-    )
+    return _fused_topk(cands, vec_col, probe_vec, max_km, k, id_col, weight, score_round)
 
 
 # --------------------------------------------------------------- scale path
@@ -245,7 +255,7 @@ def lsh_candidates(
     stage of `lsh_bucket_ann`, exposed so callers can apply their own
     scoring/ordering — e.g. the oracle-twin declared query)."""
     targets = probe_buckets(probe, dim, n_planes, n_tables, n_probe_bits)
-    target_arr = F.array(*[F.lit(b) for b in targets])
+    target_arr = F.lit(np.array(targets, dtype=np.int64))
     return with_lsh_buckets(
         df.filter(F.col(vec_col).isNotNull()), vec_col, dim, n_planes, n_tables
     ).filter(F.arrays_overlap(F.col("lsh_buckets"), target_arr))
@@ -584,8 +594,6 @@ def quantized_knn(
     Deterministic end to end → exact DuckDB twin (declared query
     `ann_quantized`).
     """
-    from ..functions.vector import cosine_similarity
-
     if len(probe) != dim:
         raise ValueError(f"quantized_knn: probe has {len(probe)} dims, expected {dim}")
     vec = F.col(vec_col)
@@ -622,11 +630,10 @@ def quantized_knn(
     for i, p in enumerate(probe):
         code = math.floor((float(p) - mins[i]) / spans[i] * 255.0 + 0.5)
         pq.append(mins[i] + code * (spans[i] / 255.0))
-    pv = F.array(*[F.lit(x) for x in pq])
 
     return (
         df.filter(vec.isNotNull())
-        .withColumn("q_sim", F.round(cosine_similarity(deq, pv), 6))
+        .withColumn("q_sim", F.round(cosine_to_probe(deq, pq), 6))
         .orderBy(F.desc("q_sim"), F.col(id_col).asc())
         .limit(k)
         .select(id_col, "q_sim")
@@ -702,7 +709,7 @@ def kmeans_lloyd(
         dists = [
             F.aggregate(
                 F.zip_with(
-                    vec, F.array(*[F.lit(c) for c in cent]),
+                    vec, probe_lit(cent),
                     lambda x, y: (x.cast("double") - y) * (x.cast("double") - y),
                 ),
                 F.lit(0.0),
@@ -1470,19 +1477,18 @@ def kcenter_select(
             "selection pool is a config error, not a result"
         )
     chosen = [(1, seed[0]["_id"], None)]
-    cvec = F.array(*[F.lit(float(x)) for x in seed[0]["_v"]])
     state = materialize(base.select(
-        "_id", "_v", F.round(euclidean(F.col("_v"), cvec), 6).alias("_dmin")
+        "_id", "_v",
+        F.round(euclidean(F.col("_v"), probe_lit(seed[0]["_v"])), 6).alias("_dmin"),
     ))
     for r in range(2, int(k) + 1):
         far = state.orderBy(F.desc("_dmin"), F.asc("_id")).limit(1).collect()[0]
         chosen.append((r, far["_id"], float(far["_dmin"])))
-        cvec = F.array(*[F.lit(float(x)) for x in far["_v"]])
         state = materialize(state.select(
             "_id",
             "_v",
             F.least(
-                F.col("_dmin"), F.round(euclidean(F.col("_v"), cvec), 6)
+                F.col("_dmin"), F.round(euclidean(F.col("_v"), probe_lit(far["_v"])), 6)
             ).alias("_dmin"),
         ))
     spark = df.sparkSession
@@ -1519,29 +1525,18 @@ def mmr_select(
     fused score round 6dp BEFORE every compare (round-before-sort).
     Output: (round, sel_id, relevance_r, mmr_r) — mmr_r is NULL for
     the seed pick (pure-relevance argmax)."""
-    from ..functions.vector import dot, norm
+    from ..functions.vector import norm
 
-    def _sim_to(cvec, cnorm: float):
-        # cosine against the freshly picked (collected) vector with BOTH
-        # norms precomputed (r12): the corpus-side norm is carried as the
-        # `_nv` column (one fold at seed time instead of one per row PER
-        # ROUND), the pick-side norm folds once on the driver — identical
-        # doubles (float widening is exact, same fold order), ~3x fewer
-        # array folds in the per-round map pass
-        if cnorm == 0.0:
-            return F.lit(0.0)
-        return F.when(F.col("_nv") == 0.0, F.lit(0.0)).otherwise(
-            dot(F.col("_v"), cvec) / (F.col("_nv") * F.lit(cnorm))
-        )
-
-    pv = F.array(*[F.lit(float(x)) for x in probe])
+    # similarity to each freshly picked (collected) vector: the corpus-side
+    # norm is carried as the `_nv` column (one fold at seed time instead of
+    # one per row PER ROUND), the pick-side norm folds once on the driver
     base = materialize(
         df.filter(F.col(vec_col).isNotNull())
         .select(
             F.col(id_col).alias("_id"),
             F.col(vec_col).alias("_v"),
             norm(F.col(vec_col)).alias("_nv"),
-            F.round(cosine_similarity(F.col(vec_col), pv), 6).alias("_rel"),
+            F.round(cosine_to_probe(F.col(vec_col), probe), 6).alias("_rel"),
         )
     )
     first = base.orderBy(F.desc("_rel"), F.asc("_id")).limit(1).collect()
@@ -1551,7 +1546,6 @@ def mmr_select(
             "selection pool is a config error, not a result"
         )
     chosen = [(1, first[0]["_id"], float(first[0]["_rel"]), None)]
-    cvec = F.array(*[F.lit(float(x)) for x in first[0]["_v"]])
     state = materialize(
         base.filter(F.col("_id") != F.lit(first[0]["_id"]))
         .select(
@@ -1559,7 +1553,9 @@ def mmr_select(
             "_v",
             "_nv",
             "_rel",
-            F.round(_sim_to(cvec, _py_norm(first[0]["_v"])), 6).alias("_ms"),
+            F.round(
+                cosine_to_probe(F.col("_v"), first[0]["_v"], a_norm=F.col("_nv")), 6
+            ).alias("_ms"),
         )
     )
     for r in range(2, int(k) + 1):
@@ -1578,7 +1574,6 @@ def mmr_select(
             break
         b = best[0]
         chosen.append((r, b["_id"], float(b["_rel"]), float(b["_mmr"])))
-        cvec = F.array(*[F.lit(float(x)) for x in b["_v"]])
         state = materialize(
             state.filter(F.col("_id") != F.lit(b["_id"]))
             .select(
@@ -1588,7 +1583,9 @@ def mmr_select(
                 "_rel",
                 F.greatest(
                     F.col("_ms"),
-                    F.round(_sim_to(cvec, _py_norm(b["_v"])), 6),
+                    F.round(
+                        cosine_to_probe(F.col("_v"), b["_v"], a_norm=F.col("_nv")), 6
+                    ),
                 ).alias("_ms"),
             ),
             # lazy checkpoint (r11): the NEXT round's top-1 collect

@@ -1033,7 +1033,6 @@ def q_vec_knn_scoped(spark, sf_dir):
     emb = load(spark, sf_dir, "embeddings")
     row = _probe_row(spark, sf_dir)
     probe, scope = list(row["embedding"]), row["label"]
-    pv = F.array(*[F.lit(float(x)) for x in probe])
     # round BEFORE the ordered limit (like q_vec_knn): ranking unrounded
     # while the oracle ranks the rounded alias would let two rows that
     # round equal cut the top-10 differently on either side
@@ -1042,7 +1041,7 @@ def q_vec_knn_scoped(spark, sf_dir):
         .select(
             "vec_id",
             "label",
-            F.round(V.cosine_similarity(F.col("embedding"), pv), 6).alias("similarity"),
+            F.round(V.cosine_to_probe(F.col("embedding"), probe), 6).alias("similarity"),
         )
         .orderBy(F.desc("similarity"), F.col("vec_id").asc())
         .limit(10)
@@ -2631,11 +2630,10 @@ def q_ann_lsh(spark, sf_dir):
     cands = OV.lsh_candidates(
         emb, "embedding", probe, dim=64, n_planes=8, n_tables=8, n_probe_bits=6
     )
-    pv = F.array(*[F.lit(x) for x in probe])
     return (
         cands.select(
             "vec_id",
-            F.round(V.cosine_similarity(F.col("embedding"), pv), 6).alias("similarity"),
+            F.round(V.cosine_to_probe(F.col("embedding"), probe), 6).alias("similarity"),
         )
         .orderBy(F.desc("similarity"), F.col("vec_id").asc())
         .limit(10)
@@ -3070,13 +3068,12 @@ _IVF_PROBE = [(0.5 - ((7 * i) % 13) / 13.0) for i in range(64)]
 def q_ann_ivf(spark, sf_dir):
     emb = load(spark, sf_dir, "embeddings")
     cands = OV.ivf_candidates(emb, "embedding", _IVF_PROBE, "vec_id", n_cells=16, nprobe=4)
-    pv = F.array(*[F.lit(float(x)) for x in _IVF_PROBE])
     # rounded-similarity ordering: same sort key as the oracle (vec_knn pattern)
     return (
         cands.select(
             "vec_id",
             "label",
-            F.round(V.cosine_similarity(F.col("embedding"), pv), 6).alias("similarity"),
+            F.round(V.cosine_to_probe(F.col("embedding"), _IVF_PROBE), 6).alias("similarity"),
         )
         .orderBy(F.desc("similarity"), F.col("vec_id").asc())
         .limit(10)
@@ -4048,24 +4045,20 @@ def _matryoshka_oracle_sql(dims: tuple) -> str:
 def q_matryoshka_eval(spark, sf_dir):
     emb = load(spark, sf_dir, "embeddings").filter(F.col("embedding").isNotNull())
     probe = _probe_embedding(spark, sf_dir)
-    pv_full = F.array(*[F.lit(float(x)) for x in probe])
     full = materialize(
         emb.select(
             "vec_id",
-            F.round(V.cosine_similarity(F.col("embedding"), pv_full), 6).alias(
-                "sim_full"
-            ),
+            F.round(V.cosine_to_probe(F.col("embedding"), probe), 6).alias("sim_full"),
         )
         .orderBy(F.desc("sim_full"), F.asc("vec_id"))
         .limit(10)
     )
 
     def dim_row(d):
-        pv = F.array(*[F.lit(float(x)) for x in probe[:d]])
         scored = emb.select(
             "vec_id",
             F.round(
-                V.cosine_similarity(F.slice(F.col("embedding"), 1, d), pv), 6
+                V.cosine_to_probe(F.slice(F.col("embedding"), 1, d), probe[:d]), 6
             ).alias("sim_d"),
         )
         top_d = scored.orderBy(F.desc("sim_d"), F.asc("vec_id")).limit(10)
@@ -8689,14 +8682,13 @@ def q_lsh_index_probe(spark, sf_dir):
     lsh_layout_step(emb.filter((F.col("vec_id") >= 50) & (F.col("vec_id") < 100)), 1, idx, **planes)
 
     targets = OV.probe_buckets(probe, 64, 8, 4, 4)
-    pv = F.array(*[F.lit(float(x)) for x in probe])
     return (
         read_index_layout(spark, idx, "lsh")
         .filter(F.col("lsh_bucket").isin(targets))
         .dropDuplicates(["vec_id"])
         .select(
             "vec_id",
-            F.round(V.cosine_similarity(F.col("embedding"), pv), 6).alias("cos_r"),
+            F.round(V.cosine_to_probe(F.col("embedding"), probe), 6).alias("cos_r"),
         )
     )
 

@@ -51,6 +51,10 @@ def configure(builder: SparkSession.Builder) -> SparkSession.Builder:
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
+        # pyspark records the Python call site of every Column/DataFrame
+        # call for error messages: ~13 py4j round trips per F.col. Off,
+        # errors lose that call site; a kiosk request gains ~13% rate.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         # managed tables (bucketed layouts) land in /tmp, never the repo
         .config(

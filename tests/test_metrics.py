@@ -187,3 +187,47 @@ def test_bench_measure_reads_layers(spark):
         assert layers["stages"] >= 1, (name, layers)
         assert layers["build_jobs"] <= layers["jobs"], (name, layers)
     assert got["minhash_lsh_pairs"]["shuffle_write_mb"] > 0, got
+
+
+def _group_jobs(spark, group: str, fn) -> int:
+    """Jobs `fn()` submits, counted under a job group of its own."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group) or [])
+
+
+def test_table_repeat_read_runs_no_job(spark, tmp_path):
+    """`tables.table` remembers a schema, not data: the first read of a
+    table infers its schema (one footer job in Spark 4.1), a second read
+    of the unchanged file runs no job, and both read the same rows."""
+    spark.range(5).withColumn("x", F.col("id") * 2).write.parquet(str(tmp_path / "t.parquet"))
+    first = _group_jobs(spark, "table-first", lambda: table(spark, str(tmp_path), "t"))
+    again = []
+    second = _group_jobs(
+        spark, "table-again", lambda: again.append(table(spark, str(tmp_path), "t"))
+    )
+    assert first >= 1 and second == 0
+    df = again[0]
+    assert df.schema == spark.read.parquet(str(tmp_path / "t.parquet")).schema
+    assert sorted(r["x"] for r in df.collect()) == [0, 2, 4, 6, 8]
+
+
+def test_table_rewritten_in_place_returns_new_schema(spark, tmp_path):
+    """A single parquet file rewritten at the same path with another
+    schema lists differently, so `tables.table` infers the new schema
+    instead of reusing the old one."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = tmp_path / "t.parquet"
+    pq.write_table(pa.table({"id": [1, 2, 3]}), path)
+    assert table(spark, str(tmp_path), "t").schema.simpleString() == "struct<id:bigint>"
+    pq.write_table(pa.table({"name": ["a", "b"], "score": [0.5, 1.5]}), path)
+    df = table(spark, str(tmp_path), "t")
+    assert df.schema.simpleString() == "struct<name:string,score:double>"
+    assert sorted(tuple(r) for r in df.collect()) == [("a", 0.5), ("b", 1.5)]

@@ -293,3 +293,29 @@ def test_ccnet_and_quality_declared_plans_have_no_group_sized_window(spark):
         assert specs, name  # the scalable path still ranks via windows
         for ln in specs:
             assert "_p#" in ln, (name, ln.strip()[:200])
+
+
+def test_hybrid_overfetch_plans_as_topk(spark):
+    """hybrid_search's candidate_factor over-fetch is a top-k, not a global
+    sort: no range-partitioned exchange is planned, and the executed plan
+    runs both limits (the distance over-fetch and the fused top-k) as
+    TakeOrderedAndProject. Stacked score Projects between the over-fetch
+    Limit and its Sort used to plan a rangepartitioning sort plus a
+    single-partition exchange."""
+    from pyspark.sql import functions as F
+
+    from team_126_spark import tables as T
+    from team_126_spark.operators.vector import hybrid_search
+
+    c = T.with_geo(T.table(spark, SF, "customer"), "c_custkey")
+    emb = T.table(spark, SF, "embeddings")
+    corpus = c.withColumn("vec_id", F.col("c_custkey") % 500).join(emb, "vec_id")
+    probe = [0.5 - ((7 * i) % 13) / 13.0 for i in range(64)]
+    df = hybrid_search(
+        corpus, "embedding", probe, 32.9, -117.2, 30.0, 10, "c_custkey", candidate_factor=3
+    )
+    assert "rangepartitioning" not in plan_text(df)
+    assert len(df.collect()) == 10
+    final = df._jdf.queryExecution().executedPlan().toString().split("Initial Plan")[0]
+    assert "rangepartitioning" not in final
+    assert final.count("TakeOrderedAndProject") == 2

@@ -854,3 +854,48 @@ def test_sequence_mining_matches_python_model(spark, evs):
         for p, us in pair_users.items()
     }
     assert got == want
+
+
+vec_elems = st.floats(min_value=-1e3, max_value=1e3, allow_nan=False, width=32)
+probe_elems = st.floats(min_value=-1e3, max_value=1e3, allow_nan=False)
+probe_cases = st.integers(min_value=1, max_value=8).flatmap(
+    lambda d: st.tuples(
+        st.lists(probe_elems, min_size=d, max_size=d),
+        st.lists(
+            st.one_of(st.none(), st.lists(vec_elems, min_size=d, max_size=d)),
+            min_size=1,
+            max_size=20,
+        ),
+    )
+)
+
+
+@settings(max_examples=10, deadline=None)
+@given(probe_cases)
+@example(([0.0, 0.0, 0.0], [[1.0, 2.0, 3.0], None, [0.0, 0.0, 0.0]]))
+@example(([1.0, -2.0, 0.5], [[0.0, 0.0, 0.0], None, [3.0, 1.0, -1.0]]))
+def test_cosine_to_probe_matches_literal_array_cosine(spark, case):
+    """`cosine_to_probe` (one array literal, probe norm folded on the
+    driver) equals `cosine_similarity` against the per-element literal
+    array bit for bit, on array<float> rows: zero probe, zero row and null
+    row included, and with the row norm passed in as a column."""
+    import struct
+
+    from team_126_spark.functions.vector import cosine_similarity, cosine_to_probe, norm
+
+    probe, rows = case
+    df = spark.createDataFrame(list(enumerate(rows)), "i int, v array<float>")
+    lits = F.array(*[F.lit(float(x)) for x in probe])
+    v = F.col("v")
+    out = df.select(
+        cosine_similarity(v, lits).alias("want"),
+        cosine_to_probe(v, probe).alias("got"),
+        cosine_to_probe(v, probe, a_norm=norm(v)).alias("got_n"),
+    ).collect()
+
+    def bits(x):
+        return None if x is None else struct.pack("<d", x)
+
+    for r in out:
+        assert bits(r["got"]) == bits(r["want"]), (probe, r)
+        assert bits(r["got_n"]) == bits(r["want"]), (probe, r)
